@@ -39,21 +39,12 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_realtime_edu_spark.session import materialize
+
 # does an until() stop expression read the event's value? (decides
 # whether the valued event identity — NULL-excluded MIN-per-triple —
 # applies even without iterative conditions)
 _UNTIL_VALUE_REF = re.compile(r"\b__v\b")
-
-# Pin the enumeration's event set (scan + distinct/value resolution +
-# rank/stop/lead windows) so its one computation feeds every slot
-# join: AQE does not stage-reuse duplicated subtrees (measured on
-# 4.1.2 — zero ReusedExchange across all enumeration plan snapshots),
-# so without pinning every slot reference re-scans the events table,
-# a (slots + 2)x multiplier that grows with the pattern. Measured
-# A/B: scripts/cep_ev_reuse_ab.py. Module-level so the A/B can flip
-# it; not a per-call parameter because there is no correct reason to
-# recompute.
-_MATERIALIZE_EV = True
 
 
 def _compile_predicate(cond: str, names: tuple[str, ...]):
@@ -123,7 +114,7 @@ def compile_stop(cond: str, type_name: str = "event_type"):
 
 def _parse_within_us(within: str) -> int:
     """'<n> hours' / '<n> minutes' style horizon → microseconds (the
-    same grammar the streaming NFA accepts)."""
+    one parser, shared with the streaming NFA in streaming/cep.py)."""
     qty, unit = within.split()
     mult = {
         "second": 1,
@@ -833,13 +824,15 @@ def _enumerate_matches(
                 Window.partitionBy(key_col, type_col).orderBy(ts_col)
             ),
         )
-    if _MATERIALIZE_EV:
-        from flink_realtime_edu_spark.session import materialize
-
-        # one computation of the enriched event set feeds the seed,
-        # every slot join, and the bound job below (see the flag's
-        # rationale at the top of the module)
-        ev = materialize(ev)
+    # Pin the enriched event set (scan + distinct/value resolution +
+    # rank/stop/lead windows) so its one computation feeds the seed,
+    # every slot join, and the bound job below: AQE does not
+    # stage-reuse duplicated subtrees (measured on 4.1.2 — zero
+    # ReusedExchange across all enumeration plan snapshots), so
+    # without pinning every slot reference re-scans the events table,
+    # a (slots + 2)x multiplier that grows with the pattern. Measured
+    # A/B: `git show 1ec3e6b:scripts/cep_ev_reuse_ab.py`.
+    ev = materialize(ev)
     # resolve each unbounded block's slot count from the data: the
     # longest contiguous candidate run inside one within-window, the
     # candidate stream segmented at stop events first (one scalar

@@ -1,10 +1,14 @@
-"""K-means (Lloyd's) over embedding columns — X6's IVF training step.
+"""K-means (Lloyd's) over embedding columns — X6's corpus clustering.
 
 The reference family has no clustering operator [R — SURVEY.md §0];
-this is a north-star addition (BASELINE.json): the coarse-quantizer
-training behind IVF ANN (operators/similarity.py::ivf_cosine_topk
-consumes centroids of exactly this shape), and the standard corpus
-partitioner for curriculum/domain bucketing of training data.
+this is a north-star addition (BASELINE.json): the distributed,
+exact-decimal full-corpus fit the ``kmeans_*`` oracle queries replay,
+and the standard corpus partitioner for curriculum/domain bucketing
+of training data. The ANN quantizers (the IVF coarse quantizer and
+the PQ codebooks) do NOT use it: they train with the driver-side
+Lloyd's of operators/quantization.py on the driver-sized learning
+sample, the FAISS practice, where a full-corpus fit would only add
+per-iteration jobs.
 
 Spark-first shape (SURVEY.md §2 X6 scale notes):
 

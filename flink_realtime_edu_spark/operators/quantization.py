@@ -1,6 +1,6 @@
 """Product quantization (PQ) ANN — the compressed-domain third scale
-path next to LSH (operators/similarity.py) and IVF
-(operators/clustering.py). SURVEY.md §2.10 X6.
+path next to LSH and IVF (both operators/similarity.py). SURVEY.md
+§2.10 X6.
 
 Method (Jégou, Douze, Schmid — "Product Quantization for Nearest
 Neighbor Search", IEEE TPAMI 2011, public): split each vector into
@@ -14,12 +14,15 @@ from RAM/SSD.
 Spark-first decomposition:
 
 - **train** (:func:`pq_fit_sample`): codebooks come from Lloyd's over
-  a DRIVER-SIZED deterministic sample (first ``sample_n`` ids) — the
-  standard PQ practice (FAISS trains PQ on a learning subset, not the
-  corpus); at 100 TB a full-corpus fit would re-scan everything
-  m×iters times for codebooks a 4096-row sample estimates just as
-  well. All numpy, zero extra Spark jobs, bit-deterministic (ordered
-  sample, fixed init = first k sample rows per subspace).
+  a DRIVER-SIZED deterministic sample (:func:`learning_sample`, the
+  first ``sample_n`` ids) — the standard PQ practice (FAISS trains PQ
+  on a learning subset, not the corpus); at 100 TB a full-corpus fit
+  would re-scan everything m×iters times for codebooks a 4096-row
+  sample estimates just as well. All numpy, one collect job,
+  bit-deterministic (ordered sample, fixed init = first k sample
+  rows per subspace). The IVF coarse quantizer
+  (operators/similarity._ivf_fit_assign) trains on the same sample
+  with the same :func:`_lloyd_numpy`.
 - **encode + score** (:func:`pq_adc_topk`): ONE ``mapInPandas`` scan
   of the corpus. Per Arrow batch: unit-normalize, per-subspace L2
   argmin against the broadcast codebooks (ties → lowest code id),
@@ -66,6 +69,24 @@ def _lloyd_numpy(x: np.ndarray, k: int, iters: int) -> np.ndarray:
     return cent
 
 
+def learning_sample(
+    df: DataFrame,
+    k: int,
+    sample_n: int = 4096,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> np.ndarray:
+    """THE learning subset every quantizer trains on: the first
+    ``sample_n`` vectors by id as a (n, dim) float64 matrix — one
+    ordered top-n collect, so fits are deterministic under any
+    partitioning. A ``k``-centroid fit needs at least k rows."""
+    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample_n).collect()
+    x = np.array([r[1] for r in rows], dtype=np.float64)
+    if len(x) < k:
+        raise ValueError(f"k={k} but sample has only {len(x)} rows")
+    return x
+
+
 def pq_fit_sample(
     df: DataFrame,
     m: int = 8,
@@ -80,10 +101,7 @@ def pq_fit_sample(
     Vectors are unit-normalized before splitting, so codebooks live
     in the same space the scorer operates in (cosine via inner
     product on normalized vectors)."""
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample_n).collect()
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    if len(x) < k:
-        raise ValueError(f"k={k} but sample has only {len(x)} rows")
+    x = learning_sample(df, k, sample_n, id_col, vec_col)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -137,9 +155,11 @@ def pq_fit_sample_residual(
     concentrate near zero within a cluster, so the same k codes cover
     a tighter cloud → sharper ADC. MEASURED on this repo's synthetic
     near-uniform corpus it does NOT win — ADC-only recall@5 is
-    0.54/0.56/0.48 (sf0.001/0.01/0.1) vs 0.54/0.64/0.56 raw, parity
-    after the exact rerank (BASELINE.md r12) — because k=256 codes
-    over 4-dim subspaces already quantize unit vectors finely; raw
+    0.70/0.64/0.62 (sf0.001/0.01/0.1) vs 0.72/0.76/0.66 raw, parity
+    after the exact rerank (re-measured with the sample-fit IVF
+    quantizer, whose first-16-ids init holds the 10 query vectors;
+    BASELINE.md r12 has the first A/B) — because k=256 codes over
+    4-dim subspaces already quantize unit vectors finely; raw
     stays the default and this path ships flag-gated for corpora
     with real cluster structure. The exact inner-product identity
     the scorer uses: with x̂ = ĉ_i + r, cos(q, x) = <q̂, ĉ_i> + <q̂, r>, so the
@@ -153,10 +173,7 @@ def pq_fit_sample_residual(
     operators.similarity.ivf_append). Returns (codebooks,
     centers_norm); pass BOTH to pq_encode_index/ivfpq_topk — encode
     and search must share centers_norm or scores are garbage."""
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample_n).collect()
-    x_raw = np.array([r[1] for r in rows], dtype=np.float64)
-    if len(x_raw) < k:
-        raise ValueError(f"k={k} but sample has only {len(x_raw)} rows")
+    x_raw = learning_sample(df, k, sample_n, id_col, vec_col)
     dim = x_raw.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")

@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from flink_realtime_edu_spark.functions import cosine, dot, l2_norm
+from flink_realtime_edu_spark.operators.quantization import (
+    _lloyd_numpy,
+    learning_sample,
+)
 from flink_realtime_edu_spark.session import materialize as _materialize
 
 
@@ -223,6 +227,22 @@ def adaptive_n_planes(
     return max(min_planes, min(max_planes, raw))
 
 
+def _dim_and_planes(
+    corpus: DataFrame, vec_col: str, n_planes: int | None, **profile
+) -> tuple[int, int]:
+    """(dim, n_planes) of an LSH geometry. A pinned ``n_planes`` needs
+    only the dimension: one limit-1 read, no corpus scan. ``None``
+    sizes the planes with :func:`adaptive_n_planes` (``profile`` is
+    its target/clamp) from the corpus count, fused with the dimension
+    read into one aggregate job (r14 §7.3), not two."""
+    if n_planes is not None:
+        return len(corpus.select(vec_col).first()[0]), n_planes
+    head = corpus.select(
+        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
+    ).first()
+    return len(head["v0"]), adaptive_n_planes(int(head["n"]), **profile)
+
+
 def hyperplane_buckets(
     n_planes: int = 4, dim: int = 64, n_tables: int = 8, seed: int = 42
 ):
@@ -272,12 +292,7 @@ def lsh_cosine_topk(
     count via :func:`adaptive_n_planes` — identical to the historical
     4-plane fixed geometry at every oracle scale (the floor), log-
     scaling past it. Pass an int to pin it explicitly."""
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()  # one job for dim + count (r14 §7.3), not two
-    dim = len(head["v0"])
-    if n_planes is None:
-        n_planes = adaptive_n_planes(int(head["n"]))
+    dim, n_planes = _dim_and_planes(corpus, vec_col, n_planes)
     buckets = hyperplane_buckets(n_planes, dim, n_tables, seed)
     c = corpus.select(
         F.col(id_col).alias("nid"),
@@ -386,12 +401,10 @@ def knn_graph_lsh(
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()  # one job for dim + count (r14 §7.3), not two
-    if n_planes is None:
-        n_planes = adaptive_n_planes(int(head["n"]), target_bucket_rows=128)
-    bkts = hyperplane_buckets(n_planes, len(head["v0"]), n_tables, seed)
+    dim, n_planes = _dim_and_planes(
+        corpus, vec_col, n_planes, target_bucket_rows=128
+    )
+    bkts = hyperplane_buckets(n_planes, dim, n_tables, seed)
     tagged = _materialize(  # feeds the occupancy agg AND the groups
         corpus.select(
             F.col(id_col).alias("src"),
@@ -493,7 +506,6 @@ def ivf_cosine_topk(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a k-means coarse quantizer partitions
     the corpus into cluster lists; each query probes only its
@@ -504,36 +516,29 @@ def ivf_cosine_topk(
     corpus would additionally be WRITTEN partitioned by cluster id so
     probes prune files, not merely shuffle less).
 
-    Uses pyspark.ml KMeans (seeded, deterministic) for training; the
-    query→probe assignment is a vectorized pandas UDF over the
-    broadcast centroid matrix."""
-    assigned, centers = _ivf_fit_assign(corpus, id_col, vec_col, n_clusters, seed)
+    The quantizer trains on the driver-sized learning sample
+    (:func:`_ivf_fit_assign`); corpus rows and queries are assigned
+    by vectorized pandas UDFs over the broadcast centroid matrix."""
+    assigned, centers = _ivf_fit_assign(corpus, id_col, vec_col, n_clusters)
     return _ivf_probe_search(
         assigned, centers, queries, k, n_probe, id_col, vec_col
     )
 
 
-def _ivf_fit_assign(corpus, id_col, vec_col, n_clusters, seed):
+def _ivf_fit_assign(corpus, id_col, vec_col, n_clusters):
     """Fit the coarse quantizer on `corpus` and assign it: the ONE
-    place the KMeans hyper-parameters and index layout (nid, cluster,
-    cv) live, shared by the rebuild and incremental paths."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(
-        F.col(id_col), array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=n_clusters, seed=seed, maxIter=10).fit(train)
-    centers = np.stack([np.asarray(c) for c in model.clusterCenters()])  # (C, dim)
-    assigned = (
-        model.transform(train)
-        .select(F.col(id_col).alias("nid"), F.col("prediction").alias("cluster"))
-        .join(
-            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")),
-            on="nid",
-        )
-    )
-    return assigned, centers
+    place the quantizer's training rule and the index layout (nid,
+    cluster, cv) live, shared by the rebuild, incremental and
+    streaming-append paths. The fit is 10 driver-side Lloyd's
+    iterations over the learning sample the PQ codebooks train on
+    (operators/quantization.learning_sample; init = its first
+    ``n_clusters`` rows by id) — one collect job, where a distributed
+    fit pays per-iteration jobs. Every corpus row is then assigned by
+    :func:`ivf_append`'s argmin, so a rebuilt row and an appended row
+    land in the same cluster by construction."""
+    sample = learning_sample(corpus, n_clusters, id_col=id_col, vec_col=vec_col)
+    centers = _lloyd_numpy(sample, n_clusters, 10)  # (C, dim)
+    return ivf_append(corpus, centers, id_col, vec_col), centers
 
 
 def ivf_append(
@@ -544,11 +549,12 @@ def ivf_append(
 ) -> DataFrame:
     """INCREMENTAL index maintenance: assign NEW vectors to the
     EXISTING coarse quantizer (argmin L2 against the broadcast
-    centroid matrix — the same metric KMeans.transform uses) without
-    refitting. O(delta) work, one vectorized pandas-UDF pass, no
-    corpus rescan — the FAISS `add` discipline: codebooks/centroids
-    are fit once on a representative sample and appended into, with
-    periodic refits owned by the caller when drift accumulates.
+    centroid matrix — the standard k-means assignment; ties → lowest
+    cluster id) without refitting. O(delta) work, one vectorized
+    pandas-UDF pass, no corpus rescan — the FAISS `add` discipline:
+    codebooks/centroids are fit once on a representative sample and
+    appended into, with periodic refits owned by the caller when
+    drift accumulates.
     Returns rows in the index layout (nid, cluster, cv), union-able
     with the base index."""
 
@@ -574,7 +580,6 @@ def ivf_incremental_topk(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF ANN over base ∪ delta where the quantizer was fit on BASE
     only and the delta was APPENDED via :func:`ivf_append` — the
@@ -583,9 +588,7 @@ def ivf_incremental_topk(
     O(delta)). Search semantics identical to :func:`ivf_cosine_topk`;
     recall degrades only as far as the fixed quantizer misfits the
     new data, which the registry query's recall floor watches."""
-    assigned_base, centers = _ivf_fit_assign(
-        base, id_col, vec_col, n_clusters, seed
-    )
+    assigned_base, centers = _ivf_fit_assign(base, id_col, vec_col, n_clusters)
     assigned = assigned_base.unionByName(ivf_append(delta, centers, id_col, vec_col))
     return _ivf_probe_search(
         assigned, centers, queries, k, n_probe, id_col, vec_col
@@ -673,14 +676,10 @@ def embedding_near_duplicates(
     sort-merge join stays AQE-skew-splittable instead of running the
     hot bucket as one straggler task; at driver scales the join is a
     broadcast and the exchange never plans at all."""
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()
-    dim = len(head["v0"])
-    if n_planes is None:
-        n_planes = adaptive_n_planes(
-            int(head["n"]), target_bucket_rows=16, min_planes=12, max_planes=30
-        )
+    dim, n_planes = _dim_and_planes(
+        corpus, vec_col, n_planes,
+        target_bucket_rows=16, min_planes=12, max_planes=30,
+    )
     buckets = hyperplane_buckets(n_planes, dim, n_tables, seed)
     tagged = (
         corpus.select(
@@ -921,9 +920,9 @@ def ann_recall_summary(
     assertable is the tolerance contract (the same trick as the A4
     sketch oracles): recall@k against the exact brute-force top-k —
     computed INSIDE the query, both sides Spark, both deterministic
-    (seeded hyperplanes / seeded k-means on fixed data) — folded to
-    booleans with thresholds far below the measured floor, so the
-    booleans are deterministically TRUE unless the index breaks.
+    (seeded hyperplanes / sample-fit quantizers on fixed data) —
+    folded to booleans with thresholds far below the measured floor,
+    so the booleans are deterministically TRUE unless the index breaks.
     `n_queries` stays exactly computable by the oracle.
 
     Scale note: the brute-force arm makes this a VERIFICATION query

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -64,10 +64,3 @@ def salted_count_distinct(
         .agg(F.countDistinct(distinct_col).alias("__d"))
     )
     return per_shard.groupBy(*keys).agg(F.sum("__d").alias("n_distinct"))
-
-
-def salt_expr(unique_col: str | Column, n_salts: int) -> Column:
-    """Deterministic salt column for ad-hoc use (e.g. prefixing a
-    skewed join key before a manual shard-replicate join)."""
-    c = F.col(unique_col) if isinstance(unique_col, str) else unique_col
-    return F.pmod(F.xxhash64(c), F.lit(n_salts))

@@ -230,13 +230,3 @@ def load_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if scan_width(sf_dir, name) < target:
         df = df.repartition(target)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for `spark.sql` queries."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

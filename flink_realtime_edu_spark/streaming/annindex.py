@@ -7,11 +7,13 @@ rebuilds — the FAISS `add` discipline as a Structured Streaming
 foreachBatch sink.
 
 Shape: the quantizer (the k×dim centroid matrix from
-``operators/similarity._ivf_fit_assign``) is fit ONCE on a reference
-corpus batch-side and frozen to parquet (the streaming/scoring.py
-model-freeze discipline); each micro-batch runs
+``operators/similarity._ivf_fit_assign`` — driver-side Lloyd's on
+the learning sample the PQ codebooks also train on) is fit ONCE on a
+reference corpus batch-side and frozen to parquet (the
+streaming/scoring.py model-freeze discipline); each micro-batch runs
 ``operators/similarity.ivf_append`` (one vectorized pandas-UDF
-argmin against the broadcast centroids) and folds the assigned rows
+argmin against the broadcast centroids — the same argmin the batch
+fit assigns the reference corpus with) and folds the assigned rows
 into the cluster-bucketed on-disk index via the shared
 staged-swap/bucket-layout helpers (streaming/sinks.py), deduped by
 vec_id so LAST-BATCH CRASH REPLAY is a pure idempotent overwrite —
@@ -242,7 +244,6 @@ def rebuild_ivf_index(
     codebooks_dir: str | None = None,
     n_clusters: int = 16,
     n_buckets: int = 8,
-    seed: int = 42,
     pq_m: int = 16,
     pq_k: int = 256,
     id_col: str = "vec_id",
@@ -266,10 +267,11 @@ def rebuild_ivf_index(
     first post-rebuild streaming batch (batch_id ≥ 0) loses min_by
     ties to rebuilt rows, keeping replay idempotent across the swap.
 
-    One KMeans fit + one assignment pass + one bucketed write; the
-    PQ sample fit is driver-sized (pq_fit_sample). Everything reuses
-    the batch operators, so rebuild ≡ _ivf_fit_assign by
-    construction (pinned in tests)."""
+    Both fits are driver-side Lloyd's over the same driver-sized
+    learning sample (_ivf_fit_assign, pq_fit_sample), then one
+    assignment pass (the streaming appender's ivf_append argmin) and
+    one bucketed write. Everything reuses the batch operators, so
+    rebuild ≡ _ivf_fit_assign by construction (pinned in tests)."""
     from flink_realtime_edu_spark.operators.quantization import (
         pq_encode_index,
         pq_fit_sample,
@@ -277,9 +279,7 @@ def rebuild_ivf_index(
     from flink_realtime_edu_spark.operators.similarity import _ivf_fit_assign
 
     spark = vectors.sparkSession
-    assigned, centers = _ivf_fit_assign(
-        vectors, id_col, vec_col, n_clusters, seed
-    )
+    assigned, centers = _ivf_fit_assign(vectors, id_col, vec_col, n_clusters)
     write_ivf_quantizer(spark, centers, quantizer_dir)
     if codebooks_dir is not None:
         codebooks = pq_fit_sample(

@@ -83,6 +83,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from flink_realtime_edu_spark.operators.cep import _parse_within_us
+
 CEP_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, end_us BIGINT, duration_s DOUBLE"
 )
@@ -91,22 +93,6 @@ CEP_TO_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, last_us BIGINT, "
     "matched_steps INT, timed_out BOOLEAN"
 )
-
-
-def _parse_within_us(within: str) -> int:
-    """'<n> hours' / '<n> minutes' style horizon → microseconds."""
-    qty, unit = within.split()
-    mult = {
-        "second": 1,
-        "seconds": 1,
-        "minute": 60,
-        "minutes": 60,
-        "hour": 3600,
-        "hours": 3600,
-        "day": 86400,
-        "days": 86400,
-    }[unit.lower()]
-    return int(qty) * mult * 1_000_000
 
 
 def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):

@@ -189,7 +189,7 @@ def main() -> None:
         raw_emb = load(spark, args.sf, "embeddings").select(
             "vec_id", "embedding"
         )
-        _, centers = _ivf_fit_assign(raw_emb, "vec_id", "embedding", 16, 42)
+        _, centers = _ivf_fit_assign(raw_emb, "vec_id", "embedding", 16)
         quant_dir = str(tmp / "ivf_quant")
         write_ivf_quantizer(spark, centers, quant_dir)
         cb_dir = str(tmp / "pq_codebooks")

@@ -170,13 +170,14 @@ def test_embedding_near_dup_finds_planted_duplicates(spark, sf_dir):
 
 
 def test_embedding_near_dup_group_scoring_matches_pair_join(spark, sf_dir):
-    """The r14 in-group scorer (bucket applyInPandas, strictly-upper
-    triangle) must return EXACTLY the rows of the r13 shape it
-    replaced — bucket self-join on bkt, id_a < id_b pair-dedup, then
-    cosine_pair_udf + threshold filter. Threshold 0.0 keeps every
-    candidate pair, so the equality covers scores, not just the
-    survivor set; planted near-dup clusters force multi-row buckets
-    in every table."""
+    """Removing the r13 ``.repartition("bkt")`` exchange (r14) must
+    change only the plan: embedding_near_duplicates returns EXACTLY
+    the pair set and scores of the plain bucket pair-join inlined
+    below as the reference — self-join on bkt, id_a < id_b
+    pair-dedup, then cosine_pair_udf + threshold filter. Threshold
+    0.0 keeps every candidate pair, so the equality covers scores,
+    not just the survivor set; planted near-dup clusters force
+    multi-row buckets in every table."""
     from flink_realtime_edu_spark.operators.similarity import (
         adaptive_n_planes,
         cosine_pair_udf,
@@ -204,7 +205,7 @@ def test_embedding_near_dup_group_scoring_matches_pair_join(spark, sf_dir):
         for r in embedding_near_duplicates(corpus, threshold=0.0).collect()
     }
 
-    # the replaced r13 shape, inlined as the reference
+    # the plain pair-join shape, inlined as the reference
     n_planes = adaptive_n_planes(
         corpus.count(), target_bucket_rows=16, min_planes=12, max_planes=30
     )
@@ -326,7 +327,7 @@ def test_ivfpq_recall_probe_semantics_and_determinism(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     exact = {(r.qid, r.nid) for r in cosine_topk(emb, q, k=5).collect()}
-    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     cb = pq_fit_sample(emb, m=16, k=256)
     rows = ivfpq_topk(
         assigned, centers, q, cb, k=5, n_probe=4, rerank_r=30
@@ -378,7 +379,7 @@ def test_ivfpq_searches_appended_index(spark, sf_dir):
     delta = spark.createDataFrame(
         [(100000, near)], "vec_id long, embedding array<float>"
     )
-    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     assigned = assigned.unionByName(ivf_append(delta, centers))
     cb = pq_fit_sample(emb, m=16, k=256)
     # codes at rest: the appended index is encoded ONCE (the r12
@@ -471,6 +472,45 @@ def test_adaptive_n_planes():
     # expected occupancy stays ≤ target past the floor (until the cap)
     for n in (10_000_000, 10**9):
         assert n / 2 ** adaptive_n_planes(n) <= 4096
+
+
+def test_pinned_n_planes_reads_dim_without_corpus_scan(spark, sf_dir):
+    """With ``n_planes`` pinned, building an LSH search, k-NN graph or
+    near-dup frame needs only the vector dimension: ONE job, a
+    single-stage limit-1 read. The adaptive path's count aggregate
+    (a whole-corpus scan feeding an exchange, so a job of two stages,
+    or two jobs under AQE) must not run."""
+    import time
+
+    from flink_realtime_edu_spark.operators.similarity import (
+        embedding_near_duplicates,
+        knn_graph_lsh,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    builds = {
+        "lsh": lambda: lsh_cosine_topk(
+            emb, emb.filter(F.col("vec_id") < 5), n_planes=4
+        ),
+        "graph": lambda: knn_graph_lsh(emb, n_planes=4),
+        "near_dup": lambda: embedding_near_duplicates(emb, n_planes=12),
+    }
+    for name, build in builds.items():
+        group = f"pinned_n_planes:{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store fills from the asynchronous listener bus
+        for _ in range(100):
+            jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+            if jobs and all(j.status == "SUCCEEDED" for j in jobs):
+                break
+            time.sleep(0.1)
+        assert len(jobs) == 1 and len(jobs[0].stageIds) == 1, (name, jobs)
 
 
 def test_knn_graph_refine_improves_and_stays_invariant(spark, sf_dir):
@@ -622,7 +662,7 @@ def test_ivfpq_residual_encoding_semantics(spark, sf_dir):
         )
     )
     q = emb.filter(F.col("vec_id") == 0)
-    assigned, centers = _ivf_fit_assign(corpus, "vec_id", "embedding", 16, 42)
+    assigned, centers = _ivf_fit_assign(corpus, "vec_id", "embedding", 16)
     cbr, cn = pq_fit_sample_residual(corpus, centers, m=16, k=256)
     idx_res = pq_encode_index(assigned, cbr, centers_norm=cn)
     top = ivfpq_topk(

@@ -220,7 +220,7 @@ def test_ivfpq_codes_at_rest_scan_reads_codes_not_floats(spark, sf_dir, tmp_path
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    assigned, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     cb = pq_fit_sample(emb, m=16, k=256)
     root = str(tmp_path / "ivfpq_index")
     pq_encode_index(assigned, cb).write.partitionBy("cluster").parquet(root)

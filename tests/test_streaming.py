@@ -2976,7 +2976,7 @@ def test_streaming_ivf_index_equals_batch_append_and_replays(
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # quantizer + PQ codebooks fit batch-side on the corpus, then frozen
-    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     quant_dir = str(tmp_path / "ivf_quant")
     write_ivf_quantizer(spark, centers, quant_dir)
     assert (read_ivf_quantizer(spark, quant_dir) == centers).all()
@@ -3080,7 +3080,7 @@ def test_streaming_ivf_index_appends_onto_pre_code_schema(
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = emb.filter(F.col("vec_id") % 10 != 7)
     delta = emb.filter(F.col("vec_id") % 10 == 7)
-    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     quant_dir = str(tmp_path / "mig_quant")
     write_ivf_quantizer(spark, centers, quant_dir)
     codebooks = pq_fit_sample(emb, m=16, k=256)
@@ -3190,7 +3190,7 @@ def test_ivf_index_rebuild_then_stream_append(spark, sf_dir, tmp_path):
     # (a) rebuild ≡ the batch operators under the frozen artifacts
     centers = read_ivf_quantizer(spark, quant_dir)
     codebooks = read_pq_codebooks(spark, cb_dir)
-    assigned, centers_fit = _ivf_fit_assign(base, "vec_id", "embedding", 16, 42)
+    assigned, centers_fit = _ivf_fit_assign(base, "vec_id", "embedding", 16)
     assert (centers == centers_fit).all()
     want = {
         (r.nid, r.cluster, bytes(r.code))
@@ -3346,6 +3346,36 @@ def test_ivf_store_generations_rebuild_append_vacuum(spark, sf_dir, tmp_path):
     assert read_ivf_index(spark, ivf_store_current(str(root))[1]).count() == emb.count()
 
 
+def test_ivfpq_store_reuse_keeps_live_store_from_reaper(
+    spark, sf_dir, monkeypatch
+):
+    """The persisted IVF×PQ store is touched on every reuse, so a
+    session alive past the 6 h stale-store cutoff keeps its store: a
+    store aged past the cutoff and THEN reused survives a sibling
+    build's reap, while an aged sibling nobody reuses is still
+    reaped."""
+    import os
+
+    from flink_realtime_edu_spark.queries import similarity as qs
+
+    live = Path(qs._ivfpq_store_dirs(spark, sf_dir)[0]).parent
+    stale = live.with_name("ivfpq_store_nobodyreuses")
+    stale.mkdir(exist_ok=True)
+    aged = time.time() - 7 * 3600
+    for d in (live, stale):
+        os.utime(d, (aged, aged))
+    qs._ivfpq_store_dirs(spark, sf_dir)  # reuse of the completed store
+    # another store version under the same root: a sibling build
+    monkeypatch.setattr(qs, "_IVFPQ_STORE_VERSION", -1)
+    sibling = Path(qs._ivfpq_store_dirs(spark, sf_dir)[0]).parent
+    try:
+        assert (live / "_COMPLETE").exists()
+        assert not stale.exists()
+    finally:
+        shutil.rmtree(sibling, ignore_errors=True)
+        shutil.rmtree(stale, ignore_errors=True)
+
+
 def test_streaming_ivf_index_survives_restart_from_checkpoint(
     spark, sf_dir, tmp_path
 ):
@@ -3366,7 +3396,7 @@ def test_streaming_ivf_index_survives_restart_from_checkpoint(
     from flink_realtime_edu_spark.streaming.sinks import run_to_completion
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16, 42)
+    _, centers = _ivf_fit_assign(emb, "vec_id", "embedding", 16)
     quant_dir = str(tmp_path / "ivf_rs_quant")
     write_ivf_quantizer(spark, centers, quant_dir)
 
