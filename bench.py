@@ -216,19 +216,25 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
         src = str(work / "events_src")
         load(spark, sf_dir, "events").repartition(8).write.parquet(src)
 
-        def progress_metrics(query) -> tuple[float, float, dict[str, int]]:
-            """(rows/s, mean batch ms, final state-store footprint).
+        def progress_metrics(query) -> tuple[float, float, dict[str, int], int]:
+            """(rows/s, mean batch ms, final state-store footprint,
+            rows dropped by the watermark).
 
             The state dict scrapes the LAST progress event carrying
             stateOperators — numRowsTotal / memory are the numbers a
             production monitor alarms on for unbounded state growth
-            (VERDICT r6 item 5: observe it, don't just assert it)."""
+            (VERDICT r6 item 5: observe it, don't just assert it). The
+            drop count sums numRowsDroppedByWatermark over every
+            trigger, so rows/s is read against the rows really
+            processed."""
             rows = 0
             trigger_ms = 0.0
             batches = 0
+            dropped = 0
             state: dict[str, int] = {}
             for p in query.recentProgress:
                 for so in p.get("stateOperators") or []:
+                    dropped += int(so.get("numRowsDroppedByWatermark") or 0)
                     if so.get("numRowsTotal") is not None:
                         state = {
                             "state_rows": int(so["numRowsTotal"]),
@@ -243,8 +249,8 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
                 trigger_ms += p["durationMs"]["triggerExecution"]
                 batches += 1
             if trigger_ms == 0:
-                return 0.0, 0.0, state
-            return rows / (trigger_ms / 1000.0), trigger_ms / batches, state
+                return 0.0, 0.0, state, dropped
+            return rows / (trigger_ms / 1000.0), trigger_ms / batches, state, dropped
 
         # T1: tumbling hourly agg -> noop sink, update mode
         q = (
@@ -255,8 +261,9 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
             .start()
         )
         run_to_completion(q)
-        rps, lat, state = progress_metrics(q)
+        rps, lat, state, dropped = progress_metrics(q)
         out["tumbling_rows_per_s"] = round(rps, 1)
+        out["tumbling_rows_dropped_by_watermark"] = dropped
         out["tumbling_batch_ms_avg"] = round(lat, 1)
         for k, v in state.items():
             out[f"tumbling_{k}"] = v
@@ -271,8 +278,9 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
             .start()
         )
         run_to_completion(q)
-        rps, lat, _ = progress_metrics(q)
+        rps, lat, _, dropped = progress_metrics(q)
         out["scd2_rows_per_s"] = round(rps, 1)
+        out["scd2_rows_dropped_by_watermark"] = dropped
         out["scd2_batch_ms_avg"] = round(lat, 1)
         # SCD2 keeps its state in the bucketed on-disk store, not the
         # streaming state store — report the store footprint instead.
@@ -301,8 +309,9 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
             .start()
         )
         run_to_completion(q)
-        rps, lat, state = progress_metrics(q)
+        rps, lat, state, dropped = progress_metrics(q)
         out["cep_rows_per_s"] = round(rps, 1)
+        out["cep_rows_dropped_by_watermark"] = dropped
         out["cep_batch_ms_avg"] = round(lat, 1)
         for k, v in state.items():
             out[f"cep_{k}"] = v

@@ -10,6 +10,13 @@ setup.
 Scale posture (SURVEY.md §4.4): AQE is left on so shuffle partition
 counts coalesce/split at runtime on a real cluster; the static
 ``spark.sql.shuffle.partitions`` is only the pre-AQE ceiling.
+:func:`get_spark` sets it to the session's cores
+(``sparkContext.defaultParallelism``, N under ``local[N]``), the
+Flink task-slot rule. For a stateful stream it is also the number of
+state-store partitions, which AQE does not coalesce: every trigger,
+even an empty watermark-advancing one, runs that many state tasks. A
+checkpoint keeps the count it first started with, whatever the value
+on restart.
 """
 
 from __future__ import annotations
@@ -159,18 +166,22 @@ def get_spark(
     """Local session mirroring the driver's environment.
 
     ``SPARK_GRAFT_CPUS`` selects local parallelism (default all cores).
-    Shuffle partitions default to the core count: at test scale every
-    partition fits in memory; at cluster scale AQE re-coalesces anyway.
+    ``spark.sql.shuffle.partitions`` defaults to the session's cores,
+    ``sparkContext.defaultParallelism``: at test scale every partition
+    fits in memory, and batch stages re-coalesce under AQE anyway. For
+    a stateful stream the value is the state-store count, which AQE
+    does not coalesce, so a fixed ceiling above the cores only adds
+    task waves to every trigger. A streaming checkpoint keeps the count
+    it first started with, whatever the value on restart.
+    ``shuffle_partitions`` pins the value instead (plan snapshots,
+    tests that need a fixed exchange width).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     import tempfile
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -178,4 +189,8 @@ def get_spark(
         # warehouse out of the repo (harmless if session pre-exists).
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
     )
-    return configure(builder.getOrCreate())
+    spark = configure(builder.getOrCreate())
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

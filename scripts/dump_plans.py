@@ -36,7 +36,9 @@ def main() -> None:
         if unknown:
             raise SystemExit(f"unknown queries: {unknown}")
         registry = {n: registry[n] for n in only}
-    spark = get_spark(app_name="fres-plans")
+    # Pinned so every exchange line reads the same on any box; the
+    # session default follows the cores.
+    spark = get_spark(app_name="fres-plans", shuffle_partitions=32)
     for name, spec in sorted(registry.items()):
         df = spec.build(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

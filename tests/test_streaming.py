@@ -630,6 +630,70 @@ def test_layered_pipeline_survives_restart_from_checkpoint(spark, sf_dir, tmp_pa
     assert _rows(spark.read.parquet(dws_dir)) == _rows(batch_dws)
 
 
+def test_get_spark_sizes_shuffle_partitions_to_the_cores(spark):
+    """Without ``shuffle_partitions`` the session's shuffle (and so
+    state-store) width is its own core count, not a fixed ceiling; an
+    explicit value still pins it."""
+    from flink_realtime_edu_spark.session import get_spark
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        got = get_spark()
+        assert int(got.conf.get("spark.sql.shuffle.partitions")) == (
+            got.sparkContext.defaultParallelism
+        )
+        pinned = get_spark(shuffle_partitions=3)
+        assert pinned.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_checkpoint_keeps_its_state_store_count_across_restart(
+    spark, sf_dir, tmp_path
+):
+    """Upgrade path for the core-sized shuffle default: a stateful
+    stream started at 32 partitions and restarted under 4 keeps the
+    checkpoint's 32 state stores and still converges to the batch
+    answer; only a fresh checkpoint takes the new count."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(table_path(sf_dir, "events")).sort_by("ts")
+    ts = events.column("ts").to_pylist()
+    cut = len(ts) // 2
+    while cut < len(ts) and ts[cut] == ts[cut - 1]:
+        cut += 1  # ts-strict boundary: no row of the second half is late
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(events.slice(0, cut), src / "part-000.parquet")
+
+    def drain(name, ckpt):
+        q = (
+            tumbling_stats_stream(load_events_stream(spark, str(src)))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        run_to_completion(q)
+        ops = [p["stateOperators"][0] for p in q.recentProgress if p.get("stateOperators")]
+        return ops[-1]["numStateStoreInstances"]
+
+    want = _rows(REGISTRY["tumbling_hourly_stats"].build(spark, sf_dir))
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        assert drain("ssi_first", tmp_path / "ckpt") == 32
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        pq.write_table(events.slice(cut), src / "part-001.parquet")
+        assert drain("ssi_restart", tmp_path / "ckpt") == 32
+        assert _rows(spark.sql("SELECT * FROM ssi_restart")) == want
+        assert drain("ssi_fresh", tmp_path / "ckpt_fresh") == 4
+        assert _rows(spark.sql("SELECT * FROM ssi_fresh")) == want
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
 def test_ts_shape_drift_guard(spark, sf_dir, tmp_path):
     """Permanent guard for the two on-disk events.ts shapes (r2
     regression class): write the SAME rows as INT64 epoch-nanos and
