@@ -19,7 +19,7 @@ Spark-first shape (SURVEY.md §2 X6 scale notes):
   ``|x|² − 2·x·C + |c|²`` argmin (ties → lowest cluster id). Row-
   independent ⇒ partitioning-invariant.
 - **update**: `posexplode` + hash aggregate on (cluster, dim) with
-  the exact DECIMAL(30,8) sum (functions.dec_* discipline), so the
+  the exact decimal sum (``functions.dec_exact``), so the
   new centroids are identical under any shuffle order. Partial
   aggregation collapses the 64× explode to k×dim rows per task
   before the exchange — the shuffle is tiny regardless of input
@@ -44,7 +44,7 @@ from pyspark import cloudpickle  # vendored copy Spark pickles UDFs with
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(30,8)"
+from flink_realtime_edu_spark.functions import dec_exact
 
 
 def assign_clusters(
@@ -107,8 +107,8 @@ def _update_centroids(
     rows = (
         ex.groupBy("cluster", "dim")
         .agg(
-            (F.sum(F.col("v").cast(_DEC)).cast("double") / F.count(F.lit(1))).alias("mean_v"),
-            F.sum(F.col("dist2").cast(_DEC)).cast("double").alias("sum_d2"),
+            (F.sum(dec_exact("v")).cast("double") / F.count(F.lit(1))).alias("mean_v"),
+            F.sum(dec_exact("dist2")).cast("double").alias("sum_d2"),
         )
         .collect()
     )

@@ -7,25 +7,19 @@ hash/band/bucket first so candidate pairs only form inside buckets
 (cf. PAPERS.md LSH literature; same structure as the band join in
 public MinHash dedup pipelines).
 
-Two MinHash signature implementations, same pipeline downstream:
-
-- ``impl="vectorized"`` (default): one Arrow-batched pandas UDF that
-  hashes every shingle in the batch with pandas' SipHash
-  (`pd.util.hash_array`, fixed keys → deterministic across runs and
-  executors) and derives the n seeded hashes via Kirsch–Mitzenmacher
-  double hashing (h1 + i·h2 in uint64) — a (n_shingles × n_hashes)
-  numpy broadcast + per-doc `minimum.reduceat`. Measured 3.5× faster
-  than the expression form at sf0.1 (0.65 s vs 2.28 s for 5 000 docs
-  × 32 hashes): Catalyst higher-order-function lambdas are
-  interpreted per element, so the ~8 M hash evaluations dominate,
-  while the Arrow path is one C loop. This is the 100 TB hot path.
-- ``impl="expr"``: pure JVM-side expression tree (zero Python), kept
-  because it needs no Python workers and documents the
-  CollapseProject/lambda-binding traps. Same asymptotics, higher
-  constant.
+MinHash signatures come from one Arrow-batched pandas UDF that
+hashes every shingle in the batch with pandas' SipHash
+(`pd.util.hash_array`, fixed keys → deterministic across runs and
+executors) and derives the n seeded hashes via Kirsch–Mitzenmacher
+double hashing (h1 + i·h2 in uint64) — a (n_shingles × n_hashes)
+numpy broadcast + per-doc `minimum.reduceat`. Measured 3.5× faster
+than a pure-expression signature at sf0.1 (0.65 s vs 2.28 s for
+5 000 docs × 32 hashes): Catalyst higher-order-function lambdas are
+interpreted per element, so the ~8 M hash evaluations dominate,
+while the Arrow path is one C loop. This is the 100 TB hot path.
 
 Banding, bucket-join, and Jaccard verification are pure DataFrame
-ops either way. SimHash uses one Arrow-batched pandas UDF (per-row
+ops. SimHash uses one Arrow-batched pandas UDF (per-row
 bit-majority is genuinely awkward as 64 agg columns).
 """
 
@@ -44,33 +38,6 @@ from flink_realtime_edu_spark.session import materialize as _materialize
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
-
-
-_MAX_LONG = (1 << 63) - 1
-
-
-def minhash_sig_expr(
-    text_col: str, n_hashes: int = 32, shingle_words: int = 3
-) -> Column:
-    """array<long> MinHash signature as ONE expression tree.
-
-    Shape matters enormously here: computing each of the n seeds as
-    its own column duplicates the shingle construction n times
-    (Catalyst's CollapseProject re-inlines shared sub-expressions —
-    measured ~30× slower). Instead: per shingle, produce the vector
-    of n seeded hashes (`xxhash64(shingle, seed)`); then fold the
-    shingle axis with an element-wise `zip_with(acc, x, least)`.
-    One pass over the data, zero shuffles, whole-stage codegen.
-    """
-    shingles = F.array_distinct(word_shingles(text_col, shingle_words))
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    per_shingle = F.transform(
-        shingles, lambda s: F.transform(seeds, lambda i: F.xxhash64(s, i))
-    )
-    init = F.array_repeat(F.lit(_MAX_LONG), n_hashes)
-    return F.aggregate(
-        per_shingle, init, lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b))
-    )
 
 
 def minhash_batch(texts, n_hashes: int = 32, shingle_words: int = 3) -> list:
@@ -145,14 +112,9 @@ def minhash_signature(
     text_col: str = "text",
     n_hashes: int = 32,
     shingle_words: int = 3,
-    impl: str = "vectorized",
 ) -> DataFrame:
-    """(id, sig array<long>) — vectorized (default) or pure-expression
-    signature; see module docstring for the trade-off."""
-    if impl == "vectorized":
-        sig = minhash_sig_vectorized_udf(n_hashes, shingle_words)(F.col(text_col))
-    else:
-        sig = minhash_sig_expr(text_col, n_hashes, shingle_words)
+    """(id, sig array<long>) via the vectorized signature UDF."""
+    sig = minhash_sig_vectorized_udf(n_hashes, shingle_words)(F.col(text_col))
     return df.select(F.col(id_col), sig.alias("sig"))
 
 
@@ -188,7 +150,8 @@ def bands_from_signature(
     # transform) so the upstream sig expression is evaluated ONCE per
     # row even if CollapseProject inlines it; referencing it directly
     # inside the per-band lambda re-evaluates it once per band
-    # (measured: 8 bands → ~6× slower on the expression impl).
+    # (measured: 8 bands → ~6× slower with an expression-tree
+    # signature).
     band_arr = F.element_at(F.transform(F.array(F.col("sig")), bands_of), 1)
     return sig_df.select(
         F.col(id_col), F.explode(band_arr).alias("band")
@@ -202,11 +165,10 @@ def lsh_bands(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_words: int = 3,
-    impl: str = "vectorized",
 ) -> DataFrame:
     """shingle → minhash → band in one plan (no materialization)."""
     return bands_from_signature(
-        minhash_signature(df, id_col, text_col, n_hashes, shingle_words, impl),
+        minhash_signature(df, id_col, text_col, n_hashes, shingle_words),
         id_col,
         n_hashes,
         bands,
@@ -421,11 +383,10 @@ def minhash_near_duplicates(
     bands: int = 8,
     shingle_words: int = 3,
     threshold: float = 0.7,
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Full pipeline: shingle → minhash → band → bucket-join →
     jaccard-verify → (id_a, id_b, jaccard ≥ threshold)."""
-    bands_df = lsh_bands(docs, id_col, text_col, n_hashes, bands, shingle_words, impl)
+    bands_df = lsh_bands(docs, id_col, text_col, n_hashes, bands, shingle_words)
     pairs = candidate_pairs(bands_df, id_col)
     return jaccard_verify(pairs, docs, id_col, text_col, shingle_words).filter(
         F.col("jaccard") >= threshold

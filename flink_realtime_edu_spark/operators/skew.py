@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_realtime_edu_spark.functions import dec_exact, dec_round
+
 
 def salted_sum_count(
     df: DataFrame,
@@ -33,16 +35,17 @@ def salted_sum_count(
     Phase 1 shuffles on (keys..., salt) — a hot key's rows spread
     over `n_salts` reducers; phase 2 combines `n_salts` tiny partial
     rows per key. Decimal accumulation keeps the result bit-equal to
-    the direct single-phase aggregate (asserted in tests).
+    the direct single-phase aggregate, ``functions.dec_sum`` (asserted
+    in tests).
     """
     salt = F.pmod(F.xxhash64(F.col(unique_col)), F.lit(n_salts)).alias("__salt")
     partial = (
-        df.select(*keys, salt, F.col(value_col).cast("decimal(30,8)").alias("__v"))
+        df.select(*keys, salt, dec_exact(value_col).alias("__v"))
         .groupBy(*keys, "__salt")
         .agg(F.sum("__v").alias("__psum"), F.count(F.lit(1)).alias("__pcnt"))
     )
     return partial.groupBy(*keys).agg(
-        F.round(F.sum("__psum").cast("double"), 2).alias("sum_value"),
+        dec_round(F.sum("__psum"), 2).alias("sum_value"),
         F.sum("__pcnt").alias("n_rows"),
     )
 

@@ -8,11 +8,13 @@ rows-only check (B* rows in the inventory).
 
 Conventions enforced here (SURVEY.md §5.2):
 - every computed column is aliased identically in Spark and SQL;
-- floating aggregates are exact-decimal on BOTH sides, asymmetrically
-  since r13: the Spark side casts per-row to decimal(18,8)
-  (long-backed — ``flink_realtime_edu_spark.functions._DEC``, which
-  also carries the |x| < 1e10 equivalence argument) while the DuckDB
-  twin stays DECIMAL(30,8);
+- rounded floating sums and means go through the exact-decimal twins
+  in ``flink_realtime_edu_spark.functions`` on BOTH sides (``dec_sum``
+  / ``dec_avg`` on DataFrames, ``dec_sum_sql`` / ``dec_avg_sql`` in
+  SQL text): exact decimal sum, rounded HALF_UP, then cast to DOUBLE.
+  The Spark side casts per-row to decimal(18,8) (long-backed —
+  ``functions._DEC``, which also carries the |x| < 1e10 equivalence
+  argument) while the SQL twin stays DECIMAL(30,8);
 - results are deterministic (unique tie-breakers under limits,
   arrays sorted/joined to strings).
 """

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_realtime_edu_spark.functions import dec_sum, dec_sum_sql
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.sources import load
 
@@ -28,8 +28,7 @@ WITH d AS (
   FROM events WHERE event_type = 'purchase' GROUP BY 1)
 SELECT day, revenue,
   ROUND(revenue - LAG(revenue) OVER (ORDER BY day), 2) AS dod_change,
-  ROUND(CAST(SUM(CAST(revenue AS DECIMAL(30,8))) OVER w AS DOUBLE)
-        / COUNT(*) OVER w, 6) AS ma7
+  {dec_avg_sql('revenue', over='w')} AS ma7
 FROM d
 WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 """,
@@ -45,14 +44,11 @@ def revenue_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seq = Window.orderBy("day")
     ma = seq.rowsBetween(-6, Window.currentRow)
-    dec = F.col("revenue").cast("decimal(30,8)")
     return daily.select(
         "day",
         "revenue",
         F.round(F.col("revenue") - F.lag("revenue").over(seq), 2).alias("dod_change"),
-        F.round(F.sum(dec).over(ma).cast("double") / F.count(F.lit(1)).over(ma), 6).alias(
-            "ma7"
-        ),
+        dec_avg("revenue", over=ma).alias("ma7"),
     )
 
 

@@ -303,9 +303,9 @@ def pivot_daily_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "skewed_event_type_stats",
     survey_rows=("A1", "A2", "A3"),
-    oracle="""
+    oracle=f"""
 SELECT event_type,
-  ROUND(CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE), 2) AS sum_value,
+  {dec_sum_sql('value')} AS sum_value,
   COUNT(*) AS n_rows,
   COUNT(DISTINCT user_id) AS n_users
 FROM events GROUP BY 1

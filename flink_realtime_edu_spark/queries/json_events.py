@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, MapType, StringType
 
-from flink_realtime_edu_spark.functions import dec_avg_sql, dec_sum_sql
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.sources import load
 
@@ -45,16 +45,13 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     ratio = F.try_divide(F.col("value"), k)
-    dec = "decimal(30,8)"
     return (
         ev.select("event_type", (k % 10).alias("k_bucket"), "value", ratio.alias("ratio"))
         .groupBy("event_type", "k_bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast(dec)).cast("double"), 2).alias("sum_value"),
-            F.round(
-                F.sum(F.col("ratio").cast(dec)).cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_value_per_k"),
+            dec_sum("value").alias("sum_value"),
+            dec_avg("ratio").alias("avg_value_per_k"),
         )
     )
 

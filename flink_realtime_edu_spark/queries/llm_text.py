@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_realtime_edu_spark.functions import dec_avg_sql, dec_sum_sql
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_exact, dec_sum_sql
 from flink_realtime_edu_spark.operators.textnorm import (
     NORMALIZE_SQL as _NORMALIZE_SQL,
 )
@@ -146,12 +146,11 @@ def text_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline reports per input source)."""
     d = load(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " "))
-    dec = "decimal(30,8)"
     return d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(n_tokens.cast("bigint")).alias("total_tokens"),
-        F.round(F.sum(F.col("n_chars").cast(dec)).cast("double") / F.count(F.lit(1)), 6).alias("avg_chars"),
-        F.round(F.sum(n_tokens.cast(dec)).cast("double") / F.count(F.lit(1)), 6).alias("avg_tokens"),
+        dec_avg("n_chars").alias("avg_chars"),
+        dec_avg(n_tokens).alias("avg_tokens"),
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
     )
@@ -261,8 +260,8 @@ _BPE_RE_SQL = _BPE_RE.replace("'", "''")  # escape for the SQL literal
 SELECT source,
   CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS ws_tokens,
   CAST(SUM(len(regexp_extract_all(text, '{_BPE_RE_SQL}'))) AS BIGINT) AS bpe_tokens,
-  ROUND(CAST(SUM(CAST(len(regexp_extract_all(text, '{_BPE_RE_SQL}')) AS DECIMAL(30,8))) AS DOUBLE)
-        / SUM(len(string_split(text, ' '))), 6) AS bpe_per_ws
+  {dec_avg_sql(f"len(regexp_extract_all(text, '{_BPE_RE_SQL}'))",
+               den="SUM(len(string_split(text, ' ')))")} AS bpe_per_ws
 FROM documents GROUP BY source
 """,
 )
@@ -278,9 +277,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.groupBy("source").agg(
         F.sum(ws.cast("bigint")).alias("ws_tokens"),
         F.sum(bpe.cast("bigint")).alias("bpe_tokens"),
-        F.round(
-            F.sum(bpe.cast("decimal(30,8)")).cast("double") / F.sum(ws), 6
-        ).alias("bpe_per_ws"),
+        dec_avg(bpe, den=F.sum(ws)).alias("bpe_per_ws"),
     )
 
 
@@ -555,7 +552,7 @@ def mixture_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIGRAM_ORACLE = """
+_UNIGRAM_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, UNNEST(string_split(text, ' ')) AS term FROM documents
 ), tf AS (
@@ -566,9 +563,8 @@ WITH tok AS (
 ), tot AS (SELECT CAST(SUM(c) AS BIGINT) AS tot FROM cnt)
 SELECT tf.doc_id,
   CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
-  ROUND(CAST(SUM(CAST(
-      tf.tf * ROUND(LN(CAST(tot.tot AS DOUBLE) / cnt.c), 6)
-    AS DECIMAL(30,8))) AS DOUBLE) / SUM(tf.tf), 6) AS mean_surprisal_nats
+  {dec_avg_sql("tf.tf * ROUND(LN(CAST(tot.tot AS DOUBLE) / cnt.c), 6)",
+               den="SUM(tf.tf)")} AS mean_surprisal_nats
 FROM tf JOIN cnt ON tf.term = cnt.term CROSS JOIN tot
 GROUP BY tf.doc_id
 """
@@ -588,7 +584,7 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: per-term surprisal is rounded to 6 dp (ln ulp
     agreement, the tfidf rule), then the tf-weighted mean uses the
-    exact DECIMAL(30,8) sum discipline — hash-equal vs DuckDB.
+    exact-decimal mean (``functions.dec_avg``) — hash-equal vs DuckDB.
     Scale: two hash aggregates and a dictionary-sized join on term
     (AQE broadcasts it); the corpus total is a one-row broadcast —
     same shape as tfidf_top_terms, no new shuffle."""
@@ -605,16 +601,13 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     tot = cnt.agg(F.sum("c").alias("tot"))
     s = F.round(F.log(F.col("tot").cast("double") / F.col("c")), 6)
-    w = (F.col("tf") * s).cast("decimal(30,8)")
     return (
         tf.join(cnt, "term")
         .crossJoin(F.broadcast(tot))
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
-            F.round(F.sum(w).cast("double") / F.sum("tf"), 6).alias(
-                "mean_surprisal_nats"
-            ),
+            dec_avg(F.col("tf") * s, den=F.sum("tf")).alias("mean_surprisal_nats"),
         )
     )
 
@@ -730,7 +723,7 @@ def text_normalization_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_ORACLE = """
+_BIGRAM_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
   FROM documents
@@ -750,9 +743,8 @@ WITH toks AS (
 ), scored AS (
   SELECT tf.doc_id,
     CAST(SUM(tf.tf) AS BIGINT) AS n_bigrams,
-    ROUND(CAST(SUM(CAST(
-        tf.tf * ROUND(LN((pc.pc + 0.5 * voc.v) / (bc.bc + 0.5)), 6)
-      AS DECIMAL(30,8))) AS DOUBLE) / SUM(tf.tf), 6) AS mean_nll_nats
+    {dec_avg_sql("tf.tf * ROUND(LN((pc.pc + 0.5 * voc.v) / (bc.bc + 0.5)), 6)",
+                 den="SUM(tf.tf)")} AS mean_nll_nats
   FROM tf
   JOIN bc ON tf.prev = bc.prev AND tf.cur = bc.cur
   JOIN pc ON tf.prev = pc.prev
@@ -784,7 +776,7 @@ def doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Scoring is one pass over per-doc bigram frequencies:
     join the model on (prev, cur) — dictionary-sized, AQE broadcasts
     it — then the per-bigram −ln p rounded to 6 dp (the tfidf ln-ulp
-    rule) folds through the exact DECIMAL(30,8) mean discipline;
+    rule) folds through the exact-decimal mean (``functions.dec_avg``);
     perplexity = exp of the ROUNDED mean, so both engines exponentiate
     the identical double. Tokens are whitespace words with empties
     dropped BEFORE pairing (adjacency is defined on the filtered
@@ -834,7 +826,6 @@ def doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    w_nll = (F.col("tf") * nll).cast("decimal(30,8)")
     scored = (
         tf.join(bc, ["prev", "cur"])
         .join(pc, "prev")
@@ -842,9 +833,7 @@ def doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
-            F.round(F.sum(w_nll).cast("double") / F.sum("tf"), 6).alias(
-                "mean_nll_nats"
-            ),
+            dec_avg(F.col("tf") * nll, den=F.sum("tf")).alias("mean_nll_nats"),
         )
     )
     return scored.select(
@@ -925,7 +914,7 @@ def domain_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.exp(F.lit(_MIX_ALPHA) * F.col("lnp")), 6).alias("q_un"),
     )
     z = unn.agg(
-        F.sum(F.col("q_un").cast("decimal(30,8)")).cast("double").alias("zsum")
+        F.sum(dec_exact("q_un")).cast("double").alias("zsum")
     )
     q_share = F.round(F.col("q_un") / F.col("zsum"), 6)
     return unn.crossJoin(F.broadcast(z)).select(
@@ -955,8 +944,7 @@ ex AS (
   JOIN documents d ON d.doc_id = uni.doc_id
 ), agg AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-    ROUND(CAST(SUM(CAST(excess AS DECIMAL(30,8))) AS DOUBLE) / COUNT(*), 6)
-      AS mean_excess
+    {dec_avg_sql('excess')} AS mean_excess
   FROM ex GROUP BY source
 ), upd AS (
   SELECT source, n_docs, mean_excess,
@@ -990,8 +978,8 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the two scoring oracles compose as subqueries (the
     media_dup_canonicals pattern), both already 6dp-rounded; excess
-    is a difference of identical doubles, the domain mean folds
-    through DECIMAL(30,8), exp is rounded before the DECIMAL-folded
+    is a difference of identical doubles, the domain mean is
+    ``functions.dec_avg``, exp is rounded before the DECIMAL-folded
     normalizer — exact end to end. Docs with < 2 tokens carry no
     bigram score and drop from the excess join by construction (the
     perplexity contract). Scale: both scoring pipelines are the
@@ -1017,17 +1005,13 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = ex.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.round(
-            F.sum(F.col("excess").cast("decimal(30,8)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("mean_excess"),
+        dec_avg("excess").alias("mean_excess"),
     )
     upd = agg.withColumn(
         "boost", F.round(F.exp(F.lit(_DOREMI_ETA) * F.col("mean_excess")), 6)
     )
     z = upd.agg(
-        F.sum(F.col("boost").cast("decimal(30,8)")).cast("double").alias("zsum"),
+        F.sum(dec_exact("boost")).cast("double").alias("zsum"),
         F.count(F.lit(1)).alias("nd"),
     )
     alpha = F.round(F.col("boost") / F.col("zsum"), 6)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_sum
 from flink_realtime_edu_spark.operators.quantization import (
     pq_adc_topk,
     pq_fit_sample,
@@ -722,10 +723,9 @@ def label_homophily_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "label_centroids",
     survey_rows=("X6", "A1", "F5"),
-    oracle="""
+    oracle=f"""
 SELECT label, dim,
-  ROUND(CAST(SUM(CAST(v AS DECIMAL(30,8))) AS DOUBLE) / COUNT(*), 6)
-    AS centroid,
+  {dec_avg_sql('v')} AS centroid,
   COUNT(*) AS n_vectors
 FROM (SELECT label,
              UNNEST(CAST(embedding AS DOUBLE[])) AS v,
@@ -739,8 +739,8 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vector aggregate at the heart of IVF training / k-means
     assignment steps (operators/similarity.py uses the same shape to
     fit coarse quantizers). posexplode widens n×64 rows, then one
-    hash aggregate on (label, dim) with the exact DECIMAL(30,8) sum
-    so shuffle order can't move the mean; long form keeps the oracle
+    hash aggregate on (label, dim) with the exact-decimal mean
+    (``functions.dec_avg``) so shuffle order can't move it; long form keeps the oracle
     a plain scalar hash instead of a float-array compare.
 
     Scale: the explode is map-side (no shuffle) and the aggregate
@@ -757,11 +757,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ex.groupBy("label", (F.col("dim0") + 1).cast("bigint").alias("dim"))
         .agg(
-            F.round(
-                F.sum(F.col("v").cast("decimal(30,8)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("centroid"),
+            dec_avg("v").alias("centroid"),
             F.count(F.lit(1)).alias("n_vectors"),
         )
     )
@@ -797,7 +793,7 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     profile = labeled.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vectors"),
-        F.round(F.sum(F.col("dist2").cast("decimal(30,8)")).cast("double"), 4).alias("inertia"),
+        dec_sum("dist2", 4).alias("inertia"),
     )
     return profile.join(dominant, "cluster")
 
@@ -852,7 +848,7 @@ def kmeans_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_quantization_snr",
     survey_rows=("X6", "F3", "F5", "A1"),
-    oracle="""
+    oracle=f"""
 WITH e AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x FROM embeddings
 ), s AS (
@@ -870,8 +866,7 @@ WITH e AS (
   FROM s
 )
 SELECT label, COUNT(*) AS n_vecs,
-  ROUND(CAST(SUM(CAST(snr_db AS DECIMAL(30,8))) AS DOUBLE) / COUNT(*), 6)
-    AS avg_snr_db,
+  {dec_avg_sql('snr_db')} AS avg_snr_db,
   MIN(snr_db) AS min_snr_db,
   MAX(snr_db) AS max_snr_db
 FROM m GROUP BY label
@@ -916,11 +911,7 @@ def embedding_quantization_snr(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_vec = e.filter(sc_expr > 0).select("label", snr.alias("snr_db"))
     return per_vec.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.round(
-            F.sum(F.col("snr_db").cast("decimal(30,8)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("avg_snr_db"),
+        dec_avg("snr_db").alias("avg_snr_db"),
         F.min("snr_db").alias("min_snr_db"),
         F.max("snr_db").alias("max_snr_db"),
     )

@@ -18,8 +18,9 @@ a broadcast scalar for uncorrelated ones) — verified in the plans/
 snapshots; nothing here falls back to per-row re-execution, which is
 what makes these shapes survive 100 TB facts.
 
-Determinism notes (SURVEY.md §5.2): every floating aggregate uses
-the DECIMAL(30,8) exact-sum trick; threshold comparisons happen on
+Determinism notes (SURVEY.md §5.2): every rounded floating aggregate
+is a ``functions.dec_sum_sql`` / ``dec_avg_sql`` twin (the one SQL
+text runs in both engines); threshold comparisons happen on
 exact decimal sums (l_quantity is integral in the testdata —
 measured, FIXTURES.md) or on identically-derived doubles, so no
 boundary ulp can flip membership between engines.
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_realtime_edu_spark.functions import dec_avg_sql, dec_sum_sql
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.sources import load
 
@@ -71,9 +73,9 @@ def late_ship_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Correlated scalar subquery in WHERE (TPC-H Q17 shape)
 # --------------------------------------------------------------------------
-_SMALL_QTY_SQL = """
+_SMALL_QTY_SQL = f"""
 SELECT p_brand,
-  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8))) AS DOUBLE), 2)
+  {dec_sum_sql('l_extendedprice')}
     AS small_qty_revenue,
   COUNT(*) AS n_small_lines
 FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -103,9 +105,9 @@ def small_qty_parts_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # IN + HAVING subquery (TPC-H Q18 shape)
 # --------------------------------------------------------------------------
-_BIG_VOLUME_SQL = """
+_BIG_VOLUME_SQL = f"""
 SELECT c_custkey, c_name, o_orderkey,
-  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(30,8))) AS DOUBLE), 2) AS total_qty
+  {dec_sum_sql('l_quantity')} AS total_qty
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
@@ -167,10 +169,9 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Scalar subquery threshold in HAVING (TPC-H Q11 shape)
 # --------------------------------------------------------------------------
-_NATION_SHARE_SQL = """
+_NATION_SHARE_SQL = f"""
 SELECT n_name,
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8)))
-        AS DOUBLE), 2) AS nation_revenue
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS nation_revenue
 FROM lineitem
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation   ON s_nationkey = n_nationkey
@@ -244,13 +245,12 @@ def waiting_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Uncorrelated scalar threshold + NOT EXISTS (TPC-H Q22 shape)
 # --------------------------------------------------------------------------
-_WEALTHY_INACTIVE_SQL = """
+_WEALTHY_INACTIVE_SQL = f"""
 SELECT c_mktsegment AS segment, COUNT(*) AS n_custs,
-  ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(30,8))) AS DOUBLE), 2)
+  {dec_sum_sql('c_acctbal')}
     AS total_bal
 FROM customer
-WHERE c_acctbal > (SELECT ROUND(CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(30,8)))
-                                 AS DOUBLE) / COUNT(*), 6)
+WHERE c_acctbal > (SELECT {dec_avg_sql('c2.c_acctbal')}
                    FROM customer c2 WHERE c2.c_acctbal > 0)
   AND NOT EXISTS (SELECT 1 FROM orders
                   WHERE o_custkey = c_custkey

@@ -17,8 +17,9 @@ two-level aggregation (Q13), disjunctive predicate pushdown (Q19),
 NOT-IN anti join (Q16), and correlated-scalar decorrelation over a
 derived table (Q2/Q20).
 
-Determinism (SURVEY.md §5.2): float sums go through the
-DECIMAL(30,8) exact-sum trick on both sides; ratio outputs are
+Determinism (SURVEY.md §5.2): rounded float sums are
+``functions.dec_sum_sql`` (exact decimal sum, rounded, then cast to
+DOUBLE) in the one text both engines run; ratio outputs are
 rounded doubles derived from exact decimal sums; LIMIT queries
 carry a unique tie-breaker; equality predicates on doubles compare
 stored values (no arithmetic), so membership cannot flip engines.
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_realtime_edu_spark.functions import dec_sum_sql
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.sources import load
 
@@ -47,11 +49,10 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
 # --------------------------------------------------------------------------
 # Q7 — volume shipping between region pairs, per year
 # --------------------------------------------------------------------------
-_VOLUME_SHIPPING_SQL = """
+_VOLUME_SHIPPING_SQL = f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
   CAST(EXTRACT(YEAR FROM l_shipdate) AS INT) AS l_year,
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM lineitem
 JOIN orders   ON o_orderkey  = l_orderkey
 JOIN customer ON c_custkey   = o_custkey
@@ -179,10 +180,9 @@ def nation_profit_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q10 — top customers by returned-item revenue
 # --------------------------------------------------------------------------
-_RETURNED_TOP_SQL = """
+_RETURNED_TOP_SQL = f"""
 SELECT c_custkey, c_name, n_name,
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM customer
 JOIN orders   ON c_custkey  = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
@@ -319,10 +319,9 @@ def part_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q19 — disjunctive multi-attribute predicate revenue
 # --------------------------------------------------------------------------
-_DISJUNCTIVE_SQL = """
+_DISJUNCTIVE_SQL = f"""
 SELECT
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue,
   COUNT(*) AS n_lines
 FROM lineitem
 JOIN part ON p_partkey = l_partkey
@@ -429,10 +428,9 @@ def min_cost_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q3 — unshipped-order revenue for a market segment, heap top-10
 # --------------------------------------------------------------------------
-_UNSHIPPED_REVENUE_SQL = """
+_UNSHIPPED_REVENUE_SQL = f"""
 SELECT o_orderkey,
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue,
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue,
   o_orderdate, o_orderpriority
 FROM customer
 JOIN orders   ON c_custkey  = o_custkey
@@ -466,10 +464,9 @@ def unshipped_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q5 — local-supplier volume per nation within a region
 # --------------------------------------------------------------------------
-_LOCAL_SUPPLIER_SQL = """
+_LOCAL_SUPPLIER_SQL = f"""
 SELECT n_name,
-  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS revenue
+  {dec_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM customer
 JOIN orders   ON c_custkey   = o_custkey
 JOIN lineitem ON l_orderkey  = o_orderkey
@@ -501,10 +498,9 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q6 — forecast revenue change (pure scan-filter-aggregate)
 # --------------------------------------------------------------------------
-_FORECAST_REVENUE_SQL = """
+_FORECAST_REVENUE_SQL = f"""
 SELECT
-  ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
-                      AS DECIMAL(30,8))) AS DOUBLE), 2) AS promo_uplift,
+  {dec_sum_sql('l_extendedprice * l_discount')} AS promo_uplift,
   COUNT(*) AS n_lines
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_realtime_edu_spark.functions import dec_sum, dec_sum_sql
 from flink_realtime_edu_spark.operators.dedup import md5_hash60
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.sources import load
@@ -250,10 +251,8 @@ _DSIR_CTES = f"""toks AS (
   FROM model CROSS JOIN tots
 ), scored AS (
   SELECT df.doc_id, CAST(SUM(df.c) AS BIGINT) AS n_feats,
-    ROUND(CAST(SUM(CAST(df.c * wts.lw AS DECIMAL(30,8))) AS DOUBLE), 6)
-      AS log_weight,
-    (ROUND(CAST(SUM(CAST(df.c * wts.lw AS DECIMAL(30,8))) AS DOUBLE), 6) > 0)
-      AS target_like
+    {dec_sum_sql('df.c * wts.lw', 6)} AS log_weight,
+    ({dec_sum_sql('df.c * wts.lw', 6)} > 0) AS target_like
   FROM df JOIN wts ON df.f = wts.f
   GROUP BY df.doc_id
 )"""
@@ -286,8 +285,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling downstream (mixture_sample_by_source territory).
 
     Exact oracle: per-feature ln terms rounded to 6 dp (the tfidf
-    ln-ulp rule), weighted sums folded through DECIMAL(30,8) — the
-    doc_bigram_perplexity discipline verbatim; both engines hash the
+    ln-ulp rule), weighted sums through ``functions.dec_sum`` — the
+    doc_bigram_perplexity discipline; both engines hash the
     identical md5-60bit buckets. Docs with < 2 tokens carry no bigram
     and are excluded by construction (same contract as perplexity).
 
@@ -370,15 +369,12 @@ def dsir_fit(feat_t: DataFrame) -> DataFrame:
 
 def dsir_score(feat: DataFrame, wts: DataFrame) -> DataFrame:
     """Score (doc_id, f) feature occurrences against a FROZEN (f, lw)
-    model: per-doc Σ c·lw through the DECIMAL(30,8) fold. The model
+    model: per-doc Σ c·lw through ``functions.dec_sum``. The model
     join broadcasts (≤ B rows); the only shuffle is the per-doc hash
     aggregate — the shape a streaming micro-batch scorer reuses
     verbatim (streaming/scoring.py)."""
     df = feat.groupBy("doc_id", "f").agg(F.count(F.lit(1)).alias("c"))
-    lw_sum = F.round(
-        F.sum((F.col("c") * F.col("lw")).cast("decimal(30,8)")).cast("double"),
-        6,
-    )
+    lw_sum = dec_sum(F.col("c") * F.col("lw"), 6)
     return (
         df.join(F.broadcast(wts), "f")
         .groupBy("doc_id")

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_realtime_edu_spark.functions import dec_sum, dec_sum_sql
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
 from flink_realtime_edu_spark.queries import register
 from flink_realtime_edu_spark.session import materialize as _materialize
 from flink_realtime_edu_spark.sources import load
@@ -169,11 +169,10 @@ def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "running_customer_spend",
     survey_rows=("W4",),
-    oracle="""
+    oracle=f"""
 SELECT o_custkey, o_orderkey,
-  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,8))) OVER cum AS DOUBLE), 2) AS run_spend,
-  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,8))) OVER m3 AS DOUBLE)
-        / COUNT(*) OVER m3, 6) AS mov3_avg
+  {dec_sum_sql('o_totalprice', over='cum')} AS run_spend,
+  {dec_avg_sql('o_totalprice', over='m3')} AS mov3_avg
 FROM orders
 WINDOW
   cum AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -188,14 +187,11 @@ def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     cum = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     m3 = base.rowsBetween(-2, Window.currentRow)
-    dec = F.col("o_totalprice").cast("decimal(30,8)")
     return load(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
-        F.round(F.sum(dec).over(cum).cast("double"), 2).alias("run_spend"),
-        F.round(F.sum(dec).over(m3).cast("double") / F.count(F.lit(1)).over(m3), 6).alias(
-            "mov3_avg"
-        ),
+        dec_sum("o_totalprice", over=cum).alias("run_spend"),
+        dec_avg("o_totalprice", over=m3).alias("mov3_avg"),
     )
 
 
@@ -229,11 +225,10 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "trailing_24h_user_value",
     survey_rows=("W4", "F2"),
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id,
   COUNT(*) OVER w AS n_24h,
-  ROUND(CAST(SUM(CAST(value AS DECIMAL(30,8))) OVER w AS DOUBLE), 4)
-    AS sum_value_24h
+  {dec_sum_sql('value', 4, over='w')} AS sum_value_24h
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
              RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
@@ -261,7 +256,5 @@ def trailing_24h_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.count(F.lit(1)).over(w).alias("n_24h"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(30,8)")).over(w).cast("double"), 4
-        ).alias("sum_value_24h"),
+        dec_sum("value", 4, over=w).alias("sum_value_24h"),
     )

@@ -79,12 +79,9 @@ def configure(spark: SparkSession) -> SparkSession:
 # SAME floor regressed the foreachBatch micro-batch ingest sinks
 # 15-30 % (ivf_index 206 → ~160 rows/s, scripts/ingest_throughput.py
 # A/B): a ~250-row micro-batch wants FEWER tasks, exactly what the
-# default floor's coalescing provides. Env-overridable for other
-# calibrations.
+# default floor's coalescing provides.
 BATCH_CONFS: dict[str, str] = {
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION", "64kb"
-    ),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64kb",
 }
 
 
@@ -100,9 +97,8 @@ def configure_batch(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(key, value)
         except Exception as exc:  # noqa: BLE001 — never fail a build on conf
-            # A bad override (e.g. a typo'd SPARK_GRAFT_AQE_MIN_PARTITION
-            # byte string) would otherwise silently disable the r13 AQE
-            # floor — warn so a misconfiguration is visible (ADVICE r13).
+            # A conf this build rejects would otherwise silently disable
+            # the r13 AQE floor — warn so it is visible (ADVICE r13).
             import warnings
 
             warnings.warn(
@@ -176,19 +172,25 @@ def get_spark(
     ``shuffle_partitions`` pins the value instead (plan snapshots,
     tests that need a fixed exchange width).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    import tempfile
+    from pyspark import SparkContext
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # Static conf: bucketed-table tests saveAsTable; keep the
-        # warehouse out of the repo (harmless if session pre-exists).
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
     )
+    if SparkContext._active_spark_context is None:
+        import tempfile
+
+        # Static conf: bucketed-table tests saveAsTable; keep the
+        # warehouse out of the repo. A live context ignores it, so the
+        # directory is made only when getOrCreate starts a new one.
+        builder = builder.config(
+            "spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-")
+        )
     spark = configure(builder.getOrCreate())
     if shuffle_partitions is None:
         shuffle_partitions = spark.sparkContext.defaultParallelism

@@ -25,6 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_realtime_edu_spark.functions import dec_sum
 from flink_realtime_edu_spark.session import configure
 from flink_realtime_edu_spark.sources import (
     TS_SHAPE_LTZ_MICROS,
@@ -154,13 +155,12 @@ def load_events_stream(
 def tumbling_stats_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """T1 streaming twin of queries.time_semantics.tumbling_hourly_stats:
     identical aggregation + withWatermark for state eviction."""
-    dec = "decimal(30,8)"
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(dec)).cast("double"), 2).alias("sum_value"),
+            dec_sum("value").alias("sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
     )
@@ -170,13 +170,12 @@ def sliding_stats_stream(events: DataFrame, watermark: str = "1 hour") -> DataFr
     """T2 streaming twin of sliding_window_traffic (1h window / 30min
     slide): each event feeds 2 overlapping windows; state per window
     evicted once the watermark passes its end."""
-    dec = "decimal(30,8)"
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(dec)).cast("double"), 2).alias("sum_value"),
+            dec_sum("value").alias("sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
     )
@@ -238,13 +237,12 @@ def temporal_join_stream(facts: DataFrame, versioned_dim: DataFrame) -> DataFram
 
 def session_stats_stream(events: DataFrame, gap: str = "12 hours", watermark: str = "1 hour") -> DataFrame:
     """T3 streaming twin of session_window_stats (same gap)."""
-    dec = "decimal(30,8)"
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(dec)).cast("double"), 2).alias("session_value"),
+            dec_sum("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -376,7 +374,6 @@ def layered_warehouse_stream(
     genuinely-late rows are dropped from the aggregates (T4 rule) and
     the result diverges from batch.
     """
-    dec = "decimal(30,8)"
     dwd = (
         events.withColumn("k", F.from_json("props", "k INT").getField("k"))
         .filter(F.col("event_type").isin("click", "view", "purchase"))
@@ -389,9 +386,7 @@ def layered_warehouse_stream(
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(dec)).cast("double"), 2).alias(
-                "sum_value"
-            ),
+            dec_sum("value").alias("sum_value"),
             F.count("k").alias("n_with_props"),
         )
         .select(
@@ -409,8 +404,6 @@ def ads_top_segments(dws: DataFrame, k: int = 5) -> DataFrame:
     """ADS serving query over the DWS table (batch, like the
     reference's ClickHouse SQL layer [R]): top-k (event_type, nation)
     segments by total value across days, deterministic tie-break."""
-    from flink_realtime_edu_spark.functions import dec_sum
-
     totals = dws.groupBy("event_type", "nation").agg(
         dec_sum("sum_value").alias("total_value"),
         F.sum("n_events").alias("total_events"),

@@ -13,6 +13,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from flink_realtime_edu_spark.functions import dec_sum
 from flink_realtime_edu_spark.operators.skew import salted_count_distinct, salted_sum_count
 from flink_realtime_edu_spark.queries import load_registry
 from flink_realtime_edu_spark.sources import load
@@ -80,12 +81,7 @@ def test_salted_sum_matches_direct_aggregate(spark, sf_dir):
     direct = {
         (r.event_type): (r.sum_value, r.n_rows)
         for r in ev.groupBy("event_type")
-        .agg(
-            F.round(F.sum(F.col("value").cast("decimal(30,8)")).cast("double"), 2).alias(
-                "sum_value"
-            ),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
+        .agg(dec_sum("value").alias("sum_value"), F.count(F.lit(1)).alias("n_rows"))
         .collect()
     }
     salted = {

@@ -7,15 +7,15 @@ hypothesis shrinks failures to minimal cases.
 
 from __future__ import annotations
 
-import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from flink_realtime_edu_spark.functions import dec_sum
+from flink_realtime_edu_spark.functions import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
 from flink_realtime_edu_spark.operators.asof import asof_join_backward
 
 SET = settings(
@@ -29,23 +29,51 @@ doubles = st.floats(
 )
 
 
+def _exact8(v: float) -> Decimal:
+    """One row's exact decimal: the double rounded HALF_UP to 8 places."""
+    return Decimal(v).quantize(Decimal("0.00000001"), rounding=ROUND_HALF_UP)
+
+
+def _half_up_float(exact: Decimal, scale: int) -> float:
+    return float(exact.quantize(Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP))
+
+
+def _half_up_ratio(total: Decimal, den: int, scale: int) -> float:
+    """total / den rounded HALF_UP (ties away from zero) at ``scale``,
+    in integer arithmetic — no intermediate rounding."""
+    num = abs(int(total.scaleb(8))) * 10**scale
+    q = (2 * num + den * 10**8) // (2 * den * 10**8)
+    return float(Decimal(q if total >= 0 else -q).scaleb(-scale))
+
+
+def _duck(rows, select: str, cols: str = "i INTEGER, x DOUBLE, k INTEGER"):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({cols})")
+    con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * len(rows[0]))})", rows)
+    return con.execute(select).fetchall()
+
+
 @given(
     values=st.lists(doubles, min_size=1, max_size=60),
     n_parts=st.integers(min_value=1, max_value=7),
 )
+@example(values=[0.1, 0.045], n_parts=2)  # half-cent tie: 0.145
+@example(values=[40866714.0, 0.425], n_parts=1)  # star_join_revenue's tie
 @SET
 def test_dec_sum_is_partition_invariant_and_exact(spark, values, n_parts):
-    """dec_sum must equal the exact decimal sum regardless of how the
-    rows are partitioned (the property that makes Spark and DuckDB
-    hash-identical despite different accumulation orders)."""
-    df = spark.createDataFrame([(v,) for v in values], "x double").repartition(n_parts)
+    """dec_sum is the exact decimal sum rounded HALF_UP, bit for bit,
+    regardless of how the rows are partitioned (the property that
+    makes Spark and DuckDB hash-identical despite different
+    accumulation orders) — and DuckDB's dec_sum_sql twin agrees, in
+    the grouped and the running-window (``over=``) form."""
+    rows = [(i, v, 1) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "i int, x double, k int").repartition(n_parts)
     got = df.agg(dec_sum("x", scale=2).alias("s")).collect()[0].s
-    exact = sum(
-        Decimal(v).quantize(Decimal("0.00000001"), rounding=ROUND_HALF_UP)
-        for v in values
-    )
-    want = float(Decimal(float(exact)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-    assert got is not None and math.isclose(got, want, abs_tol=0.011)
+    want = _half_up_float(sum(_exact8(v) for v in values), 2)
+    assert got == want
+    assert _duck(rows, f"SELECT {dec_sum_sql('x')} FROM t") == [(want,)]
     # And: identical under a different partitioning (bit-exact).
     got2 = (
         df.repartition(max(1, 8 - n_parts))
@@ -54,6 +82,74 @@ def test_dec_sum_is_partition_invariant_and_exact(spark, values, n_parts):
         .s
     )
     assert got == got2
+
+    run = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    got_run = [
+        r.s for r in df.select("i", dec_sum("x", over=run).alias("s")).orderBy("i").collect()
+    ]
+    want_run = [
+        _half_up_float(sum(_exact8(v) for v in values[: i + 1]), 2)
+        for i in range(len(values))
+    ]
+    assert got_run == want_run
+    duck_run = _duck(
+        rows,
+        f"SELECT {dec_sum_sql('x', over='w')} FROM t "
+        "WINDOW w AS (ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
+        "ORDER BY i",
+    )
+    assert [r[0] for r in duck_run] == want_run
+
+
+@given(
+    rows=st.lists(
+        st.tuples(doubles, st.integers(min_value=1, max_value=5)), min_size=1, max_size=40
+    ),
+)
+@example(rows=[(270481.0528125, 1)] * 64)  # 17310787.38 / 64: a 6-dp tie
+@example(rows=[(1.0000005, 1), (1.0000005, 2)])
+@example(rows=[(-0.0000125, 3), (-0.0000125, 1)])
+@SET
+def test_dec_avg_rounds_the_exact_mean_half_up(spark, rows):
+    """dec_avg is the exact decimal sum over the count, rounded HALF_UP
+    at 6 places with no intermediate rounding — and so are its DuckDB
+    twin and the shared SQL text Spark runs, including the ``den=``
+    ratio and the ``over=`` moving-window forms. Rounding the DOUBLE
+    quotient instead let the engines split at exact ties."""
+    values = [v for v, _ in rows]
+    data = [(i, v, k) for i, (v, k) in enumerate(rows)]
+    df = spark.createDataFrame(data, "i int, x double, k int").repartition(3)
+    total = sum(_exact8(v) for v in values)
+    want = _half_up_ratio(total, len(values), 6)
+    want_ratio = _half_up_ratio(total, sum(k for _, k in rows), 6)
+
+    got = df.agg(
+        dec_avg("x").alias("a"), dec_avg("x", den=F.sum("k")).alias("r")
+    ).collect()[0]
+    assert (got.a, got.r) == (want, want_ratio)
+    sql = f"SELECT {dec_avg_sql('x')}, {dec_avg_sql('x', den='SUM(k)')} FROM t"
+    assert _duck(data, sql) == [(want, want_ratio)]
+    df.createOrReplaceTempView("dec_avg_rows")
+    shared = spark.sql(sql.replace("FROM t", "FROM dec_avg_rows")).collect()[0]
+    assert tuple(shared) == (want, want_ratio)
+
+    m3 = Window.orderBy("i").rowsBetween(-2, Window.currentRow)
+    got_m3 = [
+        r.a for r in df.select("i", dec_avg("x", over=m3).alias("a")).orderBy("i").collect()
+    ]
+    want_m3 = [
+        _half_up_ratio(
+            sum(_exact8(v) for v in values[max(0, i - 2) : i + 1]), min(i, 2) + 1, 6
+        )
+        for i in range(len(values))
+    ]
+    assert got_m3 == want_m3
+    duck_m3 = _duck(
+        data,
+        f"SELECT {dec_avg_sql('x', over='w')} FROM t "
+        "WINDOW w AS (ORDER BY i ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) ORDER BY i",
+    )
+    assert [r[0] for r in duck_m3] == want_m3
 
 
 events_strategy = st.lists(

@@ -648,6 +648,27 @@ def test_get_spark_sizes_shuffle_partitions_to_the_cores(spark):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
+def test_get_spark_on_a_live_session_makes_no_warehouse_dir(spark):
+    """A live SparkContext ignores the static warehouse conf, so a
+    second ``get_spark()`` must not leave a fresh empty
+    ``spark-wh-*`` directory behind."""
+    import tempfile
+    from pathlib import Path
+
+    from flink_realtime_edu_spark.session import get_spark
+
+    def warehouses() -> set[Path]:
+        return set(Path(tempfile.gettempdir()).glob("spark-wh-*"))
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    before = warehouses()
+    try:
+        get_spark()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert warehouses() - before == set()
+
+
 def test_checkpoint_keeps_its_state_store_count_across_restart(
     spark, sf_dir, tmp_path
 ):
