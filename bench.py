@@ -192,16 +192,27 @@ def run_duckdb(names, sf_dir: str, repeats: int) -> dict[str, float]:
 def run_streaming(sf_dir: str) -> dict[str, float]:
     """Streaming micro-bench (VERDICT r3 item 8): throughput (input
     rows/s of trigger time) and mean end-to-end micro-batch latency
-    for the two flagship streaming jobs — the T1 tumbling-window agg
-    and the S2 SCD2 dimension maintainer — replaying the sf events
-    table as 8 file-source micro-batches. Metrics come from the
-    queries' own progress telemetry (numInputRows / triggerExecution),
-    the same numbers a production monitor would scrape."""
+    for the flagship streaming jobs — the T1 tumbling-window agg, the
+    S2 SCD2 dimension maintainer and the T7 CEP automaton with
+    timeouts — replaying the sf events table in event-time order as 8
+    file-source micro-batches: sorted by (ts, event_id) and written by
+    perfbench/datagen.py's replay writer (the one replay generator,
+    shared with perfbench's stream_replay), so no row arrives behind
+    the watermark. Metrics come from the queries' own progress
+    telemetry (numInputRows / triggerExecution), the same numbers a
+    production monitor would scrape."""
     import shutil
     import tempfile
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, str(REPO / "perfbench"))
+    import datagen
+
     from flink_realtime_edu_spark.session import get_spark
-    from flink_realtime_edu_spark.sources import load
+    from flink_realtime_edu_spark.sources import table_path
     from flink_realtime_edu_spark.streaming.jobs import (
         load_events_stream,
         tumbling_stats_stream,
@@ -214,7 +225,16 @@ def run_streaming(sf_dir: str) -> dict[str, float]:
     out: dict[str, float] = {}
     try:
         src = str(work / "events_src")
-        load(spark, sf_dir, "events").repartition(8).write.parquet(src)
+        events = pq.read_table(table_path(sf_dir, "events"))
+        ts = events.column("ts")
+        if pa.types.is_integer(ts.type):  # the epoch-nanos on-disk shape
+            ts = pc.divide(ts, 1000)
+        events = events.set_column(
+            events.schema.get_field_index("ts"),
+            "ts",
+            ts.cast(pa.timestamp("us"), safe=False),
+        ).sort_by([("ts", "ascending"), ("event_id", "ascending")])
+        datagen.write_replay(events, src, n_files=8, seed=0)
 
         def progress_metrics(query) -> tuple[float, float, dict[str, int], int]:
             """(rows/s, mean batch ms, final state-store footprint,

@@ -29,7 +29,24 @@ anti-join form.
 
 Both modes are plain Catalyst plans, so the DuckDB oracle replays
 them as chained CTEs / window SQL (queries/cep.py) — exact value
-checks, not smoke tests.
+checks, not smoke tests. So are the quantified (``cep_times``) and
+negative (``cep_not_followed_by`` / ``cep_not_next``) first-match
+forms.
+
+The ALL-matches family — ``cep_all_matches``,
+``cep_after_match_skip`` and ``cep_group_times`` — is one NFA for
+both engines, as Flink CEP compiles every Pattern into one NFA: each
+is a single ``applyInPandas`` over the events grouped by key that
+feeds the key's rows through the streaming twin's automaton
+(streaming/cep.py::_make_am_nfa) and ranks the kept chains, so batch
+and stream agree by construction. The oracle's slot-by-slot SQL
+enumeration (queries/cep.py) and the brute-force references in
+tests/test_properties.py are the independent checks of that NFA.
+First-match and timeouts keep their DataFrame plans because they use
+FIRST-ATTEMPT semantics (the key's greedy earliest chain, never
+retried from a later start), which is not the NFA's first
+completion; strict contiguity and negatives are not features of that
+NFA.
 """
 
 from __future__ import annotations
@@ -39,12 +56,6 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_realtime_edu_spark.session import materialize
-
-# does an until() stop expression read the event's value? (decides
-# whether the valued event identity — NULL-excluded MIN-per-triple —
-# applies even without iterative conditions)
-_UNTIL_VALUE_REF = re.compile(r"\b__v\b")
 
 
 def _compile_predicate(cond: str, names: tuple[str, ...]):
@@ -397,7 +408,6 @@ def cep_all_matches(
     consecutive: set[int] | None = None,
     until: dict[int, str] | None = None,
     greedy: set[int] | None = None,
-    max_loop_slots: int = 64,
 ) -> DataFrame:
     """ALL-matches enumeration under relaxed contiguity — Flink's
     ``AfterMatchSkipStrategy.skipToNext()`` / skip-till-any-match
@@ -431,36 +441,27 @@ def cep_all_matches(
       excluded), e.g. ``"__v > vsum / vcnt"`` = "bigger than the mean
       of the chain so far".
 
-    The aggregates thread through the enumeration as four scalar
-    columns per partial — the per-slot state the slot joins already
-    carry — so the condition is a plain join conjunct, no Python and
-    no array rebuild per slot; restricting conditions to running
-    aggregates (not the raw prior-event list) is what keeps the
-    oracle exact: the identical expression text evaluates in DuckDB's
-    CTE replay, both engines folding values in chain order. The
-    pattern's very first event has no prior chain and is never
-    conditioned (a value predicate there is Flink's SimpleCondition —
-    pre-filter ``events`` instead); a chain reachable under several
-    block assignments is valid if ANY assignment satisfies every
-    condition, matching the NFA (each branch checks its own
-    assignment). Event identity stays the distinct (key, type, ts)
-    triple; ``value_col`` resolves per triple as MIN(value) so
-    duplicate rows cannot make the condition ambiguous.
+    Restricting conditions to running aggregates (not the raw
+    prior-event list) is what keeps the oracle exact: the identical
+    expression text evaluates in DuckDB's CTE replay, both engines
+    folding values in chain order. The pattern's very first event has
+    no prior chain and is never conditioned (a value predicate there
+    is Flink's SimpleCondition — pre-filter ``events`` instead); a
+    chain reachable under several block assignments is valid if ANY
+    assignment satisfies every condition. Event identity stays the
+    distinct (key, type, ts) triple; ``value_col`` resolves per
+    triple as MIN over its non-NULL duplicates, and a triple with
+    only NULL values is not a valued event at all.
 
     ``consecutive`` (optional, a set of 1-based block indices) applies
     Flink's ``consecutive()`` looping contiguity to those blocks: the
     block's 2nd..nth occurrences must be the key's IMMEDIATELY-next
     events — any intervening event of the key (any type) breaks the
-    run, exactly the documented strict-within-loop semantics. The
-    relation between the block's first occurrence and the previous
-    block stays relaxed (followedBy), as in Flink. Event positions
-    come from one per-key rank over the distinct (key, type, ts)
-    event set ordered by (ts, type) — the declared same-timestamp
-    determinism — threaded through the slot joins like the other
-    per-slot state, so a consecutive slot is one extra equality
-    conjunct (rank = previous rank + 1); blocks NOT listed default to
-    ``allowCombinations()`` (skip-till-any), the enumeration's native
-    mode.
+    run, exactly the documented strict-within-loop semantics, with
+    same-timestamp events ordered by type (the declared determinism).
+    The relation between the block's first occurrence and the previous
+    block stays relaxed (followedBy), as in Flink; blocks NOT listed
+    default to ``allowCombinations()`` (skip-till-any).
 
     UNBOUNDED LOOPING blocks — Flink's ``oneOrMore()`` /
     ``timesOrMore(m)`` — are ``(type, m, None)``: no declared upper
@@ -471,12 +472,11 @@ def cep_all_matches(
     candidate — on input b1 b2 b3, ``b.oneOrMore()`` matches {b1},
     {b1 b2}, {b1 b2 b3}, {b2}, {b2 b3}, {b3}, exactly the documented
     Flink relaxed-loop expansion (allowCombinations' subset expansion
-    applies only to FINITE ``times(m,n)`` blocks here, as before).
-    Listing an unbounded block in ``consecutive`` tightens its runs
-    to strict contiguity as usual. Iterative ``conditions`` are NOT
-    supported on unbounded blocks (candidacy must be branch-
-    independent for the run encoding; ``until`` is the supported way
-    to stop a loop on data) — a condition there raises.
+    applies only to FINITE ``times(m,n)`` blocks). Listing an
+    unbounded block in ``consecutive`` tightens its runs to strict
+    contiguity as usual. Iterative ``conditions`` are NOT supported on
+    unbounded blocks (``until`` is the supported way to stop a loop on
+    data) — a condition there raises.
 
     ``until`` (1-based block index -> SQL boolean over ``__v`` and
     the type column) is Flink's ``until()`` loop-stop condition,
@@ -491,8 +491,7 @@ def cep_all_matches(
     and a stop event AT the very timestamp of a consumed event does
     not kill (same-ts events carry no order, the declared tie rule).
     When the expression reads ``__v`` the valued event identity
-    applies (MIN over non-NULL duplicates, NULL-only triples
-    excluded) even without ``conditions``.
+    applies even without ``conditions``.
 
     ``greedy`` (a set of 1-based UNBOUNDED block indices) is Flink's
     ``greedy()`` quantifier preference: the loop consumes the
@@ -505,103 +504,32 @@ def cep_all_matches(
     combining greedy with ``consecutive`` on one block is not
     supported.
 
-    Plan: one keyed equi-join per SLOT (sum of block maxima), each
-    pruned by the ``within`` horizon AT the join — so per-key fanout
-    is bounded by events-inside-one-horizon per step, never the key's
-    history; optional slots fork via unionByName (stop ∪ extend), a
-    plan-width cost only. An UNBOUNDED block's slot count is
-    DATA-DEPENDENT, resolved before planning by one scalar aggregate:
-    the maximum contiguous-candidate run length inside any single
-    ``within`` window (stop events segment the candidate stream
-    first, so an effective ``until`` directly shrinks the plan — the
-    horizon is the hard backstop, ``until`` the data-dependent
-    bound). A resolved bound above ``max_loop_slots`` raises rather
-    than silently truncating — the same state explosion an unbounded
-    skip-till-any pattern is documented to be in Flink. All loop
-    constraints (run contiguity via one per-(key, type) rank,
-    stop-gap via one per-key next-stop timestamp, greedy maximality
-    via one per-(key, type) lead) thread through the slot joins as
-    scalar columns and plain join conjuncts — no Python in the batch
-    path. The combinatorial intermediate is the SEMANTICS of
-    all-matches enumeration (Flink pays it as NFA branch state); the
-    cap bounds the output via one window rank per key. Callers with
-    dense keys should bound ``within`` first — exactly as in Flink,
-    where an unbounded skip-till-any pattern is a documented state
-    explosion."""
-    blocks = _normalize_blocks(steps)
-    if max_matches_per_key < 1:
-        raise ValueError("max_matches_per_key must be >= 1")
-    if conditions:
-        bad = [b for b in conditions if not 1 <= b <= len(blocks)]
-        if bad:
-            raise ValueError(
-                f"condition block indices {bad} outside [1, {len(blocks)}]"
-            )
-    if consecutive:
-        bad = [b for b in consecutive if not 1 <= b <= len(blocks)]
-        if bad:
-            raise ValueError(
-                f"consecutive block indices {bad} outside [1, {len(blocks)}]"
-            )
-    unbounded = {i for i, (_, _, mx) in enumerate(blocks, 1) if mx is None}
-    if until:
-        bad = [b for b in until if b not in unbounded]
-        if bad:
-            raise ValueError(
-                f"until applies only to unbounded looping blocks "
-                f"(oneOrMore/timesOrMore); {bad} are bounded"
-            )
-    if conditions and unbounded & set(conditions):
-        raise ValueError(
-            f"iterative conditions are not supported on unbounded blocks "
-            f"{sorted(unbounded & set(conditions))}; use until to stop a "
-            f"loop on data"
-        )
-    if greedy:
-        bad = [g for g in greedy if g not in unbounded]
-        if bad:
-            raise ValueError(
-                f"greedy applies only to unbounded looping blocks; "
-                f"{bad} are bounded"
-            )
-        if len(blocks) in greedy:
-            raise ValueError(
-                "a greedy block must not be the pattern's last element "
-                "(Flink parity)"
-            )
-        if consecutive and greedy & consecutive:
-            raise ValueError(
-                f"greedy + consecutive on one block is not supported: "
-                f"{sorted(greedy & consecutive)}"
-            )
-    matches = _enumerate_matches(
-        events,
-        blocks,
-        within,
-        key_col,
-        ts_col,
-        type_col,
-        conditions=conditions or None,
-        value_col=value_col,
-        consecutive=consecutive or None,
-        until=until or None,
-        greedy=greedy or None,
-        max_loop_slots=max_loop_slots,
+    Plan: one ``applyInPandas`` over the events grouped by key, which
+    feeds each key's rows once through the streaming twin's NFA
+    (streaming/cep.py::_make_am_nfa — one automaton for both engines)
+    and ranks the kept chains. Per-key work is the NFA's: the live
+    partials inside one ``within`` horizon — the enumeration fanout
+    that is the SEMANTICS of all-matches (Flink pays it as NFA branch
+    state), so callers with dense keys should bound ``within`` first.
+    Unbounded loops run as long as the data does; no slot bound
+    exists."""
+    from flink_realtime_edu_spark.streaming.cep import (
+        _all_matches_spec,
+        _make_am_nfa,
     )
-    w = Window.partitionBy(key_col).orderBy("chain")
-    return (
-        matches.withColumn("match_no", F.row_number().over(w))
-        .filter(F.col("match_no") <= max_matches_per_key)
-        .select(
-            key_col,
-            F.col("t1").alias("start_ts"),
-            F.col("last").alias("end_ts"),
-            F.size("chain").alias("n_events"),
-            F.array_join(
-                F.transform("chain", lambda x: x.cast("string")), "|"
-            ).alias("chain_str"),
-            "match_no",
-        )
+
+    spec = _all_matches_spec(
+        steps,
+        conditions=conditions,
+        consecutive=consecutive,
+        until=until,
+        greedy=greedy,
+        type_col=type_col,
+    )
+    feed, _ = _make_am_nfa(within_us=_parse_within_us(within), **spec)
+    return _kept_matches(
+        events, [feed], spec, max_matches_per_key, key_col, ts_col,
+        type_col, value_col,
     )
 
 
@@ -636,43 +564,127 @@ def cep_group_times(
     Same output contract as cep_all_matches (chain-lexicographic
     match_no, per-key cap).
 
-    Plan: one slot-walk enumeration per repeat count (n − m + 1 plan
-    branches, a plan-width cost like the stop∪extend forks) unioned
-    and deduped on (key, chain) — no Python, no new shuffle class;
-    each branch keeps the within-pruned keyed-join shape. Unbounded
-    blocks inside a group are rejected (an unbounded loop inside a
-    repeated group multiplies two data-dependent bounds; Flink's own
-    GroupPattern support likewise excludes several modifier
-    combinations)."""
+    Plan: the cep_all_matches ``applyInPandas``, whose per-key function
+    runs the NFA once per repeat count over the flattened block list
+    and keeps the distinct chains — so the group's last block may be
+    optional (the streaming twin's single boundary-emitting NFA cannot
+    see such a completion). Unbounded blocks inside a group are
+    rejected (an unbounded loop inside a repeated group multiplies two
+    data-dependent loops; Flink's own GroupPattern support likewise
+    excludes several modifier combinations)."""
+    from flink_realtime_edu_spark.streaming.cep import (
+        _all_matches_spec,
+        _make_am_nfa,
+    )
+
     m, n = times
     if not 1 <= m <= n:
         raise ValueError(f"group times needs 1 <= m <= n, got {times}")
-    base = _normalize_blocks(group)
+    spec = _all_matches_spec(group)
+    base = spec["blocks"]
     if any(mx is None for _, _, mx in base):
         raise ValueError(
             "unbounded blocks inside a repeated group are not supported"
         )
+    within_us = _parse_within_us(within)
+    feeds = [_make_am_nfa(base * r, within_us)[0] for r in range(m, n + 1)]
+    return _kept_matches(
+        events, feeds, spec, max_matches_per_key, key_col, ts_col, type_col
+    )
+
+
+def _kept_matches(
+    events: DataFrame,
+    feeds: list,
+    spec: dict,
+    max_matches_per_key: int,
+    key_col: str,
+    ts_col: str,
+    type_col: str,
+    value_col: str = "value",
+) -> DataFrame:
+    """The batch adapter of the all-matches NFA: one ``applyInPandas``
+    over ``events`` grouped by key. Each key's rows (sorted by ts)
+    run through every ``feeds`` NFA from a fresh state with no cap;
+    the distinct kept chains rank chain-lexicographically, and the
+    first ``max_matches_per_key`` emit as (key, start_ts, end_ts,
+    n_events, chain_str, match_no).
+
+    ``spec`` is the pattern's streaming/cep.py::_all_matches_spec.
+    Without consecutive or until, events of types no block names
+    cannot change any chain, so they are filtered out before the
+    shuffle; valued patterns drop NULL-valued rows (the valued event
+    identity)."""
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle  # the vendored copy Spark serializes with
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from flink_realtime_edu_spark.streaming.cep import _sorted_rows
+
     if max_matches_per_key < 1:
         raise ValueError("max_matches_per_key must be >= 1")
-    matches: DataFrame | None = None
-    for r in range(m, n + 1):
-        part = _enumerate_matches(
-            events, base * r, within, key_col, ts_col, type_col
+    # the NFA's module pickles by value, so executor workers need no
+    # importable copy of the repo (the driver may launch from any cwd)
+    cloudpickle.register_pickle_by_value(sys.modules[_sorted_rows.__module__])
+    cols = [
+        F.col(key_col),
+        F.unix_micros(ts_col).alias("ts_us"),
+        F.col(type_col).alias("event_type"),
+    ]
+    if spec["valued"]:
+        cols.append(F.col(value_col).cast("double").alias("__v"))
+        events = events.filter(F.col(value_col).isNotNull())
+    if not spec["consecutive"] and not spec["until"]:
+        events = events.filter(
+            F.col(type_col).isin(sorted({t for t, _, _ in spec["blocks"]}))
         )
-        matches = part if matches is None else matches.unionByName(part)
-    matches = matches.dropDuplicates([key_col, "chain"])
-    w = Window.partitionBy(key_col).orderBy("chain")
+    schema = StructType(
+        [
+            events.schema[key_col],
+            StructField("start_us", LongType()),
+            StructField("end_us", LongType()),
+            StructField("n_events", IntegerType()),
+            StructField("chain_str", StringType()),
+            StructField("match_no", IntegerType()),
+        ]
+    )
+
+    def per_key(key, pdf):
+        pdf = _sorted_rows([pdf], by=("ts_us",))
+        kept = set()
+        for feed in feeds:
+            kept.update(tuple(c) for c in feed({}, pdf))
+        chains = sorted(kept)[:max_matches_per_key]
+        return pd.DataFrame(
+            {
+                key_col: [key[0]] * len(chains),
+                "start_us": [c[0] for c in chains],
+                "end_us": [c[-1] for c in chains],
+                "n_events": [len(c) for c in chains],
+                "chain_str": ["|".join(map(str, c)) for c in chains],
+                "match_no": list(range(1, len(chains) + 1)),
+            },
+            columns=schema.names,
+        )
+
     return (
-        matches.withColumn("match_no", F.row_number().over(w))
-        .filter(F.col("match_no") <= max_matches_per_key)
+        events.select(*cols)
+        .groupBy(key_col)
+        .applyInPandas(per_key, schema=schema)
         .select(
             key_col,
-            F.col("t1").alias("start_ts"),
-            F.col("last").alias("end_ts"),
-            F.size("chain").alias("n_events"),
-            F.array_join(
-                F.transform("chain", lambda x: x.cast("string")), "|"
-            ).alias("chain_str"),
+            F.timestamp_micros("start_us").alias("start_ts"),
+            F.timestamp_micros("end_us").alias("end_ts"),
+            "n_events",
+            "chain_str",
             "match_no",
         )
     )
@@ -705,406 +717,6 @@ def _normalize_blocks(
     return blocks
 
 
-def _enumerate_matches(
-    events: DataFrame,
-    blocks: list[tuple[str, int, int | None]],
-    within: str,
-    key_col: str,
-    ts_col: str,
-    type_col: str,
-    anchor_block: int | None = None,
-    anchor_kind: str = "first",
-    conditions: dict[int, str] | None = None,
-    value_col: str = "value",
-    consecutive: set[int] | None = None,
-    until: dict[int, str] | None = None,
-    greedy: set[int] | None = None,
-    max_loop_slots: int = 64,
-) -> DataFrame:
-    """The uncapped distinct-event-set match enumeration shared by
-    cep_all_matches and cep_after_match_skip: one within-pruned keyed
-    equi-join per slot, stop∪extend unions for optional slots, then
-    event-set dedup — columns (key, t1, last, chain) with chain the
-    epoch-micros event list in timestamp order.
-
-    ``anchor_block`` (1-based, for the anchored skip strategies) adds
-    an ``anchor`` column: the timestamp of the first
-    (``anchor_kind="first"``) or last (``"last"``) event the chain
-    assigns to that block — NULL when the chain consumes none of it
-    (an optional block skipped). A chain reachable under several
-    block assignments (adjacent same-type blocks) takes the MINIMUM
-    defined anchor across assignments, the declared determinism.
-
-    ``conditions`` (1-based block index -> SQL boolean over ``__v``,
-    ``vsum``, ``vcnt``, ``vmin``, ``vmax`` — see cep_all_matches)
-    threads the chain's running value aggregates through the slot
-    walk and applies each block's predicate as an extra join conjunct
-    on every slot of that block (the seed is never conditioned: no
-    prior chain exists). ``consecutive`` (1-based block indices — see
-    cep_all_matches) threads the last consumed event's per-key RANK
-    (row_number over (ts, type) on the distinct event set) and
-    requires rank = prev rank + 1 on those blocks' 2nd..nth slots.
-
-    ``until`` / ``greedy`` / unbounded blocks (``mx = None`` — see
-    cep_all_matches for the declared semantics) thread three more
-    per-event scalars through the slot walk: the per-(key, type)
-    candidate rank (``__tr``, run contiguity: rank = prev + 1 on an
-    unbounded block's 2nd..nth slots), the first stop timestamp
-    strictly after each event (``__nstop{i}``, one per until block —
-    consuming at-or-before it is the no-stop-in-gap constraint,
-    reset to NULL once the chain consumes past the loop), and the
-    next same-type candidate timestamp (``__lead``, greedy blocks —
-    the proceed conjunct keeps only maximal runs). An unbounded
-    block's slot count resolves FIRST via one scalar aggregate (max
-    stop-segmented candidate run per within window) and raises above
-    ``max_loop_slots``."""
-    valued = bool(conditions) or any(
-        _UNTIL_VALUE_REF.search(s) for s in (until or {}).values()
-    )
-    ranked = bool(consecutive)
-    until = until or {}
-    greedy = greedy or set()
-    unbounded = {i for i, (_, _, mx) in enumerate(blocks, 1) if mx is None}
-    # run contiguity via the per-(key, type) candidate rank applies to
-    # unbounded blocks unless `consecutive` already pins the stricter
-    # all-events contiguity there
-    tr_blocks = unbounded - set(consecutive or ())
-    if valued:
-        # valued-mode event identity EXCLUDES NULL-valued rows (the
-        # declared contract shared with the streaming twin, ADVICE
-        # r10): MIN over the non-null duplicates resolves the triple's
-        # value, and a triple with only NULL values is not a valued
-        # event at all — otherwise it would poison vsum downstream in
-        # batch while crashing the streaming NFA's float() coercion.
-        ev = (
-            events.filter(F.col(value_col).isNotNull())
-            .groupBy(key_col, type_col, ts_col)
-            .agg(F.min(value_col).alias("__v"))
-        )
-    else:
-        ev = events.select(key_col, type_col, ts_col).distinct()
-    if ranked:
-        ev = ev.withColumn(
-            "__r",
-            F.row_number().over(
-                Window.partitionBy(key_col).orderBy(ts_col, type_col)
-            ),
-        )
-    for i, stop_sql in until.items():
-        ev = ev.withColumn(
-            f"__stop{i}",
-            F.coalesce(F.expr(stop_sql).cast("boolean"), F.lit(False)),
-        )
-    if until:
-        ev = ev.withColumn("__us", F.unix_micros(ts_col))
-        w_after = (
-            Window.partitionBy(key_col)
-            .orderBy("__us")
-            .rangeBetween(1, Window.unboundedFollowing)
-        )
-        for i in until:
-            ev = ev.withColumn(
-                f"__nstop{i}",
-                F.min(F.when(F.col(f"__stop{i}"), F.col(ts_col))).over(
-                    w_after
-                ),
-            )
-        ev = ev.drop("__us")
-    if tr_blocks:
-        ev = ev.withColumn(
-            "__tr",
-            F.row_number().over(
-                Window.partitionBy(key_col, type_col).orderBy(ts_col)
-            ),
-        )
-    if greedy:
-        ev = ev.withColumn(
-            "__lead",
-            F.lead(ts_col).over(
-                Window.partitionBy(key_col, type_col).orderBy(ts_col)
-            ),
-        )
-    # Pin the enriched event set (scan + distinct/value resolution +
-    # rank/stop/lead windows) so its one computation feeds the seed,
-    # every slot join, and the bound job below: AQE does not
-    # stage-reuse duplicated subtrees (measured on 4.1.2 — zero
-    # ReusedExchange across all enumeration plan snapshots), so
-    # without pinning every slot reference re-scans the events table,
-    # a (slots + 2)x multiplier that grows with the pattern. Measured
-    # A/B: `git show 1ec3e6b:scripts/cep_ev_reuse_ab.py`.
-    ev = materialize(ev)
-    # resolve each unbounded block's slot count from the data: the
-    # longest contiguous candidate run inside one within-window, the
-    # candidate stream segmented at stop events first (one scalar
-    # aggregate per unbounded block — the documented bounded collect)
-    loop_slots: dict[int, int] = {}
-    if unbounded:
-        within_us = _parse_within_us(within)
-        for i in sorted(unbounded):
-            etype, mn, _ = blocks[i - 1]
-            ev_b = ev.withColumn("__cus", F.unix_micros(ts_col))
-            if i in until:
-                # a stop SEGMENTS the candidate stream only when no
-                # consumable same-type candidate shares its exact
-                # timestamp: a tied candidate lets a run cross (the
-                # declared same-ts no-kill rule — the gap conjunct is
-                # strict on both ends), so counting tied stops here
-                # would UNDERCOUNT the slot bound and silently drop
-                # long runs (caught by the property test's fixpoint
-                # brute force and the oracle's true recursion)
-                w_tie = Window.partitionBy(key_col, "__cus")
-                ev_b = ev_b.withColumn(
-                    "__brk",
-                    F.col(f"__stop{i}")
-                    & (
-                        F.max(
-                            F.when(
-                                (F.col(type_col) == etype)
-                                & ~F.col(f"__stop{i}"),
-                                F.lit(1),
-                            ).otherwise(F.lit(0))
-                        ).over(w_tie)
-                        == 0
-                    ),
-                )
-                w_seg = (
-                    Window.partitionBy(key_col)
-                    .orderBy("__cus")
-                    .rangeBetween(Window.unboundedPreceding, -1)
-                )
-                ev_b = ev_b.withColumn(
-                    "__seg",
-                    F.count(F.when(F.col("__brk"), F.lit(1))).over(w_seg),
-                )
-            else:
-                ev_b = ev_b.withColumn("__seg", F.lit(0))
-            cand = ev_b.filter(F.col(type_col) == etype)
-            if i in until:
-                cand = cand.filter(~F.col(f"__stop{i}"))
-            w_run = (
-                Window.partitionBy(key_col, "__seg")
-                .orderBy("__cus")
-                .rangeBetween(0, within_us)
-            )
-            row = (
-                cand.select(F.count(F.lit(1)).over(w_run).alias("__rl"))
-                .agg(F.max("__rl").alias("b"))
-                .first()
-            )
-            bound = int(row["b"] or 0)
-            if bound > max_loop_slots:
-                raise ValueError(
-                    f"unbounded block {i} ({etype!r}) resolves to runs of "
-                    f"up to {bound} candidates inside one '{within}' "
-                    f"window (> max_loop_slots={max_loop_slots}); tighten "
-                    f"within, add/strengthen until, or raise max_loop_slots"
-                )
-            loop_slots[i] = max(bound, mn, 1)
-    horizon = F.col("t1") + F.expr(f"INTERVAL {within}")
-    anchored = anchor_block is not None
-    _VAL_COLS = ("vsum", "vcnt", "vmin", "vmax")
-
-    def extend(
-        partials: DataFrame,
-        b1: int,
-        slot: int,
-        etype: str,
-        in_anchor: bool,
-        cond: str | None,
-        consec_slot: bool,
-    ) -> DataFrame:
-        sel = [F.col(key_col).alias("__k"), F.col(ts_col).alias("__ts")]
-        if valued:
-            sel.append(F.col("__v"))
-        if ranked:
-            sel.append(F.col("__r"))
-        if b1 in tr_blocks:
-            sel.append(F.col("__tr"))
-        for i in until:
-            if b1 == i:
-                sel.append(F.col(f"__stop{i}"))
-            if b1 <= i:
-                sel.append(F.col(f"__nstop{i}"))
-        if b1 in greedy:
-            sel.append(F.col("__lead"))
-        ev_s = ev.filter(F.col(type_col) == etype).select(*sel)
-        cols = [
-            F.col(key_col),
-            F.col("t1"),
-            F.col("__ts").alias("last"),
-            F.concat(F.col("chain"), F.array(F.unix_micros("__ts"))).alias(
-                "chain"
-            ),
-        ]
-        if anchored:
-            if not in_anchor:
-                cols.append(F.col("anchor"))
-            elif anchor_kind == "first":
-                cols.append(F.coalesce("anchor", "__ts").alias("anchor"))
-            else:
-                cols.append(F.col("__ts").alias("anchor"))
-        if valued:
-            cols += [
-                (F.col("vsum") + F.col("__v")).alias("vsum"),
-                (F.col("vcnt") + F.lit(1)).alias("vcnt"),
-                F.least("vmin", "__v").alias("vmin"),
-                F.greatest("vmax", "__v").alias("vmax"),
-            ]
-        if ranked:
-            cols.append(F.col("__r").alias("lastr"))
-        # loop-state threading: set while the constraint can still
-        # bind, reset to NULL the moment the chain consumes past it
-        if tr_blocks:
-            cols.append(
-                (
-                    F.col("__tr")
-                    if b1 in tr_blocks
-                    else F.lit(None).cast("integer")
-                ).alias("lasttr")
-            )
-        for i in until:
-            cols.append(
-                (
-                    F.col(f"__nstop{i}")
-                    if b1 <= i
-                    else F.lit(None).cast("timestamp")
-                ).alias(f"lastns{i}")
-            )
-        for g in sorted(greedy):
-            cols.append(
-                (
-                    F.col("__lead")
-                    if b1 == g
-                    else F.lit(None).cast("timestamp")
-                ).alias(f"lastlead{g}")
-            )
-        on = (
-            (partials[key_col] == ev_s["__k"])
-            & (F.col("__ts") > F.col("last"))
-            & (F.col("__ts") <= horizon)
-        )
-        if cond is not None:
-            on = on & F.expr(cond)
-        if consec_slot:
-            on = on & (F.col("__r") == F.col("lastr") + 1)
-        if b1 in tr_blocks and slot > 1:
-            # relaxed-loop run contiguity: never skip a same-type
-            # candidate mid-run
-            on = on & (F.col("__tr") == F.col("lasttr") + 1)
-        for i in until:
-            if b1 == i:
-                # the loop never consumes a stop event
-                on = on & ~F.col(f"__stop{i}")
-            if b1 >= i:
-                # no stop event strictly inside the gap (<= keeps the
-                # declared same-ts tie rule: an equal-ts stop has no
-                # order against the consumed event)
-                on = on & (
-                    F.col(f"lastns{i}").isNull()
-                    | (F.col("__ts") <= F.col(f"lastns{i}"))
-                )
-        for g in sorted(greedy):
-            if b1 > g:
-                # greedy maximality at proceed: the run's next
-                # candidate must not have been consumable
-                on = on & (
-                    F.col(f"lastlead{g}").isNull()
-                    | (F.col(f"lastlead{g}") > horizon)
-                    | (F.col(f"lastlead{g}") >= F.col("__ts"))
-                )
-        return partials.join(ev_s, on).select(*cols)
-
-    first_type = blocks[0][0]
-    seed_cols = [
-        F.col(key_col),
-        F.col(ts_col).alias("t1"),
-        F.col(ts_col).alias("last"),
-        F.array(F.unix_micros(ts_col)).alias("chain"),
-    ]
-    if anchored:
-        seed_cols.append(
-            F.col(ts_col).alias("anchor")
-            if anchor_block == 1
-            else F.lit(None).cast("timestamp").alias("anchor")
-        )
-    if valued:
-        seed_cols += [
-            F.col("__v").alias("vsum"),
-            F.lit(1).alias("vcnt"),
-            F.col("__v").alias("vmin"),
-            F.col("__v").alias("vmax"),
-        ]
-    if ranked:
-        seed_cols.append(F.col("__r").alias("lastr"))
-    if tr_blocks:
-        seed_cols.append(
-            (
-                F.col("__tr") if 1 in tr_blocks else F.lit(None).cast("integer")
-            ).alias("lasttr")
-        )
-    for i in until:
-        # the seed consumes block 1 <= i, so the next-stop boundary is
-        # live from the very first event
-        seed_cols.append(F.col(f"__nstop{i}").alias(f"lastns{i}"))
-    for g in sorted(greedy):
-        seed_cols.append(
-            (
-                F.col("__lead") if g == 1 else F.lit(None).cast("timestamp")
-            ).alias(f"lastlead{g}")
-        )
-    seed_src = ev.filter(F.col(type_col) == first_type)
-    if 1 in until:
-        # an unbounded first block's seed is its loop's first take —
-        # a stop event is never consumable
-        seed_src = seed_src.filter(~F.col("__stop1"))
-    cur = seed_src.select(*seed_cols)
-    for b, (etype, mn, mx) in enumerate(blocks):
-        b1 = b + 1
-        in_anchor = anchored and b1 == anchor_block
-        cond = (conditions or {}).get(b1)
-        consec = ranked and b1 in consecutive
-        mx_eff = loop_slots[b1] if mx is None else mx
-        stopped: DataFrame | None = None
-        for slot in range(1, mx_eff + 1):
-            if b == 0 and slot == 1:
-                continue  # consumed by the seed projection above
-            if slot > mn:
-                # the partial may stop taking this block's events here
-                stopped = (
-                    cur if stopped is None else stopped.unionByName(cur)
-                )
-            # consecutive binds a block's 2nd..nth occurrences to the
-            # key's immediately-next events; the block's FIRST
-            # occurrence relates to the previous block relaxedly
-            cur = extend(
-                cur, b1, slot, etype, in_anchor, cond, consec and slot > 1
-            )
-        if stopped is not None:
-            cur = cur.unionByName(stopped)
-
-    if valued:
-        cur = cur.drop(*_VAL_COLS)
-    if ranked:
-        cur = cur.drop("lastr")
-    if tr_blocks:
-        cur = cur.drop("lasttr")
-    for i in until:
-        cur = cur.drop(f"lastns{i}")
-    for g in sorted(greedy):
-        cur = cur.drop(f"lastlead{g}")
-    if not anchored:
-        return cur.dropDuplicates([key_col, "chain"])
-    # distinct-event-set dedup that keeps the anchor: min over the
-    # (rare) multiple block assignments of the same chain; F.min
-    # ignores NULLs, so an assignment that skips the block never
-    # shadows one that defines the anchor.
-    return cur.groupBy(key_col, "chain").agg(
-        F.min("t1").alias("t1"),
-        F.min("last").alias("last"),
-        F.min("anchor").alias("anchor"),
-    ).select(key_col, "t1", "last", "chain", "anchor")
-
-
 def cep_after_match_skip(
     events: DataFrame,
     steps: list[str | tuple[str, int, int]],
@@ -1118,32 +730,26 @@ def cep_after_match_skip(
 ) -> DataFrame:
     """Flink's ``AfterMatchSkipStrategy`` over the all-matches
     enumeration — completes the Pattern-API skip-strategy enum that
-    r7's ``cep_all_matches`` opened (its NO_SKIP mode):
+    r7's ``cep_all_matches`` opened (its NO_SKIP mode). Every strategy
+    is defined in COMPLETION order, the order Flink's NFA emits in;
+    a key's completions at one end timestamp emit together, judged
+    against the strategy memory in force before that timestamp:
 
     - ``"no_skip"``: every distinct event-set chain (delegates to
       ``cep_all_matches``).
     - ``"skip_to_next"``: after a match starting at event e emits,
       every other partial starting at e is discarded — so the kept
-      match per (key, start event) is the first-EMITTED one, and
-      Flink's NFA emits in COMPLETION order: the chain with the
-      earliest last event wins (ties on the end timestamp broken
-      chain-lexicographically, a declared determinism Flink leaves
-      to NFA internals). Pure window selection: one row_number over
-      (key, t1) ordered by (last, chain) — fully declarative, no
-      Python.
+      match per (key, start event) is the first-EMITTED one: the chain
+      with the earliest last event wins (ties on the end timestamp
+      broken chain-lexicographically, a declared determinism Flink
+      leaves to NFA internals).
     - ``"skip_past_last_event"``: after a match emits, every partial
       that started at-or-before its last event is discarded, so
-      matching resumes past the match — declared deterministically
-      as: walk each key's distinct completion timestamps in order;
-      at each, emit every surviving match ending there (start
-      strictly after the previously emitted completion timestamp);
-      if any emitted, that timestamp becomes the new resume point.
-      The walk is an inherently sequential per-key recurrence (the
-      keep-set depends on a running maximum over kept rows — not
-      window-expressible), so it runs as ONE Arrow-batched
-      applyInPandas over the enumeration, grouped by key: per-key
-      state is the horizon-and-cap-bounded match list, never the
-      key's raw history.
+      matching resumes past the match: walking a key's distinct
+      completion timestamps in order, every surviving match ending
+      there (start strictly after the previously emitted completion
+      timestamp) emits, and if any emitted, that timestamp becomes the
+      new resume point.
     - ``"skip_to_first"`` / ``"skip_to_last"`` (require ``skip_block``,
       the 1-based index of the pattern element Flink's
       ``skipToFirst("p")`` / ``skipToLast("p")`` name): after a match
@@ -1151,16 +757,11 @@ def cep_after_match_skip(
       but BEFORE the first/last event the match assigned to that
       block is discarded — partials started before the match's start
       survive (Flink's documented interval, narrower than
-      skip_past_last's). Declared deterministically as a
-      completion-order walk accumulating half-open DISCARD INTERVALS
-      ``[match_start, anchor)`` from each kept match (same-end ties
-      emit together before their intervals apply, as in the NFA); a
-      chain that assigns no event to the block — an optional block
-      skipped — contributes no interval, and a chain reachable under
-      several block assignments anchors at the minimum defined
-      timestamp. The walk's keep-set depends on the running interval
-      union, so like skip_past_last it runs as ONE Arrow-batched
-      applyInPandas over the bounded match list. ``skip_to_first`` of
+      skip_past_last's). Kept matches accumulate half-open DISCARD
+      INTERVALS ``[match_start, anchor)``; a chain that assigns no
+      event to the block — an optional block skipped — contributes no
+      interval, and a chain reachable under several block assignments
+      anchors at the minimum defined timestamp. ``skip_to_first`` of
       block 1 anchors every match at its own start — an empty
       interval, i.e. NO_SKIP (the degenerate case Flink rejects at
       pattern-compile time; benign here).
@@ -1168,21 +769,13 @@ def cep_after_match_skip(
     Output schema matches ``cep_all_matches``: (key, start_ts,
     end_ts, n_events, chain_str, match_no) with match_no the
     chain-lexicographic rank among KEPT matches, capped at
-    ``max_matches_per_key``. The DuckDB oracle replays no_skip /
+    ``max_matches_per_key``. Plan: the cep_all_matches
+    ``applyInPandas``; the NFA applies the strategy online, exactly as
+    the streaming twin does. The DuckDB oracle replays no_skip /
     skip_to_next as window SQL and the three walk strategies as
-    recursive CTEs over the identical enumeration (queries/cep.py —
-    skip_to_first/skip_to_last thread the interval list through the
-    recursion), so all five strategies carry exact value checks."""
-    strategies = (
-        "no_skip",
-        "skip_to_next",
-        "skip_past_last_event",
-        "skip_to_first",
-        "skip_to_last",
-    )
-    if strategy not in strategies:
-        raise ValueError(f"strategy must be one of {strategies}")
-    anchored = strategy in ("skip_to_first", "skip_to_last")
+    recursive CTEs over a slot-by-slot enumeration (queries/cep.py),
+    so all five strategies carry exact value checks against an
+    independent implementation."""
     if strategy == "no_skip":
         return cep_all_matches(
             events,
@@ -1193,126 +786,15 @@ def cep_after_match_skip(
             ts_col=ts_col,
             type_col=type_col,
         )
-    blocks = _normalize_blocks(steps)
-    if any(mx is None for _, _, mx in blocks):
-        raise ValueError(
-            "unbounded looping blocks (oneOrMore/timesOrMore) are "
-            "supported through cep_all_matches (the no_skip strategy) "
-            "only; pass a finite times(m, n) here"
-        )
-    if max_matches_per_key < 1:
-        raise ValueError("max_matches_per_key must be >= 1")
-    if anchored:
-        if skip_block is None or not 1 <= skip_block <= len(blocks):
-            raise ValueError(
-                "skip_to_first/skip_to_last need skip_block in "
-                f"[1, {len(blocks)}], got {skip_block!r}"
-            )
-    elif skip_block is not None:
-        raise ValueError(f"{strategy} does not take skip_block")
-    matches = _enumerate_matches(
-        events,
-        blocks,
-        within,
-        key_col,
-        ts_col,
-        type_col,
-        anchor_block=skip_block if anchored else None,
-        anchor_kind="first" if strategy == "skip_to_first" else "last",
+    from flink_realtime_edu_spark.streaming.cep import (
+        _all_matches_spec,
+        _make_am_nfa,
     )
 
-    if strategy == "skip_to_next":
-        # completion order first (Flink emits the earliest-ENDING
-        # chain from a start, e.g. (t1,4,5) beats (t1,2,9)), chain as
-        # the declared tie-break for same-end enumerations
-        per_start = Window.partitionBy(key_col, "t1").orderBy("last", "chain")
-        kept = (
-            matches.withColumn("__sr", F.row_number().over(per_start))
-            .filter(F.col("__sr") == 1)
-            .drop("__sr")
-        )
-    elif anchored:  # skip_to_first / skip_to_last
-        import pandas as pd
-
-        def interval_walk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # completion-order walk accumulating discard intervals
-            # [match_start, anchor) from kept matches; same-end ties
-            # are judged against the intervals in force when their
-            # end's batch opened, then contribute their own
-            rows = sorted(
-                range(len(pdf)),
-                key=lambda i: (
-                    pdf["last"].iloc[i],
-                    tuple(pdf["chain"].iloc[i]),
-                ),
-            )
-            keep: list[int] = []
-            intervals: list[tuple] = []  # half-open [lo, hi)
-            i = 0
-            while i < len(rows):
-                end = pdf["last"].iloc[rows[i]]
-                batch = []
-                while i < len(rows) and pdf["last"].iloc[rows[i]] == end:
-                    r = rows[i]
-                    t1 = pdf["t1"].iloc[r]
-                    if not any(lo <= t1 < hi for lo, hi in intervals):
-                        batch.append(r)
-                    i += 1
-                for r in batch:
-                    keep.append(r)
-                    a = pdf["anchor"].iloc[r]
-                    if not pd.isna(a) and a > pdf["t1"].iloc[r]:
-                        intervals.append((pdf["t1"].iloc[r], a))
-            return pdf.iloc[keep]
-
-        kept = matches.groupBy(key_col).applyInPandas(
-            interval_walk, schema=matches.schema
-        ).drop("anchor")
-    else:  # skip_past_last_event
-        import pandas as pd
-
-        def greedy(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # completion-order walk; chains tie-break equal ends
-            rows = sorted(
-                range(len(pdf)),
-                key=lambda i: (
-                    pdf["last"].iloc[i],
-                    tuple(pdf["chain"].iloc[i]),
-                ),
-            )
-            keep: list[int] = []
-            resume = None  # end ts of the last emitted batch
-            i = 0
-            while i < len(rows):
-                end = pdf["last"].iloc[rows[i]]
-                batch = []
-                while i < len(rows) and pdf["last"].iloc[rows[i]] == end:
-                    if resume is None or pdf["t1"].iloc[rows[i]] > resume:
-                        batch.append(rows[i])
-                    i += 1
-                if batch:
-                    keep.extend(batch)
-                    resume = end
-            return pdf.iloc[keep]
-
-        kept = matches.groupBy(key_col).applyInPandas(
-            greedy, schema=matches.schema
-        )
-
-    w = Window.partitionBy(key_col).orderBy("chain")
-    return (
-        kept.withColumn("match_no", F.row_number().over(w))
-        .filter(F.col("match_no") <= max_matches_per_key)
-        .select(
-            key_col,
-            F.col("t1").alias("start_ts"),
-            F.col("last").alias("end_ts"),
-            F.size("chain").alias("n_events"),
-            F.array_join(
-                F.transform("chain", lambda x: x.cast("string")), "|"
-            ).alias("chain_str"),
-            "match_no",
-        )
+    spec = _all_matches_spec(steps, strategy, skip_block, type_col=type_col)
+    feed, _ = _make_am_nfa(within_us=_parse_within_us(within), **spec)
+    return _kept_matches(
+        events, [feed], spec, max_matches_per_key, key_col, ts_col, type_col
     )
 
 

@@ -26,19 +26,16 @@ stream ≡ batch by tests/test_streaming.py + property tests:
   partial list, bounded by one ``within`` horizon of starts plus a
   done marker per emitted key.
 - :func:`cep_all_matches_stream` — the skip-till-any-match NFA with
-  the full after-match skip enum (r8): the partial set IS the batch
-  enumeration's fork tree, strategies apply online in completion
-  order, and state is bounded by one horizon's enumeration fanout
-  plus self-pruning strategy memory; r9 adds ITERATIVE CONDITIONS
-  (per-block predicates over the chain's running value aggregates,
-  the live face of ``cep_all_matches(conditions=...)``); r10 adds
-  UNBOUNDED looping blocks with ``until`` stop conditions and
-  ``greedy`` maximal-run selection (per-(key, type) candidate
-  sequences, horizon-pruned stop timestamp lists, and lazy exit
-  deadlines in the same state row — the NFA loops as long as the
-  data does, cross-checking the batch side's data-dependent slot
-  bound), with condition/stop SQL strings compiled through the
-  shared restricted grammar so one spec drives both engines.
+  the full after-match skip enum, iterative conditions, looping
+  contiguity, unbounded loops with ``until`` and ``greedy`` (and
+  pattern groups via :func:`cep_group_times_stream`). Its core,
+  :func:`_make_am_nfa`, is GroupState-free: the batch operators
+  (operators/cep.py::cep_all_matches / cep_after_match_skip /
+  cep_group_times) run the SAME automaton over each key's history,
+  so this pair is stream ≡ batch by construction; the streaming
+  adapter only keeps the NFA state as one json row and arms the
+  sweep timer. State is bounded by one horizon's enumeration fanout
+  plus self-pruning strategy memory.
 
 All five require arrival order to respect event-time order per key
 ACROSS micro-batches (the testable contract: an ordered replay makes
@@ -49,10 +46,11 @@ key's SAME-TIMESTAMP events inside one micro-batch: the batch twin
 treats them as simultaneous (distinct (key, type, ts) identity,
 same-end ties emitted together), which is unobservable if the group
 splits across triggers. WITHIN a micro-batch no order is assumed: each state fn
-concatenates every Arrow chunk of its key and sorts once on
-(ts, tiebreak) — chunk-local sorting would silently consume events
-out of order for keys exceeding arrow.maxRecordsPerBatch rows per
-batch (pinned by a small-maxRecordsPerBatch stream≡batch test).
+reads its key's rows through :func:`_sorted_rows`, which concatenates
+every Arrow chunk and sorts once on (ts, tiebreak) — chunk-local
+sorting would silently consume events out of order for keys exceeding
+arrow.maxRecordsPerBatch rows per batch (pinned by a
+small-maxRecordsPerBatch stream≡batch test).
 
 Scale: state per key is a few scalars (or ≤ k−1 events for strict
 mode); matching work is O(batch rows); outputs stream in append
@@ -69,21 +67,26 @@ completion horizon (never while an in-horizon completion is still
 admissible) — so state really is bounded by one max(ttl, within)
 horizon of active keys, partials included, and callers that want
 aligned per-window re-matching can bucket the key by window instead.
-The sort-once concat holds a single key's single micro-batch in
-memory — bounded by per-key batch volume, not stream length.
 """
 
 from __future__ import annotations
 
+import json
 import re
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from flink_realtime_edu_spark.operators.cep import _parse_within_us
+from flink_realtime_edu_spark.operators.cep import (
+    _normalize_blocks,
+    _parse_within_us,
+    _split_negatives,
+    compile_condition,
+    compile_stop,
+)
 
 CEP_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, end_us BIGINT, duration_s DOUBLE"
@@ -93,6 +96,23 @@ CEP_TO_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, last_us BIGINT, "
     "matched_steps INT, timed_out BOOLEAN"
 )
+
+
+def _sorted_rows(
+    pdf_iter: Iterable[pd.DataFrame], by: tuple[str, ...] = ("ts_us", "__tb")
+) -> pd.DataFrame:
+    """One key's rows of one call, every Arrow chunk concatenated and
+    sorted ONCE on ``by``. A key's micro-batch arrives as several
+    Arrow chunks (arrow.maxRecordsPerBatch) in shuffle order: sorting
+    each chunk alone is not a global sort and would let an automaton
+    consume events out of event-time order for keys above that many
+    rows per batch. The sort holds a single key's single call in
+    memory — bounded by per-key batch volume, not stream length."""
+    chunks = list(pdf_iter)
+    if not chunks:
+        return pd.DataFrame(columns=["ts_us", "event_type", "__v"])
+    return pd.concat(chunks, ignore_index=True).sort_values(list(by))
+
 
 
 def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):
@@ -138,19 +158,7 @@ def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):
             step_idx, t1_us, tprev_us, done = 0, None, None, False
         out = []
         if not done:
-            # A key's micro-batch arrives as MULTIPLE Arrow chunks
-            # (arrow.maxRecordsPerBatch) in shuffle order — sorting
-            # each chunk alone is NOT a global sort and would let the
-            # automaton consume events out of event-time order for
-            # keys with >10k rows/batch. Concatenate, then sort ONCE
-            # (per-key-per-batch rows are bounded in practice).
-            chunks = list(pdf_iter)
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values(["ts_us", "__tb"])
-                if chunks
-                else pd.DataFrame(columns=["ts_us", "event_type"])
-            )
+            pdf = _sorted_rows(pdf_iter)
             for ts_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
                 if etype != steps[step_idx]:
                     continue
@@ -302,16 +310,7 @@ def _make_cep_to_fn(steps: list[str], within_us: int):
                 )
             return
         if not done:
-            # Global per-key sort across ALL Arrow chunks of the
-            # micro-batch (chunk-local sorts are not a global order —
-            # see _make_cep_fn).
-            chunks = list(pdf_iter)
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values(["ts_us", "__tb"])
-                if chunks
-                else pd.DataFrame(columns=["ts_us", "event_type"])
-            )
+            pdf = _sorted_rows(pdf_iter)
             for ts_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
                 if etype != steps[step_idx]:
                     continue
@@ -557,13 +556,7 @@ def _make_cep_nfb_fn(
             return
 
         if not done:
-            chunks = list(pdf_iter)
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values(["ts_us", "__tb"])
-                if chunks
-                else pd.DataFrame(columns=["ts_us", "event_type"])
-            )
+            pdf = _sorted_rows(pdf_iter)
             rows = list(zip(pdf["ts_us"], pdf["event_type"]))
             i = 0
             while i < len(rows) and not done:
@@ -692,8 +685,6 @@ def cep_not_followed_by_stream(
     emissions. ``done_ttl`` (optional) evicts the done marker once
     the watermark passes the emitted chain's end + ttl — first match
     per TTL window, same contract as cep_first_match_stream's."""
-    from flink_realtime_edu_spark.operators.cep import _split_negatives
-
     pos, neg = _split_negatives(steps)
     within_us = _parse_within_us(within)
     ttl_us = None if done_ttl is None else _parse_within_us(done_ttl)
@@ -723,113 +714,242 @@ CEP_AM_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, end_us BIGINT, "
     "n_events INT, chain_str STRING"
 )
-CEP_AM_STATE_SCHEMA = "js STRING"  # json-encoded NFA state, see fn
+CEP_AM_STATE_SCHEMA = "js STRING"  # json-encoded NFA state, see _make_am_nfa
+
+_AM_STRATEGIES = (
+    "no_skip",
+    "skip_to_next",
+    "skip_past_last_event",
+    "skip_to_first",
+    "skip_to_last",
+)
 
 
-def _make_cep_am_fn(
+def _all_matches_spec(
+    steps: list[str | tuple[str, int, int | None]],
+    strategy: str = "no_skip",
+    skip_block: int | None = None,
+    conditions: dict | None = None,
+    consecutive: set[int] | None = None,
+    until: dict[int, str] | None = None,
+    greedy: set[int] | None = None,
+    type_col: str = "event_type",
+) -> dict:
+    """Validate an all-matches pattern — the one parameter contract of
+    the batch operators and the stream — and compile its condition and
+    stop strings through the shared restricted grammar, so one spec
+    string drives both engines (callable conditions pass through).
+    Returns the pattern keywords of :func:`_make_am_nfa`."""
+    blocks = _normalize_blocks(steps)
+    if strategy not in _AM_STRATEGIES:
+        raise ValueError(f"strategy must be one of {_AM_STRATEGIES}")
+    if strategy in ("skip_to_first", "skip_to_last"):
+        if skip_block is None or not 1 <= skip_block <= len(blocks):
+            raise ValueError(
+                "skip_to_first/skip_to_last need skip_block in "
+                f"[1, {len(blocks)}], got {skip_block!r}"
+            )
+    elif skip_block is not None:
+        raise ValueError(f"{strategy} does not take skip_block")
+    for what, idx in (("condition", conditions), ("consecutive", consecutive)):
+        bad = [b for b in idx or () if not 1 <= b <= len(blocks)]
+        if bad:
+            raise ValueError(
+                f"{what} block indices {bad} outside [1, {len(blocks)}]"
+            )
+    unbounded = {i for i, (_, _, mx) in enumerate(blocks, 1) if mx is None}
+    if unbounded and strategy != "no_skip":
+        raise ValueError(
+            "unbounded looping blocks (oneOrMore/timesOrMore) are "
+            "supported through cep_all_matches (the no_skip strategy) "
+            "only; pass a finite times(m, n) here"
+        )
+    if until:
+        bad = [b for b in until if b not in unbounded]
+        if bad:
+            raise ValueError(
+                f"until applies only to unbounded looping blocks "
+                f"(oneOrMore/timesOrMore); {bad} are bounded"
+            )
+    if conditions and unbounded & set(conditions):
+        raise ValueError(
+            f"iterative conditions are not supported on unbounded blocks "
+            f"{sorted(unbounded & set(conditions))}; use until to stop a "
+            f"loop on data"
+        )
+    if greedy:
+        bad = [g for g in greedy if g not in unbounded]
+        if bad:
+            raise ValueError(
+                f"greedy applies only to unbounded looping blocks; "
+                f"{bad} are bounded"
+            )
+        if len(blocks) in greedy:
+            raise ValueError(
+                "a greedy block must not be the pattern's last element "
+                "(Flink parity)"
+            )
+        if consecutive and greedy & consecutive:
+            raise ValueError(
+                f"greedy + consecutive on one block is not supported: "
+                f"{sorted(greedy & consecutive)}"
+            )
+    until = until or {}
+    return {
+        "blocks": blocks,
+        "strategy": strategy,
+        "skip_block": skip_block,
+        "conditions": {
+            b: compile_condition(c) if isinstance(c, str) else c
+            for b, c in (conditions or {}).items()
+        },
+        "consecutive": set(consecutive or ()),
+        "until": {b: compile_stop(s, type_col) for b, s in until.items()},
+        "greedy": set(greedy or ()),
+        # a stop string that reads the value switches on the valued
+        # event identity even without conditions
+        "valued": bool(conditions)
+        or any(re.search(r"\b__v\b", s) for s in until.values()),
+    }
+
+
+def _am_state_load(js: str) -> dict:
+    """One json state row -> the :func:`_make_am_nfa` state dict. The
+    row keys each partial as "b|taken|c1,c2,.."; in memory the key is
+    the tuple (chain, b, taken), so the NFA never parses strings."""
+    st = json.loads(js)
+    parts = {}
+    for s, val in st["p"].items():
+        b, taken, cs = s.split("|")
+        parts[(tuple(int(x) for x in cs.split(",")), int(b), int(taken))] = val
+    st["p"] = parts
+    return st
+
+
+def _am_state_dump(st: dict) -> str:
+    """The inverse of :func:`_am_state_load`."""
+    parts = {
+        f"{b}|{taken}|{','.join(map(str, chain))}": val
+        for (chain, b, taken), val in st["p"].items()
+    }
+    return json.dumps({**st, "p": parts})
+
+
+def _make_am_nfa(
     blocks: list[tuple[str, int, int | None]],
     within_us: int,
-    strategy: str,
-    skip_block: int | None,
-    cap: int | None,
+    strategy: str = "no_skip",
+    skip_block: int | None = None,
+    cap: int | None = None,
     conditions: dict | None = None,
     consecutive: set[int] | None = None,
     until: dict | None = None,
     greedy: set[int] | None = None,
-    until_reads_value: bool = False,
+    valued: bool = False,
     complete_at: set[int] | None = None,
 ):
-    """State fn for streaming ALL-matches CEP with after-match skip
-    strategies — the live twin of operators/cep.py::cep_after_match_skip.
+    """The skip-till-any-match NFA of the all-matches family with the
+    full after-match skip enum — the one automaton behind both
+    engines, free of GroupState. Returns two functions over a key's
+    state dict ``st`` (``{}`` for a fresh key; stored as one json row
+    through :func:`_am_state_dump` / :func:`_am_state_load`):
 
-    The per-key state is the literal skip-till-any-match NFA partial
-    set: each partial is (chain, block, taken[, anchor]) and an event
-    FORKS extensions (the no-take branch is the surviving original),
-    exactly the batch enumeration's stop∪extend slot walk. Identical
-    chains reachable under several block assignments collapse in the
-    partial dict (anchor = min over assignments, as in batch), and a
-    chain's completions all happen at its last TIMESTAMP — events are
-    processed in same-timestamp GROUPS (distinct types per ts, the
-    batch twin's (key, type, ts) identity), completions dedup by
-    chain across the whole group, and strategy memory judges a
-    group's candidates as one same-end batch (ADVICE r9: one-at-a-time
-    processing double-emitted chains completable through two same-ts
-    events and let the first completion's memory suppress same-end
-    ties the batch walk keeps). Skip strategies are ONLINE by
-    construction — Flink defines them in completion order, which is
-    exactly arrival order here:
-    skip_to_next remembers emitted starts, skip_past_last_event a
-    resume point, skip_to_first/skip_to_last the discard-interval
-    list; each memory self-prunes once the event time passes its
-    relevance (a future start can never land inside an interval whose
-    end precedes it).
+    - ``feed(st, pdf)`` advances ``st`` over the key's rows (columns
+      ``ts_us``, ``event_type`` and, valued, ``__v``; sorted by
+      ``ts_us``, see :func:`_sorted_rows`) and returns the chains kept
+      in emission order, each a tuple of epoch-micros;
+    - ``prune(st, ts)`` drops the partials and strategy memory that
+      nothing arriving at >= ts can extend or collide with (the
+      streaming adapter calls it when the watermark passes).
+
+    The streaming adapter (:func:`_make_cep_am_fn`) feeds each
+    micro-batch and keeps ``st`` in the state store between them; the
+    batch operators (operators/cep.py) feed each key's whole history
+    once, into a fresh dict. Any split of a key's rows that keeps each
+    same-timestamp group in one call yields the same kept chains as
+    one call (pinned by a Hypothesis property).
+
+    The state is the literal NFA partial set: each partial is (chain,
+    block, taken[, anchor]) and an event FORKS extensions (the no-take
+    branch is the surviving original). Identical chains reachable
+    under several block assignments collapse in the partial dict
+    (anchor = min over assignments), and a chain's completions all
+    happen at its last TIMESTAMP — events are processed in
+    same-timestamp GROUPS (distinct types per ts: events are distinct
+    (key, type, ts) triples), completions dedup by chain across the
+    whole group, and strategy memory judges a group's candidates as
+    one same-end batch (one-at-a-time processing double-emitted chains
+    completable through two same-ts events and let the first
+    completion's memory suppress same-end ties). Skip strategies are
+    ONLINE by construction — Flink defines them in completion order,
+    which is arrival order here: skip_to_next remembers emitted
+    starts, skip_past_last_event a resume point, skip_to_first /
+    skip_to_last the discard-interval list; each memory self-prunes
+    once the event time passes its relevance (a future start can never
+    land inside an interval whose end precedes it).
 
     State is bounded by the enumeration fanout inside ONE ``within``
     horizon per key — the same documented explosion as Flink's
-    skip-till-any-match NFA — plus the self-pruning strategy memory;
-    an event-time timer sweeps keys whose horizons all closed. With a
-    ``cap``, a key that emitted anything keeps a compact counter row
-    after quiescence (no timer) so the cap stays per-key TOTAL like
-    the batch operator's, not per-activity-burst (ADVICE r9).
-    Serialized as one json string (variable-length chains).
+    skip-till-any-match NFA — plus the self-pruning strategy memory.
+    ``cap`` stops emission once the key's state counted that many
+    matches (emission order; the batch operators pass None and cap
+    chain-lexicographically afterwards).
 
     ``conditions`` (1-based block index -> ``(v, vsum, vcnt, vmin,
-    vmax) -> bool``) is the live face of the batch operator's
-    ITERATIVE CONDITIONS: each partial carries the chain's running
-    value aggregates, a candidate consumption checks its block's
-    predicate against them (the seed is never conditioned), and a
-    same-ts group resolves duplicate (type, ts) values MIN-first —
-    the batch identity. Python callables here (the automaton is
-    already per-event Python) mirror the batch side's SQL strings;
-    the stream ≡ batch test passes an equivalent pair.
+    vmax) -> bool``) are ITERATIVE CONDITIONS: each partial carries
+    the chain's running value aggregates, a candidate consumption
+    checks its block's predicate against them (the seed is never
+    conditioned), and a same-ts group resolves duplicate (type, ts)
+    values MIN-first.
 
-    ``consecutive`` (1-based block indices) is the live face of the
-    batch looping contiguity: the state carries a per-key arrival
-    SEQUENCE counter over distinct (type, ts) events (same-ts group
-    members numbered in type order — exactly the batch rank's
-    (ts, type) order under the in-order arrival contract), each
-    partial remembers its last consumed sequence number, and a
+    ``consecutive`` (1-based block indices) is looping contiguity: the
+    state carries a per-key arrival SEQUENCE counter over distinct
+    (type, ts) events (same-ts group members numbered in type order),
+    each partial remembers its last consumed sequence number, and a
     consecutive block's 2nd..nth consumption requires seq = last + 1.
     The counter lives only while the key's row does; an era restart
     after full quiescence is sound because adjacency is a DIFFERENCE
     and no live chain can span a fully-drained gap.
 
     ``until`` (1-based unbounded block index -> ``(v, event_type) ->
-    bool``) / ``greedy`` / unbounded blocks (``mx = None``) are the
-    live faces of the r10 batch features: an unbounded block's run
-    contiguity rides per-(key, TYPE) candidate sequences (``st["tq"]``
-    — same era-restart argument as the all-events counter); stop
-    timestamps accumulate per until block (``st["stops"]``, pruned
-    once older than one horizon: any partial that could still need
-    one would contradict its own within window) and a consumption in
-    block >= i from a partial whose last event sits in block <= i is
-    rejected when a stop falls STRICTLY between — the batch lastns
-    conjunct, with the same same-ts tie rule; a greedy partial picks
-    up an exit DEADLINE (``dl`` in its extras) the moment a
-    consumable run candidate passes unconsumed (within the chain's
-    horizon), after which it may exit at-or-before the deadline and
-    is pruned once the clock passes it. Extras are positional:
+    bool``) / ``greedy`` / unbounded blocks (``mx = None``): an
+    unbounded block's run contiguity rides per-(key, TYPE) candidate
+    sequences (``st["tq"]`` — same era-restart argument as the
+    all-events counter); stop timestamps accumulate per until block
+    (``st["stops"]``, pruned once older than one horizon: any partial
+    that could still need one would contradict its own within window)
+    and a consumption in block >= i from a partial whose last event
+    sits in block <= i is rejected when a stop falls STRICTLY between
+    (a stop at a consumed event's own timestamp does not kill); a
+    greedy partial picks up an exit DEADLINE (``dl`` in its extras)
+    the moment a consumable run candidate passes unconsumed (within
+    the chain's horizon), after which it may exit at-or-before the
+    deadline and is pruned once the clock passes it. The NFA loops as
+    long as the data does — no slot bound. Extras are positional:
     [anchor][vsum vcnt vmin vmax][lastr][lasttq][dl].
 
-    STATE-SCHEMA NOTE (r10): pre-r10 checkpoints deserialize fine —
-    the json state only GAINS optional keys (tq/stops, setdefault'd)
-    and extras lists only lengthen for queries that opt into the new
-    features, which no pre-r10 query could have."""
-    import json as _json
+    ``complete_at`` (0-based block indices; pattern GROUPS in the
+    stream) restricts emission to those repetition-boundary blocks —
+    all-or-nothing per repetition; the partial still survives to
+    consume the next repetition.
 
+    STATE-SCHEMA NOTE: the json keys are p, R, starts, ivls, n, q, tq
+    and stops, with partials keyed "b|taken|c1,c2,.."; keys a
+    checkpoint lacks are set to their defaults, and extras lists only
+    lengthen for patterns that opt into the features that need
+    them."""
     k_blocks = len(blocks)
     types = [b[0] for b in blocks]
     mns = [b[1] for b in blocks]
     mxs = [b[2] for b in blocks]
-    valued = bool(conditions) or until_reads_value
     conditions = conditions or {}
     ranked = bool(consecutive)
     consecutive = consecutive or set()
     until = until or {}
     greedy = greedy or set()
     # unbounded blocks under default (relaxed) loop contiguity carry a
-    # per-(key, type) candidate sequence — the live face of the batch
-    # __tr rank; consecutive pins the stricter all-events rank instead
+    # per-(key, type) candidate sequence; consecutive pins the
+    # stricter all-events sequence instead
     tranked = any(
         mx is None and (i + 1) not in consecutive
         for i, mx in enumerate(mxs)
@@ -848,126 +968,78 @@ def _make_cep_am_fn(
         tail_optional[i] = opt
         opt = opt and mns[i] == 0
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = _json.loads(state.get[0])
-        else:
-            st = {"p": {}, "R": None, "starts": [], "ivls": [], "n": 0}
-        # partials dict: key "b|taken|c1,c2,.." -> anchor (or None);
-        # composite modes store a LIST instead — [anchor(, vsum, vcnt,
-        # vmin, vmax)(, lastr)] — and only the anchor ever needs
-        # merging: a chain's value aggregates and last-event sequence
-        # are functions of its event set, identical across duplicate
-        # block assignments.
-        parts: dict = st["p"]
-        st.setdefault("q", 0)  # arrival-sequence counter (ranked mode)
-        st.setdefault("tq", {})  # per-type candidate sequences (unbounded)
-        st.setdefault("stops", {})  # per-until-block stop timestamps
-        out: list[tuple] = []
+    def init(st: dict) -> None:
+        # partials dict "p": key (chain, b, taken) -> anchor (or
+        # None); composite modes store a LIST instead — [anchor(, vsum,
+        # vcnt, vmin, vmax)(, lastr)...] — and only the anchor ever
+        # needs merging: a chain's value aggregates and last-event
+        # sequence are functions of its event set, identical across
+        # duplicate block assignments.
+        for k, v in (
+            ("p", {}), ("R", None), ("starts", []), ("ivls", []),
+            ("n", 0),
+            ("q", 0),  # arrival-sequence counter (ranked mode)
+            ("tq", {}),  # per-type candidate sequences (unbounded)
+            ("stops", {}),  # per-until-block stop timestamps
+        ):
+            st.setdefault(k, v)
 
-        def val_anchor(val):
-            return val[0] if composite else val
+    def val_anchor(val):
+        return val[0] if composite else val
 
-        def merge_anchor(val, anchor):
-            old = val[0] if composite else val
-            m = (
-                anchor
-                if old is None
-                else old
-                if anchor is None
-                else min(old, anchor)
-            )
-            return [m, *val[1:]] if composite else m
+    def min_anchor(old, anchor):
+        return anchor if old is None else old if anchor is None else min(old, anchor)
 
-        def pkey(chain, b, taken):
-            return f"{b}|{taken}|{','.join(map(str, chain))}"
+    def merge_anchor(val, anchor):
+        m = min_anchor(val_anchor(val), anchor)
+        return [m, *val[1:]] if composite else m
 
-        def punpack(s):
-            b, taken, cs = s.split("|")
-            return [int(x) for x in cs.split(",")], int(b), int(taken)
+    def prune(st: dict, ts: int) -> None:
+        """Drop dead partials and stale strategy memory: nothing
+        arriving at >= ts can extend/collide with them."""
+        init(st)
+        parts = st["p"]
+        dead = [s for s in parts if s[0][0] + within_us < ts]
+        if has_greedy:
+            # a greedy partial whose exit deadline passed can neither
+            # extend (its run's next candidate took the sequence slot)
+            # nor proceed (exits must be <= dl)
+            dead += [
+                s
+                for s, val in parts.items()
+                if s not in dead
+                and val[_DL_AT] is not None
+                and val[_DL_AT] < ts
+            ]
+        for s in dead:
+            del parts[s]
+        for i in list(st["stops"]):
+            # a stop matters only while some live partial's last event
+            # precedes it; any such partial's horizon covers it, so
+            # stops older than one horizon are dead weight
+            st["stops"][i] = [u for u in st["stops"][i] if u + within_us >= ts]
+        st["starts"] = [x for x in st["starts"] if x >= ts]
+        st["ivls"] = [iv for iv in st["ivls"] if iv[1] > ts]
+        if st["R"] is not None and st["R"] < ts:
+            st["R"] = None
+
+    def feed(st: dict, pdf: pd.DataFrame) -> list[tuple[int, ...]]:
+        init(st)
+        parts = st["p"]
+        kept: list[tuple[int, ...]] = []
 
         def emit(chain):
-            out.append(
-                (
-                    key[0],
-                    chain[0],
-                    chain[-1],
-                    len(chain),
-                    "|".join(map(str, chain)),
-                )
-            )
+            kept.append(chain)
             st["n"] += 1
 
-        def prune_vs_ts(ts: int) -> None:
-            """Drop dead partials and stale strategy memory: nothing
-            arriving at >= ts can extend/collide with them."""
-            dead = [
-                s for s in parts if punpack(s)[0][0] + within_us < ts
-            ]
-            if has_greedy:
-                # a greedy partial whose exit deadline passed can
-                # neither extend (its run's next candidate took the
-                # sequence slot) nor proceed (exits must be <= dl)
-                dead += [
-                    s
-                    for s, val in parts.items()
-                    if s not in dead
-                    and val[_DL_AT] is not None
-                    and val[_DL_AT] < ts
-                ]
-            for s in dead:
-                del parts[s]
-            for i in list(st["stops"]):
-                # a stop matters only while some live partial's last
-                # event precedes it; any such partial's horizon covers
-                # it, so stops older than one horizon are dead weight
-                st["stops"][i] = [
-                    u for u in st["stops"][i] if u + within_us >= ts
-                ]
-            st["starts"] = [x for x in st["starts"] if x >= ts]
-            st["ivls"] = [iv for iv in st["ivls"] if iv[1] > ts]
-            if st["R"] is not None and st["R"] < ts:
-                st["R"] = None
-
-        if state.hasTimedOut:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            prune_vs_ts(wm_us + 1)
-            if parts or st["starts"] or st["ivls"] or st["R"] is not None:
-                state.update((_json.dumps(st),))
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-            elif cap is not None and st["n"] > 0:
-                # the batch operator's cap is per-key TOTAL: keep the
-                # emitted-match counter (a compact row, no timer —
-                # nothing left to prune) so a key that reached its cap
-                # cannot emit again after quiescence (ADVICE r9)
-                state.update((_json.dumps(st),))
-            else:
-                state.remove()
-            return
-
-        chunks = list(pdf_iter)
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts_us", "__tb"])
-            if chunks
-            else pd.DataFrame(columns=["ts_us", "event_type", "__v"])
-        )
-        # SAME-TIMESTAMP grouping (ADVICE r9 medium): the batch twin
-        # identifies events by distinct (key, type, ts) and its
-        # completion-order walks emit same-end ties TOGETHER before
-        # their strategy memory applies. Processing same-ts events one
-        # at a time would (a) emit the same ts-chain twice under
-        # no_skip when two same-ts events of different types complete
-        # it through different block assignments (distinct partial
-        # keys, so the per-event chain dedup never sees the pair), and
-        # (b) let the first same-ts completion's starts/R/ivls memory
-        # wrongly suppress same-end ties the batch walk keeps. So:
-        # fork + completion collection run once per distinct
-        # timestamp, chains dedup across the whole group, and the
-        # strategy judges the group's candidates against the memory in
-        # force when the group OPENED. Extensions only ever come from
-        # pre-group partials (chains are strictly increasing, so a
-        # same-ts event can never extend a chain the group created).
+        # SAME-TIMESTAMP grouping: fork + completion collection run
+        # once per distinct timestamp, chains dedup across the whole
+        # group, and the strategy judges the group's candidates
+        # against the memory in force when the group OPENED (same-end
+        # ties emit together before their strategy memory applies).
+        # Extensions only ever come from pre-group partials (chains
+        # are strictly increasing, so a same-ts event can never
+        # extend a chain the group created).
         if valued:
             rows = list(zip(pdf["ts_us"], pdf["event_type"], pdf["__v"]))
         else:
@@ -976,7 +1048,7 @@ def _make_cep_am_fn(
         while i < len(rows):
             ts = int(rows[i][0])
             # distinct types at this ts; valued mode resolves duplicate
-            # (type, ts) pairs MIN-first (the batch identity)
+            # (type, ts) pairs MIN-first
             group: dict[str, float | None] = {}
             while i < len(rows) and int(rows[i][0]) == ts:
                 et = str(rows[i][1])
@@ -986,18 +1058,17 @@ def _make_cep_am_fn(
                 i += 1
             if cap is not None and st["n"] >= cap:
                 break
-            prune_vs_ts(ts)
+            prune(st, ts)
             if ranked:
                 # arrival sequence numbers for this ts-group, assigned
-                # in TYPE order (the batch rank's (ts, type) order)
+                # in TYPE order (the (ts, type) event order)
                 seqs = {
                     et: st["q"] + 1 + j for j, et in enumerate(sorted(group))
                 }
                 st["q"] += len(group)
             if tranked:
-                # per-TYPE candidate sequences — the live face of the
-                # batch __tr rank (every distinct (type, ts) event of
-                # a type increments that type's counter)
+                # per-TYPE candidate sequences (every distinct (type,
+                # ts) event of a type increments that type's counter)
                 tseqs = {et: st["tq"].get(et, 0) + 1 for et in group}
                 for et in group:
                     st["tq"][et] = tseqs[et]
@@ -1013,19 +1084,17 @@ def _make_cep_am_fn(
             fresh: dict = {}
 
             def fork(chain, b, taken, anchor, extras=()):
-                kk = pkey(chain, b, taken)
+                kk = (chain, b, taken)
                 if kk in parts:
                     parts[kk] = merge_anchor(parts[kk], anchor)
-                    return
-                if kk in fresh:
+                elif kk in fresh:
                     fresh[kk] = merge_anchor(fresh[kk], anchor)
-                    return
-                fresh[kk] = [anchor, *extras] if composite else anchor
+                else:
+                    fresh[kk] = [anchor, *extras] if composite else anchor
 
             for etype, v in group.items():
                 seq = seqs[etype] if ranked else None
-                for s, pval in list(parts.items()):
-                    chain, b, taken = punpack(s)
+                for (chain, b, taken), pval in list(parts.items()):
                     if ts <= chain[-1] or ts > chain[0] + within_us:
                         continue
                     panchor = val_anchor(pval)
@@ -1042,84 +1111,81 @@ def _make_cep_am_fn(
                         bb, tt = bb + 1, 0
                         positions.append((bb, tt))
                     for pb, pt in positions:
-                        if etype == types[pb] and (
-                            mxs[pb] is None or pt < mxs[pb]
+                        if etype != types[pb] or (
+                            mxs[pb] is not None and pt >= mxs[pb]
                         ):
-                            chk = conditions.get(pb + 1)
-                            if valued and chk and not chk(v, *aggs):
-                                continue  # iterative condition failed
-                            if (
-                                ranked
-                                and pt >= 1
-                                and (pb + 1) in consecutive
-                                and seq != lastr + 1
-                            ):
-                                continue  # looping contiguity broken
-                            if (
-                                mxs[pb] is None
-                                and pt >= 1
-                                and (pb + 1) not in consecutive
-                                and tseqs[etype] != lasttq + 1
-                            ):
-                                continue  # loop run contiguity broken
-                            ufn = until.get(pb + 1)
-                            if ufn is not None and ufn(v, etype):
-                                continue  # the loop never takes a stop
-                            if has_greedy and dl is not None and ts > dl:
-                                # greedy: an unconsumed run candidate
-                                # forced the exit deadline
-                                continue
-                            if any(
-                                pb + 1 >= ui and b + 1 <= ui
-                                and any(
-                                    chain[-1] < u < ts
-                                    for u in st["stops"].get(str(ui), ())
+                            continue
+                        chk = conditions.get(pb + 1)
+                        if valued and chk and not chk(v, *aggs):
+                            continue  # iterative condition failed
+                        if (
+                            ranked
+                            and pt >= 1
+                            and (pb + 1) in consecutive
+                            and seq != lastr + 1
+                        ):
+                            continue  # looping contiguity broken
+                        if (
+                            mxs[pb] is None
+                            and pt >= 1
+                            and (pb + 1) not in consecutive
+                            and tseqs[etype] != lasttq + 1
+                        ):
+                            continue  # loop run contiguity broken
+                        ufn = until.get(pb + 1)
+                        if ufn is not None and ufn(v, etype):
+                            continue  # the loop never takes a stop
+                        if has_greedy and dl is not None and ts > dl:
+                            # greedy: an unconsumed run candidate
+                            # forced the exit deadline
+                            continue
+                        if any(
+                            pb + 1 >= ui
+                            and b + 1 <= ui
+                            and any(
+                                chain[-1] < u < ts
+                                for u in st["stops"].get(str(ui), ())
+                            )
+                            for ui in until
+                        ):
+                            continue  # stop strictly inside a gap
+                        a = panchor
+                        if anchored and pb + 1 == skip_block:
+                            # "last": every consumed event re-anchors;
+                            # "first": only the block's first consumed
+                            # event sets it
+                            a = (
+                                ts
+                                if strategy == "skip_to_last"
+                                or panchor is None
+                                else panchor
+                            )
+                        extras = []
+                        if valued:
+                            extras += [
+                                aggs[0] + v,
+                                aggs[1] + 1,
+                                min(aggs[2], v),
+                                max(aggs[3], v),
+                            ]
+                        if ranked:
+                            extras.append(seq)
+                        if tranked:
+                            extras.append(
+                                tseqs[etype]
+                                if (
+                                    mxs[pb] is None
+                                    and (pb + 1) not in consecutive
                                 )
-                                for ui in until
-                            ):
-                                continue  # stop strictly inside a gap
-                            a = panchor
-                            if anchored and pb + 1 == skip_block:
-                                # "last": every consumed event
-                                # re-anchors; "first": coalesce — only
-                                # the block's first consumed event
-                                # sets it
-                                a = (
-                                    ts
-                                    if strategy == "skip_to_last"
-                                    or panchor is None
-                                    else panchor
-                                )
-                            extras = []
-                            if valued:
-                                extras += [
-                                    aggs[0] + v,
-                                    aggs[1] + 1,
-                                    min(aggs[2], v),
-                                    max(aggs[3], v),
-                                ]
-                            if ranked:
-                                extras.append(seq)
-                            if tranked:
-                                extras.append(
-                                    tseqs[etype]
-                                    if (
-                                        mxs[pb] is None
-                                        and (pb + 1) not in consecutive
-                                    )
-                                    else None
-                                )
-                            if has_greedy:
-                                extras.append(None)  # dl: run alive
-                            fork(chain + [ts], pb, pt + 1, a, extras)
+                                else None
+                            )
+                        if has_greedy:
+                            extras.append(None)  # dl: run alive
+                        fork((*chain, ts), pb, pt + 1, a, extras)
                 if etype == types[0] and not (
                     1 in until and until[1](v, etype)
                 ):
-                    a = (
-                        ts
-                        if anchored and skip_block == 1
-                        else None
-                    )
+                    a = ts if anchored and skip_block == 1 else None
                     # the seed is never conditioned (no prior chain)
                     extras = []
                     if valued:
@@ -1134,53 +1200,39 @@ def _make_cep_am_fn(
                         )
                     if has_greedy:
                         extras.append(None)
-                    fork([ts], 0, 1, a, extras)
+                    fork((ts,), 0, 1, a, extras)
             # completions among the NEW forks: minimum met and every
-            # later block optional — dedup identical chains across the
-            # WHOLE group (min anchor; two same-ts events of different
-            # types can complete the same ts-chain through different
-            # block assignments), order chain-lexicographically
-            # (same-end batch ties rank by chain). With complete_at
-            # (pattern GROUPS), emission happens EXCLUSIVELY at the
-            # listed repetition-boundary blocks — all-or-nothing per
-            # repetition; the partial still survives to consume the
-            # next repetition (skip-till-any).
+            # later block optional (or, with complete_at, a listed
+            # repetition boundary) — dedup identical chains across the
+            # WHOLE group (min anchor), order chain-lexicographically
+            # (same-end batch ties rank by chain)
             comps: dict[tuple, int | None] = {}
             for s, val in fresh.items():
-                chain, b, taken = punpack(s)
-                anchor = val_anchor(val)
+                chain, b, taken = s
                 if taken >= mns[b] and (
                     b in complete_at
                     if complete_at is not None
                     else tail_optional[b]
                 ):
                     c = tuple(chain)
-                    old = comps.get(c, "missing")
-                    if old == "missing":
-                        comps[c] = anchor
-                    else:
-                        comps[c] = (
-                            anchor
-                            if old is None
-                            else old
-                            if anchor is None
-                            else min(old, anchor)
-                        )
+                    anchor = val_anchor(val)
+                    comps[c] = (
+                        min_anchor(comps[c], anchor) if c in comps else anchor
+                    )
                 parts[s] = val
             if has_greedy:
                 # an unconsumed run candidate ends every live run it
                 # immediately follows: the partial's future exits must
-                # happen at-or-before the candidate (the batch lastlead
-                # conjunct); candidates beyond the chain's horizon are
-                # exempt (the run could not have extended anyway).
-                # Fresh forks that consumed the candidate carry its
-                # sequence, so lasttq == tseq - 1 never flags them.
+                # happen at-or-before the candidate; candidates beyond
+                # the chain's horizon are exempt (the run could not
+                # have extended anyway). Fresh forks that consumed the
+                # candidate carry its sequence, so lasttq == tseq - 1
+                # never flags them.
                 for g in sorted(greedy):
                     gt = types[g - 1]
                     if gt not in group:
                         continue
-                    for s, val in parts.items():
-                        chain, b, taken = punpack(s)
+                    for (chain, b, taken), val in parts.items():
                         if (
                             b + 1 == g
                             and taken >= 1
@@ -1194,46 +1246,32 @@ def _make_cep_am_fn(
             cands = sorted(comps)  # chain-lex among same-end ties
             if strategy == "no_skip":
                 for c in cands:
-                    emit(list(c))
+                    emit(c)
             elif strategy == "skip_to_next":
                 for c in cands:
                     if c[0] in st["starts"]:
                         continue
-                    emit(list(c))
+                    emit(c)
                     st["starts"].append(c[0])
                 # discard partials sharing an emitted start
-                for s in [
-                    s
-                    for s in parts
-                    if punpack(s)[0][0] in st["starts"]
-                ]:
+                for s in [s for s in parts if s[0][0] in st["starts"]]:
                     del parts[s]
             elif strategy == "skip_past_last_event":
-                batch = [
-                    c
-                    for c in cands
-                    if st["R"] is None or c[0] > st["R"]
-                ]
+                batch = [c for c in cands if st["R"] is None or c[0] > st["R"]]
                 for c in batch:
-                    emit(list(c))
+                    emit(c)
                 if batch:
                     st["R"] = ts
-                    for s in [
-                        s
-                        for s in parts
-                        if punpack(s)[0][0] <= st["R"]
-                    ]:
+                    for s in [s for s in parts if s[0][0] <= ts]:
                         del parts[s]
             else:  # skip_to_first / skip_to_last
                 batch = [
                     c
                     for c in cands
-                    if not any(
-                        lo <= c[0] < hi for lo, hi in st["ivls"]
-                    )
+                    if not any(lo <= c[0] < hi for lo, hi in st["ivls"])
                 ]
                 for c in batch:
-                    emit(list(c))
+                    emit(c)
                     a = comps[c]
                     if a is not None and a > c[0]:
                         st["ivls"].append([c[0], a])
@@ -1241,28 +1279,52 @@ def _make_cep_am_fn(
                     s
                     for s in parts
                     if any(
-                        lo <= punpack(s)[0][0] < hi
-                        for lo, hi in st["ivls"]
+                        lo <= s[0][0] < hi for lo, hi in st["ivls"]
                     )
                 ]:
                     del parts[s]
+        return kept
 
-        if parts or st["starts"] or st["ivls"] or st["R"] is not None:
-            state.update((_json.dumps(st),))
-            horizon_ms = (
-                max(punpack(s)[0][0] for s in parts) + within_us
-            ) // 1000 + 1 if parts else state.getCurrentWatermarkMs() + 1
-            if horizon_ms > state.getCurrentWatermarkMs():
-                state.setTimeoutTimestamp(horizon_ms)
+    return feed, prune
+
+
+def _make_cep_am_fn(feed, prune, within_us: int, cap: int | None):
+    """State fn for streaming all-matches CEP: the GroupState adapter
+    around the :func:`_make_am_nfa` core — the NFA state as one json
+    row, and an event-time timer that sweeps keys whose horizons all
+    closed. With a ``cap``, a key that emitted anything keeps a
+    compact counter row after quiescence (no timer) so the cap stays
+    per-key TOTAL like the batch operator's, not per-activity-burst."""
+
+    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        st = _am_state_load(state.get[0]) if state.exists else {}
+        wm_ms = state.getCurrentWatermarkMs()
+        if state.hasTimedOut:
+            prune(st, wm_ms * 1000 + 1)
+            kept = []
+        else:
+            kept = feed(st, _sorted_rows(pdf_iter))
+        if st["p"] or st["starts"] or st["ivls"] or st["R"] is not None:
+            state.update((_am_state_dump(st),))
+            if st["p"] and not state.hasTimedOut:
+                last_start = max(s[0][0] for s in st["p"])
+                timer_ms = (last_start + within_us) // 1000 + 1
+            else:
+                timer_ms = wm_ms + 1
+            if timer_ms > wm_ms:
+                state.setTimeoutTimestamp(timer_ms)
         elif cap is not None and st["n"] > 0:
-            # per-key-TOTAL cap memory survives quiescence (see the
-            # timed-out branch) — a compact counter row, no timer
-            state.update((_json.dumps(st),))
+            # the per-key TOTAL cap survives quiescence: a compact
+            # counter row, no timer (nothing left to prune)
+            state.update((_am_state_dump(st),))
         elif state.exists:
             state.remove()
-        if out:
+        if kept:
             yield pd.DataFrame(
-                out,
+                [
+                    (key[0], c[0], c[-1], len(c), "|".join(map(str, c)))
+                    for c in kept
+                ],
                 columns=[
                     "user_id", "start_us", "end_us", "n_events", "chain_str",
                 ],
@@ -1292,8 +1354,13 @@ def cep_all_matches_stream(
 ) -> DataFrame:
     """Streaming ALL-matches CEP enumeration with the full after-match
     skip-strategy enum — the live twin of
-    operators/cep.py::cep_after_match_skip (all five strategies; same
-    ``steps`` block syntax, same anchored ``skip_block``). Emits one
+    operators/cep.py::cep_all_matches / cep_after_match_skip, running
+    the same NFA core (:func:`_make_am_nfa`) per micro-batch with its
+    state in the state store. Same ``steps`` block syntax, anchored
+    ``skip_block``, ``conditions`` / ``consecutive`` / ``until`` /
+    ``greedy`` spec (condition and stop SQL strings compile through the
+    shared restricted grammar; a ``(v, vsum, vcnt, vmin, vmax) ->
+    bool`` callable is accepted as a condition too). Emits one
     append-mode row per kept match: (user_id, start_ts, end_ts,
     n_events, chain_str). The batch operator's ``match_no`` is the
     chain-lexicographic rank among kept matches, which is not
@@ -1303,110 +1370,18 @@ def cep_all_matches_stream(
     emission order (Flink's runtime behavior; batch's cap is
     chain-lex — pass None to compare against an uncapped batch run).
     In-order arrival per key is the contract, as for the other
-    automata. ``conditions`` (1-based block index -> the batch
-    operator's SQL condition STRING, compiled here through the shared
-    restricted grammar — one spec drives both engines, VERDICT r9
-    item 4 — or a ``(v, vsum, vcnt, vmin, vmax) -> bool`` callable)
-    adds the batch operator's ITERATIVE CONDITIONS. ``consecutive``
-    (1-based block indices) adds the looping contiguity of
-    cep_all_matches(consecutive=...) via a per-key arrival-sequence
-    counter in state (see _make_cep_am_fn).
-
-    UNBOUNDED looping blocks (``(type, m, None)`` — oneOrMore /
-    timesOrMore), ``until`` (1-based unbounded block index -> stop
-    SQL string over ``__v`` / ``event_type``, the SAME string the
-    batch operator takes) and ``greedy`` mirror
-    cep_all_matches(until=..., greedy=...) under the no_skip
-    strategy: loop-run contiguity rides a per-(key, type) candidate
-    sequence in state, stop timestamps accumulate per key (pruned
-    past one horizon) and kill exactly the chains whose loop gaps
-    they fall strictly inside, and a greedy partial picks up an exit
-    DEADLINE the moment a consumable run candidate passes unconsumed.
-    The NFA never needs the batch side's data-dependent slot bound —
-    it loops as long as the data does, so the stream ≡ batch test
-    independently cross-checks that bound."""
-    from flink_realtime_edu_spark.operators.cep import (
-        _normalize_blocks,
-        compile_condition,
-        compile_stop,
+    automata."""
+    spec = _all_matches_spec(
+        steps, strategy, skip_block, conditions, consecutive, until, greedy,
+        type_col,
     )
-
-    blocks = _normalize_blocks(steps)
-    strategies = (
-        "no_skip",
-        "skip_to_next",
-        "skip_past_last_event",
-        "skip_to_first",
-        "skip_to_last",
-    )
-    if strategy not in strategies:
-        raise ValueError(f"strategy must be one of {strategies}")
-    anchored = strategy in ("skip_to_first", "skip_to_last")
-    if anchored and (
-        skip_block is None or not 1 <= skip_block <= len(blocks)
-    ):
-        raise ValueError("anchored strategies need a valid skip_block")
-    if not anchored and skip_block is not None:
-        raise ValueError(f"{strategy} does not take skip_block")
-    if conditions:
-        bad = [b for b in conditions if not 1 <= b <= len(blocks)]
-        if bad:
-            raise ValueError(
-                f"condition block indices {bad} outside [1, {len(blocks)}]"
-            )
-    if consecutive:
-        bad = [b for b in consecutive if not 1 <= b <= len(blocks)]
-        if bad:
-            raise ValueError(
-                f"consecutive block indices {bad} outside [1, {len(blocks)}]"
-            )
-    unbounded = {i for i, (_, _, mx) in enumerate(blocks, 1) if mx is None}
-    if unbounded and strategy != "no_skip":
-        raise ValueError(
-            "unbounded looping blocks are supported under the no_skip "
-            "strategy only (batch parity)"
-        )
-    if until:
-        bad = [b for b in until if b not in unbounded]
-        if bad:
-            raise ValueError(
-                f"until applies only to unbounded looping blocks; {bad} "
-                f"are bounded"
-            )
-    if conditions and unbounded & set(conditions):
-        raise ValueError(
-            "iterative conditions are not supported on unbounded blocks; "
-            "use until to stop a loop on data"
-        )
-    if greedy:
-        bad = [g for g in greedy if g not in unbounded]
-        if bad:
-            raise ValueError(
-                f"greedy applies only to unbounded looping blocks; {bad} "
-                f"are bounded"
-            )
-        if len(blocks) in greedy:
-            raise ValueError(
-                "a greedy block must not be the pattern's last element "
-                "(Flink parity)"
-            )
-        if consecutive and greedy & consecutive:
-            raise ValueError(
-                "greedy + consecutive on one block is not supported"
-            )
-    # one spec string drives both engines: strings compile through the
-    # shared restricted grammar, callables pass through (legacy)
-    conditions = {
-        b: compile_condition(c) if isinstance(c, str) else c
-        for b, c in (conditions or {}).items()
-    } or None
-    until_reads_value = any(
-        re.search(r"\b__v\b", s) for s in (until or {}).values()
-    )
-    until_fns = {
-        b: compile_stop(s) for b, s in (until or {}).items()
-    } or None
     within_us = _parse_within_us(within)
+    feed, prune = _make_am_nfa(
+        within_us=within_us,
+        cap=max_matches_per_key,
+        complete_at=_complete_at,
+        **spec,
+    )
     cols = [
         F.col(key_col).alias("user_id"),
         F.col(ts_col),
@@ -1414,29 +1389,14 @@ def cep_all_matches_stream(
         F.col(type_col).alias("event_type"),
         F.col(tiebreak_col).alias("__tb"),
     ]
-    if conditions or until_reads_value:
+    if spec["valued"]:
         cols.append(F.col(value_col).cast("double").alias("__v"))
-        # valued-mode event identity excludes NULL-valued rows on BOTH
-        # engines (ADVICE r10: float(None) would crash the NFA here,
-        # while the batch twin's MIN(value) silently ignored them —
-        # the shared contract is now an explicit IS NOT NULL on the
-        # valued event set, see operators/cep.py::_enumerate_matches)
+        # valued-mode event identity excludes NULL-valued rows (the
+        # contract shared with the batch operators)
         events = events.filter(F.col(value_col).isNotNull())
     prepared = events.withWatermark(ts_col, watermark_delay).select(*cols)
     out = prepared.groupBy("user_id").applyInPandasWithState(
-        _make_cep_am_fn(
-            blocks,
-            within_us,
-            strategy,
-            skip_block,
-            max_matches_per_key,
-            conditions,
-            consecutive,
-            until=until_fns,
-            greedy=greedy,
-            until_reads_value=until_reads_value,
-            complete_at=_complete_at,
-        ),
+        _make_cep_am_fn(feed, prune, within_us, max_matches_per_key),
         outputStructType=CEP_AM_OUTPUT_SCHEMA,
         stateStructType=CEP_AM_STATE_SCHEMA,
         outputMode="append",
@@ -1464,23 +1424,21 @@ def cep_group_times_stream(
 ) -> DataFrame:
     """Streaming PATTERN GROUPS — the live twin of
     operators/cep.py::cep_group_times (``Pattern.begin(sub)
-    .times(m, n)``). Where the batch operator unions one flattened
-    enumeration per repeat count, the stream runs ONE NFA over the
-    fully-flattened ``group × n`` block list whose completions fire
-    exclusively at REPETITION BOUNDARIES reachable after ``m`` full
-    passes — the same all-or-nothing semantics without parallel
-    stateful branches (Spark restricts unions of stateful operators).
-    A partial that emits at boundary r survives to consume repetition
-    r + 1, exactly the batch union's longer chains; identical event
-    sets dedup in the per-group completion dict as usual.
+    .times(m, n)``). Where the batch operator runs the NFA once per
+    repeat count over each key's history and keeps the distinct
+    chains, the stream runs ONE NFA over the fully-flattened
+    ``group × n`` block list whose completions fire exclusively at
+    REPETITION BOUNDARIES reachable after ``m`` full passes — the same
+    all-or-nothing semantics in one state row per key. A partial that
+    emits at boundary r survives to consume repetition r + 1, exactly
+    the batch side's longer chains; identical event sets dedup in the
+    per-group completion dict as usual.
 
     Restriction: the group's LAST block must be non-optional
     (``mn >= 1``) — a skipped trailing optional would complete with
     its last consumption outside the boundary block, which the
     boundary rule cannot see; the batch operator keeps full
     generality."""
-    from flink_realtime_edu_spark.operators.cep import _normalize_blocks
-
     m, n = times
     if not 1 <= m <= n:
         raise ValueError(f"group times needs 1 <= m <= n, got {times}")
@@ -1527,15 +1485,7 @@ def _make_cep_strict_fn(steps: list[str], within_us: int | None):
         else:
             types, ts = [], []
         out = []
-        # Global per-key sort across ALL Arrow chunks of the
-        # micro-batch (chunk-local sorts are not a global order —
-        # see _make_cep_fn).
-        chunks = list(pdf_iter)
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values(["ts_us", "__tb"])
-            if chunks
-            else pd.DataFrame(columns=["ts_us", "event_type"])
-        )
+        pdf = _sorted_rows(pdf_iter)
         for t_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
             types.append(str(etype))
             ts.append(int(t_us))

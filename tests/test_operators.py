@@ -1556,10 +1556,8 @@ def test_cep_valued_mode_excludes_null_values(spark):
 def test_cep_unbounded_until_greedy_validation(spark):
     """Parameter contracts for the unbounded-loop surface: until only
     on unbounded blocks, no iterative conditions there, greedy only
-    on unbounded non-last blocks, greedy+consecutive rejected, the
-    walk strategies reject unbounded blocks, and a resolved slot
-    bound above max_loop_slots raises instead of silently truncating
-    the enumeration."""
+    on unbounded non-last blocks, greedy+consecutive rejected, and the
+    walk strategies reject unbounded blocks."""
     import pytest
 
     from flink_realtime_edu_spark.operators.cep import (
@@ -1595,16 +1593,11 @@ def test_cep_unbounded_until_greedy_validation(spark):
         cep_all_matches(ev, loop, "1 hour", greedy={1}, consecutive={1})
     with pytest.raises(ValueError, match="supported through cep_all_matches"):
         cep_after_match_skip(ev, loop, "1 hour", strategy="skip_to_next")
-    # 6 clicks inside one hour -> resolved bound 6 > max_loop_slots=4
-    with pytest.raises(ValueError, match="max_loop_slots"):
-        cep_all_matches(ev, loop, "1 hour", max_loop_slots=4).collect()
-    # ...and the same pattern succeeds when until segments the run
     out = cep_all_matches(
         ev,
         loop,
         "1 hour",
         until={1: "__v > 0.5"},  # every click is a stop -> no loop seeds
-        max_loop_slots=4,
     ).collect()
     assert out == []
 

@@ -606,6 +606,7 @@ def test_cep_timeout_state_fn_matches_batch_cut(evs, cuts, data):
             }
         )
         pdf = pdf.sample(frac=1, random_state=data.draw(st.integers(0, 10)))
+        state.timeout = None  # Spark clears the timer on every call
         for out in fn((7,), iter([pdf]), state):
             emitted.extend(
                 (int(a), int(b), int(m), bool(to))
@@ -675,6 +676,80 @@ def test_cep_strict_state_fn_matches_sliding_window(evs, cuts):
             types, _ = state.get
             assert list(types) and all(t == "error" for t in types)
     assert emitted == want
+
+
+# (blocks, strategy keywords) for the split-invariance property: all
+# five skip strategies, plus one valued, one consecutive and one
+# until + greedy pattern
+_AM_SPLIT_SPECS = [
+    ([("a", 1, 2), ("b", 0, 1), "c"], {}),
+    ([("a", 1, 2), ("b", 0, 1), "c"], {"strategy": "skip_to_next"}),
+    ([("a", 1, 2), ("b", 0, 1), "c"], {"strategy": "skip_past_last_event"}),
+    ([("a", 1, 2), ("b", 0, 1), "c"],
+     {"strategy": "skip_to_first", "skip_block": 2}),
+    ([("a", 1, 2), ("b", 0, 1), "c"],
+     {"strategy": "skip_to_last", "skip_block": 1}),
+    ([("a", 1, 2), "c"], {"conditions": {2: "__v > vsum / vcnt"}}),
+    ([("a", 2, 3), "c"], {"consecutive": {1}}),
+    ([("a", 1, None), "c"],
+     {"until": {1: "__v > 2 OR event_type = 'b'"}, "greedy": {1}}),
+]
+
+
+@FAST
+@given(
+    evs=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c"]),
+            st.integers(min_value=0, max_value=12),
+            st.sampled_from([1.0, 2.0, 3.0]),
+        ),
+        min_size=1,
+        max_size=16,
+    ),
+    cuts=st.sets(st.integers(min_value=1, max_value=15)),
+)
+def test_all_matches_nfa_is_split_invariant(evs, cuts):
+    """The all-matches NFA core kept set is independent of how a key's
+    ordered rows are cut into calls (Structured Streaming's prefix
+    consistency, for ordered arrival): feeding the rows in pieces —
+    the state dict round-tripped through its json row between pieces,
+    as the state store does, and pruned at each piece's last
+    timestamp, as the zero-delay watermark timer does — keeps exactly
+    the chains one call over all rows keeps. Cuts never split a
+    same-timestamp group (the documented contract). No Spark: the core
+    is GroupState-free."""
+    import pandas as pd
+
+    from flink_realtime_edu_spark.streaming.cep import (
+        _all_matches_spec,
+        _am_state_dump,
+        _am_state_load,
+        _make_am_nfa,
+    )
+
+    rows = sorted(evs, key=lambda e: e[1])
+    pdf = pd.DataFrame(
+        {
+            "ts_us": pd.Series([t * 1_000_000 for _, t, _ in rows], dtype="int64"),
+            "event_type": [et for et, _, _ in rows],
+            "__v": [v for _, _, v in rows],
+        }
+    )
+    bounds = [0] + sorted(
+        c for c in cuts if c < len(rows) and rows[c][1] != rows[c - 1][1]
+    ) + [len(rows)]
+    for blocks, kw in _AM_SPLIT_SPECS:
+        spec = _all_matches_spec(blocks, **kw)
+        feed, prune = _make_am_nfa(within_us=5_000_000, **spec)
+        whole = feed({}, pdf)
+        st_, split = {}, []
+        for lo, hi in zip(bounds, bounds[1:]):
+            split += feed(st_, pdf.iloc[lo:hi])
+            prune(st_, int(pdf["ts_us"].iloc[hi - 1]) + 1)
+            st_ = _am_state_load(_am_state_dump(st_))
+        assert sorted(split) == sorted(whole), (blocks, kw)
+        assert len(set(whole)) == len(whole), (blocks, kw)
 
 
 @FAST
