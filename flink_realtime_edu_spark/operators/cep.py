@@ -627,13 +627,16 @@ def _kept_matches(
         StructType,
     )
 
-    from flink_realtime_edu_spark.streaming.cep import _sorted_rows
+    from flink_realtime_edu_spark.streaming.cep import _make_am_nfa
+    from flink_realtime_edu_spark.streaming.stateful import _sorted_rows
 
     if max_matches_per_key < 1:
         raise ValueError("max_matches_per_key must be >= 1")
-    # the NFA's module pickles by value, so executor workers need no
-    # importable copy of the repo (the driver may launch from any cwd)
-    cloudpickle.register_pickle_by_value(sys.modules[_sorted_rows.__module__])
+    # the NFA's and the row sort's modules pickle by value, so executor
+    # workers need no importable copy of the repo (the driver may
+    # launch from any cwd)
+    for fn in (_make_am_nfa, _sorted_rows):
+        cloudpickle.register_pickle_by_value(sys.modules[fn.__module__])
     cols = [
         F.col(key_col),
         F.unix_micros(ts_col).alias("ts_us"),

@@ -1,13 +1,19 @@
 """Streaming CEP — the live faces of operators/cep.py (Flink
 `CEP.pattern(stream, ...)`; SURVEY.md §2 exhaustiveness note).
 
-Five keyed automata on ``applyInPandasWithState``, each pinned
-stream ≡ batch by tests/test_streaming.py + property tests:
+Five keyed automata, each a GroupState-free core
+(streaming/stateful.py::KeyedCore: ``feed`` a call's rows,
+``on_watermark`` when the key's timer fires, ``save`` the state to
+its row and next deadline) run by the one keyed-state adapter,
+:func:`~flink_realtime_edu_spark.streaming.stateful.keyed_stream`,
+on Spark's GroupState operator. Each is pinned stream ≡ batch by
+tests/test_streaming.py, and replayed without Spark under any
+micro-batch split by tests/test_properties.py:
 
 - :func:`cep_first_match_stream` — relaxed-contiguity (followedBy)
   earliest completion: state is (next step index, chain start, last
   matched time); ONE completion row per key, exactly
-  ``cep_first_match``.
+  ``cep_first_match``. Untimed unless ``done_ttl`` asks for eviction.
 - :func:`cep_with_timeouts_stream` — the same chain plus Flink's
   TIMEOUT SIDE OUTPUT: event-time timers (re-armed per invocation,
   ms-granular → deadline = floor(horizon_us/1000)+1 so a timer never
@@ -18,7 +24,7 @@ stream ≡ batch by tests/test_streaming.py + property tests:
   a ring buffer of the last k−1 events carries matches across
   micro-batch boundaries; only the longest buffer suffix that is a
   prefix of the pattern is kept (KMP failure function), so most keys
-  hold no state at all.
+  hold no state at all. Untimed.
 - :func:`cep_not_followed_by_stream` — negative patterns
   (notFollowedBy, r8): per-start greedy partials, gap negatives kill
   in-flight, a trailing negative defers emission until the event-time
@@ -28,14 +34,13 @@ stream ≡ batch by tests/test_streaming.py + property tests:
 - :func:`cep_all_matches_stream` — the skip-till-any-match NFA with
   the full after-match skip enum, iterative conditions, looping
   contiguity, unbounded loops with ``until`` and ``greedy`` (and
-  pattern groups via :func:`cep_group_times_stream`). Its core,
-  :func:`_make_am_nfa`, is GroupState-free: the batch operators
-  (operators/cep.py::cep_all_matches / cep_after_match_skip /
-  cep_group_times) run the SAME automaton over each key's history,
-  so this pair is stream ≡ batch by construction; the streaming
-  adapter only keeps the NFA state as one json row and arms the
-  sweep timer. State is bounded by one horizon's enumeration fanout
-  plus self-pruning strategy memory.
+  pattern groups via :func:`cep_group_times_stream`). The batch
+  operators (operators/cep.py::cep_all_matches / cep_after_match_skip
+  / cep_group_times) run the SAME automaton, :func:`_make_am_nfa`,
+  over each key's history, so this pair is stream ≡ batch by
+  construction; its core keeps the NFA state as one json row and
+  sweeps keys whose horizons all closed. State is bounded by one
+  horizon's enumeration fanout plus self-pruning strategy memory.
 
 All five require arrival order to respect event-time order per key
 ACROSS micro-batches (the testable contract: an ordered replay makes
@@ -45,40 +50,41 @@ patterns). For the all-matches NFA the contract additionally keeps a
 key's SAME-TIMESTAMP events inside one micro-batch: the batch twin
 treats them as simultaneous (distinct (key, type, ts) identity,
 same-end ties emitted together), which is unobservable if the group
-splits across triggers. WITHIN a micro-batch no order is assumed: each state fn
-reads its key's rows through :func:`_sorted_rows`, which concatenates
-every Arrow chunk and sorts once on (ts, tiebreak) — chunk-local
-sorting would silently consume events out of order for keys exceeding
+splits across triggers. WITHIN a micro-batch no order is assumed: the
+adapter hands each core its key's rows concatenated across Arrow
+chunks and sorted once on (ts, tiebreak) — chunk-local sorting would
+silently consume events out of order for keys exceeding
 arrow.maxRecordsPerBatch rows per batch (pinned by a
 small-maxRecordsPerBatch stream≡batch test).
 
-Scale: state per key is a few scalars (or ≤ k−1 events for strict
-mode); matching work is O(batch rows); outputs stream in append
-mode; state is hash-partitioned by key across executors like every
-GroupState operator here. Retention: by default a key that completes
-(or times out) keeps its 4-scalar done-marker FOREVER — that is the
-price of first-match-EVER semantics (evicting it would let the key
-match again on later events), ~40 bytes per completed key; for
-streams with unbounded key churn, ``cep_first_match_stream``'s
-``done_ttl`` evicts state via event-time timers — done markers once
-the watermark passes end_ts + ttl (first match per TTL window), and
-PARTIAL chains once idle past the ttl AND past their t1 + within
-completion horizon (never while an in-horizon completion is still
-admissible) — so state really is bounded by one max(ttl, within)
-horizon of active keys, partials included, and callers that want
-aligned per-window re-matching can bucket the key by window instead.
+Scale: the chain automata keep four scalars per key, the strict one
+≤ k−1 events, the negative one its live partials within one horizon
+and the NFA its partial set; matching work is O(batch rows); a key
+that already emitted drains its rows without sorting them; outputs
+stream in append mode; state is hash-partitioned by key across
+executors like every GroupState operator here. Retention: by default
+a key that completes (or times out) keeps its 4-scalar done-marker
+FOREVER — that is the price of first-match-EVER semantics (evicting
+it would let the key match again on later events), ~40 bytes per
+completed key; for streams with unbounded key churn,
+``cep_first_match_stream``'s ``done_ttl`` evicts state via event-time
+timers — done markers once the watermark passes end_ts + ttl (first
+match per TTL window), and PARTIAL chains once idle past the ttl AND
+past their t1 + within completion horizon (never while an in-horizon
+completion is still admissible) — so state really is bounded by one
+max(ttl, within) horizon of active keys, partials included, and
+callers that want aligned per-window re-matching can bucket the key
+by window instead.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from flink_realtime_edu_spark.operators.cep import (
     _normalize_blocks,
@@ -87,6 +93,7 @@ from flink_realtime_edu_spark.operators.cep import (
     compile_condition,
     compile_stop,
 )
+from flink_realtime_edu_spark.streaming.stateful import KeyedCore, keyed_stream
 
 CEP_OUTPUT_SCHEMA = (
     "user_id BIGINT, start_us BIGINT, end_us BIGINT, duration_s DOUBLE"
@@ -98,24 +105,35 @@ CEP_TO_OUTPUT_SCHEMA = (
 )
 
 
-def _sorted_rows(
-    pdf_iter: Iterable[pd.DataFrame], by: tuple[str, ...] = ("ts_us", "__tb")
-) -> pd.DataFrame:
-    """One key's rows of one call, every Arrow chunk concatenated and
-    sorted ONCE on ``by``. A key's micro-batch arrives as several
-    Arrow chunks (arrow.maxRecordsPerBatch) in shuffle order: sorting
-    each chunk alone is not a global sort and would let an automaton
-    consume events out of event-time order for keys above that many
-    rows per batch. The sort holds a single key's single call in
-    memory — bounded by per-key batch volume, not stream length."""
-    chunks = list(pdf_iter)
-    if not chunks:
-        return pd.DataFrame(columns=["ts_us", "event_type", "__v"])
-    return pd.concat(chunks, ignore_index=True).sort_values(list(by))
+def _cep_cols(key_col, ts_col, type_col, tiebreak_col) -> list[Column]:
+    """The projection every CEP core reads."""
+    return [
+        F.col(key_col).alias("user_id"),
+        F.unix_micros(ts_col).alias("ts_us"),
+        F.col(type_col).alias("event_type"),
+        F.col(tiebreak_col).alias("__tb"),
+    ]
 
+
+def _us_to_ts(*names: str) -> list[Column | str]:
+    """Output projection: each ``<x>_us`` epoch-micros column becomes
+    the timestamp ``<x>_ts``; other names pass through."""
+    return [
+        F.timestamp_micros(n).alias(n[:-3] + "_ts") if n.endswith("_us") else n
+        for n in names
+    ]
+
+
+def _load_chain(row) -> list:
+    """A chain automaton's state row -> [step_idx, t1_us, tprev_us,
+    done]; a new key has made no progress."""
+    return list(row) if row else [0, None, None, False]
 
 
 def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):
+    """Core of :func:`cep_first_match_stream`: the greedy
+    earliest-completion chain. Timed only with ``ttl_us``."""
+
     def expiry_ms(t1_us: int, tprev_us: int, done: bool) -> int:
         """Event-time deadline after which this state is dead weight
         (ttl mode only). Done marker: end + ttl (the documented
@@ -128,37 +146,24 @@ def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):
             return (tprev_us + ttl_us) // 1000 + 1
         return max(t1_us + within_us, tprev_us + ttl_us) // 1000 + 1
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # ttl mode: the state's deadline passed with no new data —
-            # evict (done marker: the key may match again on future
-            # events; partial: the chain could no longer complete).
-            state.remove()
-            return
-        if state.exists:
-            step_idx, t1_us, tprev_us, done = state.get
-            if (
-                ttl_us is not None
-                and expiry_ms(t1_us, tprev_us, done)
-                <= state.getCurrentWatermarkMs()
-            ):
-                # State expired but new data arrived in the same
-                # batch (Spark delivers data, not a timeout, then) —
-                # evict the stored row NOW, not just the locals: if
-                # this batch makes no step-0 progress the update()
-                # below is skipped, and the old row (its timer
-                # cleared by this invocation, none re-armed) would
-                # otherwise sit in the store forever — exactly the
-                # key-churn orphan the partial TTL exists to prevent.
-                # A batch that does make progress recreates the row
-                # via update() later in this same invocation.
-                state.remove()
-                step_idx, t1_us, tprev_us, done = 0, None, None, False
-        else:
+    def feed(st, rows, wm):
+        step_idx, t1_us, tprev_us, done = st
+        if (
+            ttl_us is not None
+            and (step_idx or done)
+            and expiry_ms(t1_us, tprev_us, done) <= wm
+        ):
+            # State expired but new data arrived in the same batch
+            # (Spark delivers data, not a timeout, then): match from a
+            # fresh state. If this batch makes no step-0 progress the
+            # stored row is removed — its timer was cleared by this
+            # call and none can be re-armed, so it would otherwise sit
+            # in the store forever, exactly the key-churn orphan the
+            # partial TTL exists to prevent.
             step_idx, t1_us, tprev_us, done = 0, None, None, False
         out = []
-        if not done:
-            pdf = _sorted_rows(pdf_iter)
+        if not done:  # completed keys ignore new events
+            pdf = rows()
             for ts_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
                 if etype != steps[step_idx]:
                     continue
@@ -172,46 +177,44 @@ def _make_cep_fn(steps: list[str], within_us: int, ttl_us: int | None = None):
                     done = True
                     if tprev_us - t1_us <= within_us:
                         out.append(
-                            (
-                                key[0],
-                                t1_us,
-                                tprev_us,
-                                round((tprev_us - t1_us) / 1e6, 6),
-                            )
+                            (t1_us, tprev_us, round((tprev_us - t1_us) / 1e6, 6))
                         )
                     break
-        else:
-            for _ in pdf_iter:  # drain — completed keys ignore new events
-                pass
-        if step_idx > 0 or done:
-            state.update((step_idx, t1_us, tprev_us, done))
-            if ttl_us is not None:
-                # State TTL (re-armed every invocation — Spark clears
-                # timers on each call): evict the done marker once
-                # the watermark passes end + ttl (trading
-                # first-match-EVER for first-match-per-TTL), and a
-                # PARTIAL chain once it is both idle past the ttl and
-                # past its t1 + within completion horizon — without
-                # the partial deadline, keys that start a chain and
-                # never finish accumulate forever under key churn
-                # (measured: scripts/state_growth.py showed the
-                # done-only TTL leaving the state curve ~linear). A
-                # deadline at/below the watermark cannot be armed —
-                # leave the row; the entry check above evicts it
-                # lazily on the key's next data.
-                timer_ms = expiry_ms(t1_us, tprev_us, done)
-                if timer_ms > state.getCurrentWatermarkMs():
-                    state.setTimeoutTimestamp(timer_ms)
-        # step_idx == 0 is indistinguishable from state.exists == False:
-        # skipping the update keeps zero-progress keys out of the store
-        # (with NoTimeout an entry would otherwise live forever), so
-        # state is O(keys with progress), not O(keys ever seen).
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "start_us", "end_us", "duration_s"]
-            )
+        st[:] = step_idx, t1_us, tprev_us, done
+        return out
 
-    return fn
+    def on_watermark(st, wm):
+        # ttl mode: the state's deadline passed with no new data —
+        # evict (done marker: the key may match again on future
+        # events; partial: the chain could no longer complete).
+        st[:] = 0, None, None, False
+        return []
+
+    def save(st, wm):
+        step_idx, t1_us, tprev_us, done = st
+        # step_idx == 0 is indistinguishable from no row: keeping
+        # zero-progress keys out of the store (with NoTimeout an
+        # entry would otherwise live forever) makes state O(keys with
+        # progress), not O(keys ever seen).
+        if not (step_idx > 0 or done):
+            return None
+        # State TTL: evict the done marker once the watermark passes
+        # end + ttl (trading first-match-EVER for first-match-per-TTL),
+        # and a PARTIAL chain once it is both idle past the ttl and
+        # past its t1 + within completion horizon — without the
+        # partial deadline, keys that start a chain and never finish
+        # accumulate forever under key churn (measured:
+        # scripts/state_growth.py showed the done-only TTL leaving the
+        # state curve ~linear). A deadline at/below the watermark
+        # cannot be armed — the row stays, and feed's entry check
+        # evicts it lazily on the key's next data.
+        deadline = None if ttl_us is None else expiry_ms(t1_us, tprev_us, done)
+        return (step_idx, t1_us, tprev_us, done), deadline
+
+    return KeyedCore(
+        CEP_OUTPUT_SCHEMA, CEP_STATE_SCHEMA, _load_chain, feed, save,
+        None if ttl_us is None else on_watermark,
+    )
 
 
 def cep_first_match_stream(
@@ -244,73 +247,41 @@ def cep_first_match_stream(
     one max(ttl, within) horizon — the right setting for unbounded
     key churn. Requires event-time watermarks (``watermark_delay``
     maps to withWatermark)."""
-    within_us = _parse_within_us(within)
     ttl_us = None if done_ttl is None else _parse_within_us(done_ttl)
-    if ttl_us is not None:
-        events = events.withWatermark(ts_col, watermark_delay)
-    cols = [
-        F.col(key_col).alias("user_id"),
-        F.unix_micros(ts_col).alias("ts_us"),
-        F.col(type_col).alias("event_type"),
-        F.col(tiebreak_col).alias("__tb"),
-    ]
-    if ttl_us is not None:
-        # keep the watermark column itself in the projection so the
-        # event-time timers stay driven by it
-        cols.append(F.col(ts_col))
-    prepared = events.select(*cols)
-    out = prepared.groupBy("user_id").applyInPandasWithState(
-        _make_cep_fn(steps, within_us, ttl_us),
-        outputStructType=CEP_OUTPUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_us is None
-            else GroupStateTimeout.EventTimeTimeout
-        ),
-    )
-    return out.select(
-        "user_id",
-        F.timestamp_micros("start_us").alias("start_ts"),
-        F.timestamp_micros("end_us").alias("end_ts"),
-        "duration_s",
+    return keyed_stream(
+        events,
+        _cep_cols(key_col, ts_col, type_col, tiebreak_col),
+        _make_cep_fn(steps, _parse_within_us(within), ttl_us),
+        _us_to_ts("user_id", "start_us", "end_us", "duration_s"),
+        ts_col,
+        watermark_delay,
     )
 
 
 def _make_cep_to_fn(steps: list[str], within_us: int):
-    """State fn for the timeout-emitting variant. Matching differs
-    from the plain automaton in ONE rule: a candidate beyond the
-    chain's horizon (ts > t1 + within) can no longer extend it — the
-    batch operator's prefix-cut — so stalled chains sit in state
-    until the WATERMARK passes the horizon and the timer fires the
-    timed-out partial (Flink's PatternTimeoutFunction emission
-    discipline). Completions emit inline as before; every invocation
-    of a live started chain re-arms the event-time timer (Spark
-    clears it on each invocation)."""
+    """Core of the timeout-emitting variant. Matching differs from
+    the plain automaton in ONE rule: a candidate beyond the chain's
+    horizon (ts > t1 + within) can no longer extend it — the batch
+    operator's prefix-cut — so stalled chains sit in state until the
+    WATERMARK passes the horizon and the timer fires the timed-out
+    partial (Flink's PatternTimeoutFunction emission discipline).
+    Completions emit inline as before; every call on a live started
+    chain re-arms the event-time timer."""
     k = len(steps)
 
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            step_idx, t1_us, tprev_us, done = state.get
-        else:
-            step_idx, t1_us, tprev_us, done = 0, None, None, False
+    def horizon_ms(t1_us: int) -> int:
+        # Timers are ms-granular while the horizon is µs: the timer
+        # must land STRICTLY beyond the true horizon, else a
+        # floor-truncated value lets the watermark reach it while a
+        # non-late completing event at ts <= horizon can still arrive
+        # (wm_ms >= timer ⇒ wm_us > horizon_us only with the +1).
+        return (t1_us + within_us) // 1000 + 1
+
+    def feed(st, rows, wm):
+        step_idx, t1_us, tprev_us, done = st
         out = []
-        if state.hasTimedOut:
-            # watermark passed t1 + within with the chain incomplete
-            out.append((key[0], t1_us, tprev_us, step_idx, True))
-            state.update((step_idx, t1_us, tprev_us, True))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "user_id", "start_us", "last_us",
-                        "matched_steps", "timed_out",
-                    ],
-                )
-            return
-        if not done:
-            pdf = _sorted_rows(pdf_iter)
+        if not done:  # completed keys ignore new events
+            pdf = rows()
             for ts_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
                 if etype != steps[step_idx]:
                     continue
@@ -324,40 +295,33 @@ def _make_cep_to_fn(steps: list[str], within_us: int):
                 step_idx += 1
                 if step_idx == k:
                     done = True
-                    out.append((key[0], t1_us, tprev_us, k, False))
+                    out.append((t1_us, tprev_us, k, False))
                     break
-        else:
-            for _ in pdf_iter:
-                pass
-        if step_idx > 0 or done:
-            # Timers are ms-granular while the horizon is µs: the
-            # timer must land STRICTLY beyond the true horizon, else
-            # a floor-truncated value lets the watermark reach it
-            # while a non-late completing event at ts <= horizon can
-            # still arrive (wm_ms >= timer ⇒ wm_us > horizon_us only
-            # with the +1).
-            timer_ms = (t1_us + within_us) // 1000 + 1
-            if not done and timer_ms <= state.getCurrentWatermarkMs():
-                # The watermark already passed this chain's horizon
-                # (its key kept receiving events, so the timer never
-                # got to fire): the partial is final — emit it inline;
-                # re-arming below the watermark would throw.
-                out.append((key[0], t1_us, tprev_us, step_idx, True))
-                done = True
-            state.update((step_idx, t1_us, tprev_us, done))
-            if not done:
-                # re-arm: cleared on every invocation by Spark
-                state.setTimeoutTimestamp(timer_ms)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "user_id", "start_us", "last_us",
-                    "matched_steps", "timed_out",
-                ],
-            )
+        if step_idx > 0 and not done and horizon_ms(t1_us) <= wm:
+            # The watermark already passed this chain's horizon (its
+            # key kept receiving events, so the timer never got to
+            # fire): the partial is final — emit it inline; re-arming
+            # below the watermark would throw.
+            out.append((t1_us, tprev_us, step_idx, True))
+            done = True
+        st[:] = step_idx, t1_us, tprev_us, done
+        return out
 
-    return fn
+    def on_watermark(st, wm):
+        # watermark passed t1 + within with the chain incomplete
+        st[3] = True
+        return [(st[1], st[2], st[0], True)]
+
+    def save(st, wm):
+        step_idx, t1_us, tprev_us, done = st
+        if not (step_idx > 0 or done):
+            return None
+        return tuple(st), None if done else horizon_ms(t1_us)
+
+    return KeyedCore(
+        CEP_TO_OUTPUT_SCHEMA, CEP_STATE_SCHEMA, _load_chain, feed, save,
+        on_watermark,
+    )
 
 
 def cep_with_timeouts_stream(
@@ -379,27 +343,13 @@ def cep_with_timeouts_stream(
     cep_first_match / cep_timed_out), which the stream-equals-batch
     test pins. Requires in-order arrival per key like the plain
     automaton; ``watermark_delay`` maps to withWatermark."""
-    within_us = _parse_within_us(within)
-    prepared = events.withWatermark(ts_col, watermark_delay).select(
-        F.col(key_col).alias("user_id"),
-        F.col(ts_col),
-        F.unix_micros(ts_col).alias("ts_us"),
-        F.col(type_col).alias("event_type"),
-        F.col(tiebreak_col).alias("__tb"),
-    )
-    out = prepared.groupBy("user_id").applyInPandasWithState(
-        _make_cep_to_fn(steps, within_us),
-        outputStructType=CEP_TO_OUTPUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return out.select(
-        "user_id",
-        F.timestamp_micros("start_us").alias("start_ts"),
-        F.timestamp_micros("last_us").alias("last_ts"),
-        "matched_steps",
-        "timed_out",
+    return keyed_stream(
+        events,
+        _cep_cols(key_col, ts_col, type_col, tiebreak_col),
+        _make_cep_to_fn(steps, _parse_within_us(within)),
+        _us_to_ts("user_id", "start_us", "last_us", "matched_steps", "timed_out"),
+        ts_col,
+        watermark_delay,
     )
 
 
@@ -421,7 +371,7 @@ def _make_cep_nfb_fn(
     within_us: int,
     ttl_us: int | None = None,
 ):
-    """State fn for streaming notFollowedBy — the live face of the r8
+    """Core of streaming notFollowedBy — the live face of the r8
     batch semantics (operators/cep.py::cep_not_followed_by): one
     greedy partial per occurrence of the first positive type, a
     negative kills only the partial whose gap it lands in, and the
@@ -453,7 +403,7 @@ def _make_cep_nfb_fn(
     passes emitted_end + ttl — first match per TTL window instead of
     first-match-ever, the same contract (and the same eager lazy-
     eviction discipline: an expired marker detected on the data path
-    is REMOVED before fresh matching, so a no-progress batch strands
+    is dropped before fresh matching, so a no-progress batch strands
     nothing) as cep_first_match_stream's done_ttl."""
     k = len(pos)
     has_tail = any(g == k for g, _ in neg)
@@ -468,197 +418,130 @@ def _make_cep_nfb_fn(
         # strictly beyond the µs horizon (same +1 as the other timers)
         return hz_us(t1) // 1000 + 1
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            done, p_t1, p_stage, p_tprev, end_us = state.get
-            parts = [
-                [int(a), int(b), int(c)]
-                for a, b, c in zip(p_t1, p_stage, p_tprev)
-            ]
-            if (
-                done
-                and ttl_us is not None
-                and not state.hasTimedOut
-                and (end_us + ttl_us) // 1000 + 1
-                <= state.getCurrentWatermarkMs()
-            ):
-                # expired done marker met by DATA (data preempts the
-                # timer): evict NOW — the no-progress-batch orphan
-                # lesson from _make_cep_fn — and match fresh
-                state.remove()
-                done, parts, end_us = False, [], None
-        else:
-            done, parts, end_us = False, [], None
+    def marker_ms(st) -> int:
+        return (st["end"] + ttl_us) // 1000 + 1
+
+    def load(row):
+        if row is None:
+            return {"done": False, "parts": [], "end": None}
+        done, p_t1, p_stage, p_tprev, end_us = row
+        parts = [[int(a), int(b), int(c)] for a, b, c in zip(p_t1, p_stage, p_tprev)]
+        return {"done": done, "parts": parts, "end": end_us}
+
+    def emit(st, out, t1: int, tk: int) -> None:
+        out.append((t1, tk, round((tk - t1) / 1e6, 6)))
+        st.update(done=True, parts=[], end=tk)
+
+    def settle(st, out, closed) -> None:
+        """Resolve the partials whose horizon ``closed``: the earliest
+        completed one emits (the key is done), the others are dead."""
+        live = []
+        for t1, stg, tp in st["parts"]:  # t1-ascending == completion order
+            if not closed(t1):
+                live.append([t1, stg, tp])
+            elif stg == k:
+                emit(st, out, t1, tp)
+                return
+        st["parts"] = live
+
+    def feed(st, rows, wm):
         out: list[tuple] = []
-        done_end = [end_us]
-
-        def emit(t1: int, tk: int) -> None:
-            out.append((key[0], t1, tk, round((tk - t1) / 1e6, 6)))
-            done_end[0] = tk
-
-        def update_done() -> None:
-            """Persist the done marker; in ttl mode arm its eviction
-            timer (an already-expired marker is not written at all)."""
-            if ttl_us is not None:
-                t = (done_end[0] + ttl_us) // 1000 + 1
-                if t <= state.getCurrentWatermarkMs():
-                    if state.exists:
-                        state.remove()
-                    return
-                state.update((True, [], [], [], done_end[0]))
-                state.setTimeoutTimestamp(t)
-                return
-            state.update((True, [], [], [], done_end[0]))
-
-        def settle(wm_ms: int) -> None:
-            """Resolve pendings whose horizon the watermark passed
-            (earliest valid emits → done) and prune dead partials."""
-            nonlocal done, parts
-            live = []
-            for t1, stg, tp in parts:  # t1-ascending == completion order
-                if done:
-                    break
-                if hz_ms(t1) <= wm_ms:
-                    if stg == k:
-                        emit(t1, tp)
-                        done = True
-                    # stg < k: dead partial, drop
-                else:
-                    live.append([t1, stg, tp])
-            parts = [] if done else live
-
-        if state.hasTimedOut:
-            if done:
-                # only armed in ttl mode: the marker's ttl expired
-                state.remove()
-                return
-            settle(state.getCurrentWatermarkMs())
-            if done:
-                update_done()
-            elif parts:
-                state.update(
-                    (
-                        False,
-                        [p[0] for p in parts],
-                        [p[1] for p in parts],
-                        [p[2] for p in parts],
-                        None,
+        if st["done"] and ttl_us is not None and marker_ms(st) <= wm:
+            # expired done marker met by DATA (data preempts the
+            # timer): drop it — the no-progress-batch orphan lesson
+            # from _make_cep_fn — and match fresh
+            st.update(done=False, parts=[], end=None)
+        if st["done"]:  # emitted keys ignore new events
+            return out
+        pdf = rows()
+        evs = list(zip(pdf["ts_us"], pdf["event_type"]))
+        i = 0
+        while i < len(evs):
+            ts = int(evs[i][0])
+            group: list[str] = []
+            while i < len(evs) and int(evs[i][0]) == ts:
+                group.append(str(evs[i][1]))
+                i += 1
+            # chains whose horizon closed strictly before this event
+            # resolve NOW (data preempts the timer); dead partials
+            # fall out in the same pass
+            settle(st, out, lambda t1: hz_us(t1) < ts)
+            if st["done"]:
+                return out
+            parts = st["parts"]
+            # POSITIVE phase: advance every awaiting partial, then
+            # seed (a same-ts seed can't advance: strict >)
+            completed_now = False
+            for etype in group:
+                for p in parts:
+                    t1, stg, tp = p
+                    if (
+                        stg < k
+                        and etype == pos[stg]
+                        and ts > tp
+                        and ts <= hz_us(t1)
+                    ):
+                        p[1], p[2] = stg + 1, ts
+                        if p[1] == k and not has_tail:
+                            completed_now = True
+                if etype == pos[0]:
+                    if not any(p[0] == ts for p in parts):
+                        parts.append([ts, 1, ts])
+                        if k == 1 and not has_tail:
+                            completed_now = True
+            if completed_now:
+                # first completion in event-time order; earliest
+                # start breaks the tie (batch: min (t_k, t1))
+                t1, _, tp = min(p for p in parts if p[1] == k)
+                emit(st, out, t1, tp)
+                return out
+            # NEGATIVE phase: strict comparisons — see docstring
+            for etype in group:
+                gaps = neg_by_type.get(etype)
+                if not gaps:
+                    continue
+                parts = [
+                    [t1, stg, tp]
+                    for t1, stg, tp in parts
+                    if not any(
+                        stg == g
+                        and ts > tp
+                        and (g < k or ts <= hz_us(t1))
+                        for g in gaps
                     )
-                )
-                state.setTimeoutTimestamp(min(hz_ms(p[0]) for p in parts))
-            else:
-                state.remove()
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["user_id", "start_us", "end_us", "duration_s"],
-                )
-            return
+                ]
+            st["parts"] = parts
+        # late settle: the watermark may already have passed a
+        # pending's horizon (timers can't be armed at/below it)
+        settle(st, out, lambda t1: hz_ms(t1) <= wm)
+        return out
 
-        if not done:
-            pdf = _sorted_rows(pdf_iter)
-            rows = list(zip(pdf["ts_us"], pdf["event_type"]))
-            i = 0
-            while i < len(rows) and not done:
-                ts = int(rows[i][0])
-                group: list[str] = []
-                while i < len(rows) and int(rows[i][0]) == ts:
-                    group.append(str(rows[i][1]))
-                    i += 1
-                # chains whose horizon closed strictly before this
-                # event resolve NOW (data preempts the timer); dead
-                # partials fall out in the same pass
-                new_parts = []
-                for t1, stg, tp in parts:
-                    if done:
-                        break
-                    if hz_us(t1) < ts:
-                        if stg == k:
-                            emit(t1, tp)
-                            done = True
-                    else:
-                        new_parts.append([t1, stg, tp])
-                parts = [] if done else new_parts
-                if done:
-                    break
-                # POSITIVE phase: advance every awaiting partial, then
-                # seed (a same-ts seed can't advance: strict >)
-                completed_now = False
-                for etype in group:
-                    for p in parts:
-                        t1, stg, tp = p
-                        if (
-                            stg < k
-                            and etype == pos[stg]
-                            and ts > tp
-                            and ts <= hz_us(t1)
-                        ):
-                            p[1], p[2] = stg + 1, ts
-                            if p[1] == k and not has_tail:
-                                completed_now = True
-                    if etype == pos[0]:
-                        if not any(p[0] == ts for p in parts):
-                            parts.append([ts, 1, ts])
-                            if k == 1 and not has_tail:
-                                completed_now = True
-                if completed_now:
-                    # first completion in event-time order; earliest
-                    # start breaks the tie (batch: min (t_k, t1))
-                    t1, _, tp = min(
-                        p for p in parts if p[1] == k
-                    )
-                    emit(t1, tp)
-                    done = True
-                    parts = []
-                    break
-                # NEGATIVE phase: strict comparisons — see docstring
-                for etype in group:
-                    gaps = neg_by_type.get(etype)
-                    if not gaps:
-                        continue
-                    parts = [
-                        [t1, stg, tp]
-                        for t1, stg, tp in parts
-                        if not any(
-                            stg == g
-                            and ts > tp
-                            and (g < k or ts <= hz_us(t1))
-                            for g in gaps
-                        )
-                    ]
+    def on_watermark(st, wm):
+        out: list[tuple] = []
+        if st["done"]:
+            # only armed in ttl mode: the marker's ttl expired
+            st.update(done=False, parts=[], end=None)
         else:
-            for _ in pdf_iter:  # drain — emitted keys ignore new events
-                pass
+            settle(st, out, lambda t1: hz_ms(t1) <= wm)
+        return out
 
-        if done:
-            update_done()
-        elif parts:
-            # late settle: the watermark may already have passed a
-            # pending's horizon (timers can't be armed at/below it)
-            settle(state.getCurrentWatermarkMs())
-            if done:
-                update_done()
-            elif parts:
-                state.update(
-                    (
-                        False,
-                        [p[0] for p in parts],
-                        [p[1] for p in parts],
-                        [p[2] for p in parts],
-                        None,
-                    )
-                )
-                state.setTimeoutTimestamp(min(hz_ms(p[0]) for p in parts))
-            elif state.exists:
-                state.remove()
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "start_us", "end_us", "duration_s"]
-            )
+    def save(st, wm):
+        if st["done"]:
+            row = (True, [], [], [], st["end"])
+            if ttl_us is None:
+                return row, None
+            # an already-expired marker is not written at all
+            return (row, marker_ms(st)) if marker_ms(st) > wm else None
+        parts = st["parts"]
+        if not parts:
+            return None
+        row = (False, [p[0] for p in parts], [p[1] for p in parts],
+               [p[2] for p in parts], None)
+        return row, min(hz_ms(p[0]) for p in parts)
 
-    return fn
+    return KeyedCore(
+        CEP_OUTPUT_SCHEMA, CEP_NFB_STATE_SCHEMA, load, feed, save, on_watermark
+    )
 
 
 def cep_not_followed_by_stream(
@@ -686,27 +569,14 @@ def cep_not_followed_by_stream(
     the watermark passes the emitted chain's end + ttl — first match
     per TTL window, same contract as cep_first_match_stream's."""
     pos, neg = _split_negatives(steps)
-    within_us = _parse_within_us(within)
     ttl_us = None if done_ttl is None else _parse_within_us(done_ttl)
-    prepared = events.withWatermark(ts_col, watermark_delay).select(
-        F.col(key_col).alias("user_id"),
-        F.col(ts_col),
-        F.unix_micros(ts_col).alias("ts_us"),
-        F.col(type_col).alias("event_type"),
-        F.col(tiebreak_col).alias("__tb"),
-    )
-    out = prepared.groupBy("user_id").applyInPandasWithState(
-        _make_cep_nfb_fn(pos, neg, within_us, ttl_us),
-        outputStructType=CEP_OUTPUT_SCHEMA,
-        stateStructType=CEP_NFB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return out.select(
-        "user_id",
-        F.timestamp_micros("start_us").alias("start_ts"),
-        F.timestamp_micros("end_us").alias("end_ts"),
-        "duration_s",
+    return keyed_stream(
+        events,
+        _cep_cols(key_col, ts_col, type_col, tiebreak_col),
+        _make_cep_nfb_fn(pos, neg, _parse_within_us(within), ttl_us),
+        _us_to_ts("user_id", "start_us", "end_us", "duration_s"),
+        ts_col,
+        watermark_delay,
     )
 
 
@@ -860,9 +730,9 @@ def _make_am_nfa(
       in emission order, each a tuple of epoch-micros;
     - ``prune(st, ts)`` drops the partials and strategy memory that
       nothing arriving at >= ts can extend or collide with (the
-      streaming adapter calls it when the watermark passes).
+      streaming core calls it when the key's timer fires).
 
-    The streaming adapter (:func:`_make_cep_am_fn`) feeds each
+    The streaming core (:func:`_make_cep_am_fn`) feeds each
     micro-batch and keeps ``st`` in the state store between them; the
     batch operators (operators/cep.py) feed each key's whole history
     once, into a fresh dict. Any split of a key's rows that keeps each
@@ -1289,48 +1159,46 @@ def _make_am_nfa(
 
 
 def _make_cep_am_fn(feed, prune, within_us: int, cap: int | None):
-    """State fn for streaming all-matches CEP: the GroupState adapter
-    around the :func:`_make_am_nfa` core — the NFA state as one json
-    row, and an event-time timer that sweeps keys whose horizons all
-    closed. With a ``cap``, a key that emitted anything keeps a
-    compact counter row after quiescence (no timer) so the cap stays
-    per-key TOTAL like the batch operator's, not per-activity-burst."""
+    """Core of streaming all-matches CEP around the
+    :func:`_make_am_nfa` functions ``feed`` / ``prune``: the NFA state
+    as one json row, and an event-time timer that sweeps keys whose
+    horizons all closed. With a ``cap``, a key that emitted anything
+    keeps a compact counter row after quiescence (no timer) so the cap
+    stays per-key TOTAL like the batch operator's, not
+    per-activity-burst. ``st`` is [NFA state, swept by a timer]."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        st = _am_state_load(state.get[0]) if state.exists else {}
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            prune(st, wm_ms * 1000 + 1)
-            kept = []
-        else:
-            kept = feed(st, _sorted_rows(pdf_iter))
+    def load(row):
+        return [_am_state_load(row[0]) if row else {}, False]
+
+    def feed_(s, rows, wm):
+        return [
+            (c[0], c[-1], len(c), "|".join(map(str, c)))
+            for c in feed(s[0], rows())
+        ]
+
+    def on_watermark(s, wm):
+        prune(s[0], wm * 1000 + 1)
+        s[1] = True
+        return []
+
+    def save(s, wm):
+        st, swept = s
         if st["p"] or st["starts"] or st["ivls"] or st["R"] is not None:
-            state.update((_am_state_dump(st),))
-            if st["p"] and not state.hasTimedOut:
-                last_start = max(s[0][0] for s in st["p"])
-                timer_ms = (last_start + within_us) // 1000 + 1
-            else:
-                timer_ms = wm_ms + 1
-            if timer_ms > wm_ms:
-                state.setTimeoutTimestamp(timer_ms)
-        elif cap is not None and st["n"] > 0:
+            if st["p"] and not swept:
+                last_start = max(p[0][0] for p in st["p"])
+                return (_am_state_dump(st),), (last_start + within_us) // 1000 + 1
+            # swept, or only strategy memory left: re-sweep at the
+            # next watermark advance
+            return (_am_state_dump(st),), wm + 1
+        if cap is not None and st["n"] > 0:
             # the per-key TOTAL cap survives quiescence: a compact
             # counter row, no timer (nothing left to prune)
-            state.update((_am_state_dump(st),))
-        elif state.exists:
-            state.remove()
-        if kept:
-            yield pd.DataFrame(
-                [
-                    (key[0], c[0], c[-1], len(c), "|".join(map(str, c)))
-                    for c in kept
-                ],
-                columns=[
-                    "user_id", "start_us", "end_us", "n_events", "chain_str",
-                ],
-            )
+            return (_am_state_dump(st),), None
+        return None
 
-    return fn
+    return KeyedCore(
+        CEP_AM_OUTPUT_SCHEMA, CEP_AM_STATE_SCHEMA, load, feed_, save, on_watermark
+    )
 
 
 def cep_all_matches_stream(
@@ -1382,32 +1250,19 @@ def cep_all_matches_stream(
         complete_at=_complete_at,
         **spec,
     )
-    cols = [
-        F.col(key_col).alias("user_id"),
-        F.col(ts_col),
-        F.unix_micros(ts_col).alias("ts_us"),
-        F.col(type_col).alias("event_type"),
-        F.col(tiebreak_col).alias("__tb"),
-    ]
+    cols = _cep_cols(key_col, ts_col, type_col, tiebreak_col)
     if spec["valued"]:
         cols.append(F.col(value_col).cast("double").alias("__v"))
         # valued-mode event identity excludes NULL-valued rows (the
         # contract shared with the batch operators)
         events = events.filter(F.col(value_col).isNotNull())
-    prepared = events.withWatermark(ts_col, watermark_delay).select(*cols)
-    out = prepared.groupBy("user_id").applyInPandasWithState(
+    return keyed_stream(
+        events,
+        cols,
         _make_cep_am_fn(feed, prune, within_us, max_matches_per_key),
-        outputStructType=CEP_AM_OUTPUT_SCHEMA,
-        stateStructType=CEP_AM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return out.select(
-        "user_id",
-        F.timestamp_micros("start_us").alias("start_ts"),
-        F.timestamp_micros("end_us").alias("end_ts"),
-        "n_events",
-        "chain_str",
+        _us_to_ts("user_id", "start_us", "end_us", "n_events", "chain_str"),
+        ts_col,
+        watermark_delay,
     )
 
 
@@ -1470,22 +1325,21 @@ CEP_STRICT_OUTPUT_SCHEMA = "user_id BIGINT, start_us BIGINT, end_us BIGINT"
 CEP_STRICT_STATE_SCHEMA = "types ARRAY<STRING>, ts_us ARRAY<LONG>"
 
 
-def _make_cep_strict_fn(steps: list[str], within_us: int | None):
-    """State fn for strict-contiguity (next) streaming matches: the
-    state is a ring buffer of the key's last k−1 events (type + ts),
-    so a pattern spanning a micro-batch boundary still fires. Every
-    match position emits, exactly like the batch lead-conjunction
-    (overlapping runs of length n emit n−k+1 matches)."""
+def _make_cep_strict_fn(steps: list[str], within_us: int | None) -> KeyedCore:
+    """Core of strict-contiguity (next) streaming matches: the state
+    is a ring buffer of the key's last k−1 events (type + ts), so a
+    pattern spanning a micro-batch boundary still fires. Every match
+    position emits, exactly like the batch lead-conjunction
+    (overlapping runs of length n emit n−k+1 matches). Untimed."""
     k = len(steps)
 
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            types, ts = state.get
-            types, ts = list(types), list(ts)
-        else:
-            types, ts = [], []
+    def load(row):
+        return (list(row[0]), list(row[1])) if row else ([], [])
+
+    def feed(st, rows, wm):
+        types, ts = st
         out = []
-        pdf = _sorted_rows(pdf_iter)
+        pdf = rows()
         for t_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
             types.append(str(etype))
             ts.append(int(t_us))
@@ -1493,7 +1347,7 @@ def _make_cep_strict_fn(steps: list[str], within_us: int | None):
                 del types[0], ts[0]
             if len(types) == k and types == steps:
                 if within_us is None or ts[-1] - ts[0] <= within_us:
-                    out.append((key[0], ts[0], ts[-1]))
+                    out.append((ts[0], ts[-1]))
         # Carry only the longest suffix that is a PREFIX of steps (the
         # KMP failure-function insight): any other tail can never be
         # part of a future consecutive match, so most keys carry no
@@ -1503,14 +1357,15 @@ def _make_cep_strict_fn(steps: list[str], within_us: int | None):
             if types[-j:] == steps[:j]:
                 carry = j
                 break
-        if carry:
-            state.update((types[-carry:], ts[-carry:]))
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "start_us", "end_us"])
+        del types[: len(types) - carry], ts[: len(ts) - carry]
+        return out
 
-    return fn
+    def save(st, wm):
+        return (st, None) if st[0] else None
+
+    return KeyedCore(
+        CEP_STRICT_OUTPUT_SCHEMA, CEP_STRICT_STATE_SCHEMA, load, feed, save
+    )
 
 
 def cep_strict_matches_stream(
@@ -1532,21 +1387,9 @@ def cep_strict_matches_stream(
     if len(steps) < 2:
         raise ValueError("a CEP pattern needs at least 2 steps")
     within_us = None if within is None else _parse_within_us(within)
-    prepared = events.select(
-        F.col(key_col).alias("user_id"),
-        F.unix_micros(ts_col).alias("ts_us"),
-        F.col(type_col).alias("event_type"),
-        F.col(tiebreak_col).alias("__tb"),
-    )
-    out = prepared.groupBy("user_id").applyInPandasWithState(
+    return keyed_stream(
+        events,
+        _cep_cols(key_col, ts_col, type_col, tiebreak_col),
         _make_cep_strict_fn(steps, within_us),
-        outputStructType=CEP_STRICT_OUTPUT_SCHEMA,
-        stateStructType=CEP_STRICT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return out.select(
-        "user_id",
-        F.timestamp_micros("start_us").alias("start_ts"),
-        F.timestamp_micros("end_us").alias("end_ts"),
+        _us_to_ts("user_id", "start_us", "end_us"),
     )

@@ -233,35 +233,80 @@ def test_jaccard_pairs_match_bruteforce(spark, texts):
 
 
 class _FakeGroupState:
-    """Just enough of pyspark GroupState for _make_abandoned_fn."""
+    """pyspark GroupState as applyInPandasWithState hands it to a state
+    function: ``update`` stores a copy of the row (the state store
+    round-trips it), a timer must lie above the watermark, and a query
+    without a watermark cannot read one."""
 
-    def __init__(self):
-        self._v = None
+    def __init__(self, watermark: bool):
+        self.row = None
         self.timeout = None
         self.hasTimedOut = False
-        self.wm = 0
+        self.wm = 0 if watermark else None
 
     @property
     def exists(self):
-        return self._v is not None
+        return self.row is not None
 
     @property
     def get(self):
-        return self._v
+        return self.row
 
     def update(self, v):
-        self._v = tuple(v)
+        self.row = tuple(list(x) if isinstance(x, list) else x for x in v)
 
     def remove(self):
-        self._v = None
+        self.row = None
         self.timeout = None
 
     def setTimeoutTimestamp(self, ts):
-        assert ts > self.wm, "Spark rejects timers at/below the watermark"
+        assert self.wm is not None and ts > self.wm, (
+            "Spark rejects timers at/below the watermark"
+        )
         self.timeout = ts
 
     def getCurrentWatermarkMs(self):
+        assert self.wm is not None, "Spark raises: the query has no watermark"
         return self.wm
+
+
+def _replay(fn, batches, delay_ms=None, log=None):
+    """Drive the keyed-state function ``fn`` of one key through
+    ``batches`` (one call per pandas frame, rows in the order given)
+    the way Spark's applyInPandasWithState does: every call starts
+    with the key's timer cleared. With a watermark (``delay_ms`` not
+    None) the watermark moves to max event time − delay at the end of
+    each batch, never backwards; a timer at or below it then fires a
+    no-data call; after the last batch the watermark passes every
+    horizon. Event times are read from ``ts_ms``, else ``ts_us``.
+    Returns the emitted rows as tuples; ``log`` collects the (state
+    row, timer) held after each call."""
+    state = _FakeGroupState(watermark=delay_ms is not None)
+    emitted: list[tuple] = []
+
+    def call(pdfs, timed_out):
+        state.timeout = None  # Spark clears the timer on every call
+        state.hasTimedOut = timed_out
+        for out in fn((7,), iter(pdfs), state):
+            emitted.extend(out.itertuples(index=False, name=None))
+        state.hasTimedOut = False
+        if log is not None:
+            log.append((state.row, state.timeout))
+
+    def fire():
+        while state.timeout is not None and state.wm >= state.timeout:
+            call([], True)
+
+    for pdf in batches:
+        call([pdf], False)
+        if delay_ms is not None:
+            ms = pdf["ts_ms"] if "ts_ms" in pdf else pdf["ts_us"] // 1000
+            state.wm = max(state.wm, int(ms.max()) - delay_ms)
+            fire()
+    if delay_ms is not None:
+        state.wm = 10**9  # end of stream: advance past every horizon
+        fire()
+    return emitted
 
 
 timer_events = st.lists(
@@ -278,13 +323,16 @@ timer_events = st.lists(
 @SET
 def test_abandoned_state_fn_matches_antijoin(evs, cuts, data):
     """Replaying any in-order batch split of an event sequence through
-    the GroupState timer function must emit exactly the clicks the
+    the abandoned-click core must emit exactly the clicks the
     batch anti-join calls abandoned (no purchase in [c, c+T]),
     regardless of batching and watermark pacing. Pure-python harness:
     emulates Spark's end-of-batch watermark update and timer firing."""
     import pandas as pd
 
-    from flink_realtime_edu_spark.streaming.stateful import _make_abandoned_fn
+    from flink_realtime_edu_spark.streaming.stateful import (
+        _keyed_fn,
+        _make_abandoned_fn,
+    )
 
     T, DELAY = 100, 50
     evs = sorted(evs, key=lambda e: e[1])  # in-order delivery across batches
@@ -294,33 +342,20 @@ def test_abandoned_state_fn_matches_antijoin(evs, cuts, data):
         if c > prev:
             batches.append(evs[prev:c])
             prev = c
-    fn = _make_abandoned_fn(T)
-    state, emitted, max_seen = _FakeGroupState(), [], None
-
-    def drain_timers():
-        while state.timeout is not None and state.wm >= state.timeout:
-            state.hasTimedOut = True
-            state.timeout = None
-            for out in fn((7,), iter([]), state):
-                emitted.extend(int(t) for t in out["click_ts_ms"])
-            state.hasTimedOut = False
-
-    for batch in batches:
-        pdf = pd.DataFrame(
+    # shuffle within the batch: arrival order is arbitrary
+    frames = [
+        pd.DataFrame(
             {
                 "event_type": [e[0] for e in batch],
                 "ts_ms": pd.Series([e[1] for e in batch], dtype="int64"),
             }
-        )
-        # shuffle within the batch: arrival order is arbitrary
-        pdf = pdf.sample(frac=1, random_state=data.draw(st.integers(0, 10)))
-        for out in fn((7,), iter([pdf]), state):
-            emitted.extend(int(t) for t in out["click_ts_ms"])
-        max_seen = max([e[1] for e in batch] + ([max_seen] if max_seen is not None else []))
-        state.wm = max_seen - DELAY  # Spark: watermark updates at end of batch
-        drain_timers()
-    state.wm = 10**9  # end of stream: advance past every horizon
-    drain_timers()
+        ).sample(frac=1, random_state=data.draw(st.integers(0, 10)))
+        for batch in batches
+    ]
+    emitted = [
+        int(t)
+        for _, t in _replay(_keyed_fn(_make_abandoned_fn(T)), frames, DELAY)
+    ]
 
     purchases = [t for et, t in evs if et == "purchase"]
     want = sorted(
@@ -545,6 +580,7 @@ def test_cep_timeout_state_fn_matches_batch_cut(evs, cuts, data):
     import pandas as pd
 
     from flink_realtime_edu_spark.streaming.cep import _make_cep_to_fn
+    from flink_realtime_edu_spark.streaming.stateful import _keyed_fn
 
     steps, T, DELAY = ["view", "click", "purchase"], 100, 50
     # Unit discipline mirrors Spark: event times in MICROseconds, the
@@ -580,48 +616,22 @@ def test_cep_timeout_state_fn_matches_batch_cut(evs, cuts, data):
         if c > prev:
             batches.append(seq[prev:c])
             prev = c
-    fn = _make_cep_to_fn(steps, T_us)
-    state, emitted, max_seen = _FakeGroupState(), [], None
-
-    def drain_timers():
-        while state.timeout is not None and state.wm >= state.timeout:
-            state.hasTimedOut = True
-            state.timeout = None
-            for out in fn((7,), iter([]), state):
-                emitted.extend(
-                    (int(a), int(b), int(m), bool(to))
-                    for a, b, m, to in zip(
-                        out["start_us"], out["last_us"],
-                        out["matched_steps"], out["timed_out"],
-                    )
-                )
-            state.hasTimedOut = False
-
-    for batch in batches:
-        pdf = pd.DataFrame(
+    frames = [
+        pd.DataFrame(
             {
                 "event_type": [e[0] for e in batch],
                 "ts_us": pd.Series([e[1] for e in batch], dtype="int64"),
                 "__tb": pd.Series([e[2] for e in batch], dtype="int64"),
             }
+        ).sample(frac=1, random_state=data.draw(st.integers(0, 10)))
+        for batch in batches
+    ]
+    emitted = [
+        (int(a), int(b), int(m), bool(to))
+        for _, a, b, m, to in _replay(
+            _keyed_fn(_make_cep_to_fn(steps, T_us)), frames, DELAY
         )
-        pdf = pdf.sample(frac=1, random_state=data.draw(st.integers(0, 10)))
-        state.timeout = None  # Spark clears the timer on every call
-        for out in fn((7,), iter([pdf]), state):
-            emitted.extend(
-                (int(a), int(b), int(m), bool(to))
-                for a, b, m, to in zip(
-                    out["start_us"], out["last_us"],
-                    out["matched_steps"], out["timed_out"],
-                )
-            )
-        max_seen = max(
-            [e[1] for e in batch] + ([max_seen] if max_seen is not None else [])
-        )
-        state.wm = max_seen // 1000 - DELAY  # ms, end-of-batch update
-        drain_timers()
-    state.wm = 10**9  # end of stream
-    drain_timers()
+    ]
 
     assert emitted == want
 
@@ -642,6 +652,7 @@ def test_cep_strict_state_fn_matches_sliding_window(evs, cuts):
     import pandas as pd
 
     from flink_realtime_edu_spark.streaming.cep import _make_cep_strict_fn
+    from flink_realtime_edu_spark.streaming.stateful import _keyed_fn
 
     steps = ["error", "error", "error"]
     seq = [(et, (i + 1) * 1000, i) for i, et in enumerate(evs)]
@@ -657,23 +668,27 @@ def test_cep_strict_state_fn_matches_sliding_window(evs, cuts):
         if c > prev:
             batches.append(seq[prev:c])
             prev = c
-    fn = _make_cep_strict_fn(steps, None)
-    state, emitted = _FakeGroupState(), []
-    for batch in batches:
-        pdf = pd.DataFrame(
+    frames = [
+        pd.DataFrame(
             {
                 "event_type": [e[0] for e in batch],
                 "ts_us": pd.Series([e[1] for e in batch], dtype="int64"),
                 "__tb": pd.Series([e[2] for e in batch], dtype="int64"),
             }
         )
-        for out in fn((7,), iter([pdf]), state):
-            emitted.extend(
-                (int(a), int(b)) for a, b in zip(out["start_us"], out["end_us"])
-            )
+        for batch in batches
+    ]
+    log: list = []
+    emitted = [
+        (int(a), int(b))
+        for _, a, b in _replay(
+            _keyed_fn(_make_cep_strict_fn(steps, None)), frames, log=log
+        )
+    ]
+    for row, _ in log:
         # hygiene: carried state must be a usable pattern prefix
-        if state.exists:
-            types, _ = state.get
+        if row is not None:
+            types, _ = row
             assert list(types) and all(t == "error" for t in types)
     assert emitted == want
 
@@ -750,6 +765,255 @@ def test_all_matches_nfa_is_split_invariant(evs, cuts):
             st_ = _am_state_load(_am_state_dump(st_))
         assert sorted(split) == sorted(whole), (blocks, kw)
         assert len(set(whole)) == len(whole), (blocks, kw)
+
+
+_W_US = 100_000  # the keyed cores' within: 100 ms
+
+
+def _keyed_state_fns(ttl_us: int) -> dict:
+    """Each keyed automaton by name, as the applyInPandasWithState
+    function the one adapter builds around its core. ``ttl_us`` is the
+    done_ttl of the ``*_ttl`` variants."""
+    from flink_realtime_edu_spark.operators.cep import _split_negatives
+    from flink_realtime_edu_spark.streaming.cep import (
+        _all_matches_spec,
+        _make_am_nfa,
+        _make_cep_am_fn,
+        _make_cep_fn,
+        _make_cep_nfb_fn,
+        _make_cep_strict_fn,
+        _make_cep_to_fn,
+    )
+    from flink_realtime_edu_spark.streaming.stateful import (
+        _keyed_fn,
+        _make_abandoned_fn,
+    )
+
+    steps = ["view", "click", "purchase"]
+    gap = _split_negatives(["view", ("not", "noise"), "click"])
+    tail = _split_negatives(["view", "click", ("not", "purchase")])
+    spec = _all_matches_spec([("view", 1, 2), "click"], "skip_to_next")
+    am = _make_am_nfa(within_us=_W_US, cap=3, **spec)
+    cores = {
+        "first_match": _make_cep_fn(steps, _W_US),
+        "first_match_ttl": _make_cep_fn(steps, _W_US, ttl_us),
+        "timeouts": _make_cep_to_fn(steps, _W_US),
+        "nfb_gap": _make_cep_nfb_fn(*gap, _W_US),
+        "nfb_tail": _make_cep_nfb_fn(*tail, _W_US),
+        "nfb_tail_ttl": _make_cep_nfb_fn(*tail, _W_US, ttl_us),
+        "strict": _make_cep_strict_fn(["view", "view", "click"], None),
+        "all_matches": _make_cep_am_fn(*am, _W_US, 3),
+        "abandoned": _make_abandoned_fn(100),
+    }
+    return {name: _keyed_fn(core) for name, core in cores.items()}
+
+
+def _keyed_frame(rows, ms_col: bool = False):
+    """(event_type, ms) rows -> the frame a keyed core reads: ``ts_ms``
+    for the abandoned-click core, else ``ts_us`` plus the row index as
+    ``__tb``."""
+    import pandas as pd
+
+    ms = pd.Series([t for _, t in rows], dtype="int64")
+    if ms_col:
+        return pd.DataFrame({"event_type": [e for e, _ in rows], "ts_ms": ms})
+    return pd.DataFrame(
+        {
+            "event_type": [e for e, _ in rows],
+            "ts_us": ms * 1000,
+            "__tb": pd.Series(range(len(rows)), dtype="int64"),
+        }
+    )
+
+
+_UNTIMED = {"first_match", "strict"}
+
+
+@FAST
+@given(
+    evs=st.lists(
+        st.tuples(
+            st.sampled_from(["view", "click", "purchase", "noise"]),
+            st.integers(min_value=0, max_value=300),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    cuts=st.sets(st.integers(min_value=1, max_value=29)),
+    seed=st.integers(min_value=0, max_value=10),
+)
+def test_keyed_cores_are_split_invariant(evs, cuts, seed):
+    """Every CEP core, replayed through the one adapter as Spark would
+    (watermark 50 ms behind, timers firing between batches), emits the
+    same rows whether a key's ordered rows arrive in one call or cut
+    into any calls that keep each same-timestamp group whole (Structured
+    Streaming's prefix consistency), with rows shuffled inside each
+    call. The ttl variants' ttl (400 ms) outlasts the 300 ms of event
+    time, so no eviction may change a match; once the watermark passes
+    every deadline they must hold no state. No Spark."""
+    seq = sorted(evs, key=lambda e: e[1])
+    pdf = _keyed_frame(seq)
+    bounds = [0] + sorted(
+        c for c in cuts if c < len(seq) and seq[c][1] != seq[c - 1][1]
+    ) + [len(seq)]
+    pieces = [pdf.iloc[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+    for name, fn in _keyed_state_fns(ttl_us=400_000).items():
+        if name == "abandoned":  # its own property: the anti-join mirror
+            continue
+        delay = None if name in _UNTIMED else 50
+        whole = _replay(fn, [pdf.sample(frac=1, random_state=seed)], delay)
+        log: list = []
+        split = _replay(
+            fn,
+            [p.sample(frac=1, random_state=seed) for p in pieces],
+            delay,
+            log,
+        )
+        assert sorted(split) == sorted(whole), name
+        if name.endswith("_ttl"):
+            assert log[-1][0] is None, name
+
+
+# One fixed input per keyed automaton: (watermark delay in ms or None,
+# batches of (event_type, ms) rows), and the (state row, timer) each
+# call leaves — recorded with the GroupState functions these cores
+# replaced, so a checkpoint written before them restores and evolves
+# the same.
+_CHECKPOINT_INPUT = {
+    "first_match": (None, [
+        [("view", 10), ("noise", 12)], [("click", 30)],
+        [("purchase", 60), ("view", 70)], [("view", 200)],
+    ]),
+    "first_match_ttl": (10, [
+        [("view", 10), ("click", 30)], [("purchase", 90)], [("view", 300)],
+        [("view", 310), ("click", 320)],
+    ]),
+    "timeouts": (10, [
+        [("view", 10), ("click", 30)], [("noise", 200)], [("view", 300)],
+        [("view", 400)],
+    ]),
+    "nfb_gap": (10, [
+        [("view", 10), ("noise", 20), ("view", 30)], [("click", 50)],
+        [("view", 60)],
+    ]),
+    "nfb_tail": (10, [
+        [("view", 10), ("click", 20)], [("view", 100), ("purchase", 105)],
+        [("noise", 250)],
+    ]),
+    "nfb_tail_ttl": (10, [
+        [("view", 10), ("click", 20)], [("noise", 130)], [("view", 140)],
+    ]),
+    "strict": (None, [
+        [("view", 1), ("view", 2)], [("click", 3), ("view", 4)],
+        [("noise", 5)],
+    ]),
+    "all_matches": (10, [
+        [("view", 10), ("view", 20)], [("click", 30)],
+        [("view", 200), ("click", 210)],
+    ]),
+    "abandoned": (10, [
+        [("click", 10), ("purchase", 20), ("click", 50)], [("click", 200)],
+        [("purchase", 230)],
+    ]),
+}
+
+_AM_ROW = (
+    '{{"p": {{{}}}, "R": null, "starts": [{}], "ivls": [], "n": {}, '
+    '"q": 0, "tq": {{}}, "stops": {{}}}}'
+)
+_CHECKPOINT_LOG = {
+    "first_match": [
+        ((1, 10000, 10000, False), None),
+        ((2, 10000, 30000, False), None),
+        ((3, 10000, 60000, True), None),
+        ((3, 10000, 60000, True), None),
+    ],
+    "first_match_ttl": [
+        ((2, 10000, 30000, False), 111),
+        ((3, 10000, 90000, True), 141),
+        ((3, 10000, 90000, True), 141),
+        (None, None),
+        ((2, 310000, 320000, False), 411),
+        (None, None),
+    ],
+    "timeouts": [
+        ((2, 10000, 30000, False), 111),
+        ((2, 10000, 30000, False), 111),
+        ((2, 10000, 30000, True), None),
+        ((2, 10000, 30000, True), None),
+        ((2, 10000, 30000, True), None),
+    ],
+    "nfb_gap": [
+        ((False, [30000], [1], [30000], None), 131),
+        ((True, [], [], [], 50000), None),
+        ((True, [], [], [], 50000), None),
+    ],
+    "nfb_tail": [
+        ((False, [10000], [2], [20000], None), 111),
+        ((False, [100000], [1], [100000], None), 201),
+        (None, None),
+    ],
+    "nfb_tail_ttl": [
+        ((False, [10000], [2], [20000], None), 111),
+        ((True, [], [], [], 20000), 71),
+        (None, None),
+        ((False, [140000], [1], [140000], None), 241),
+        (None, None),
+    ],
+    "strict": [
+        ((["view", "view"], [1000, 2000]), None),
+        ((["view"], [4000]), None),
+        (None, None),
+    ],
+    "all_matches": [
+        ((_AM_ROW.format(
+            '"0|1|10000": null, "0|2|10000,20000": null, "0|1|20000": null',
+            "", 0,
+        ),), 121),
+        ((_AM_ROW.format("", "10000, 20000", 2),), 11),
+        ((_AM_ROW.format("", "", 2),), None),
+        ((_AM_ROW.format("", "200000", 3),), 21),
+        ((_AM_ROW.format("", "", 3),), None),
+    ],
+    "abandoned": [
+        (([50], [20]), 150),
+        (([50, 200], []), 150),
+        (([200], []), 300),
+        (([], [230]), 231),
+        (None, None),
+    ],
+}
+
+_STATE_SCHEMAS = {
+    "CEP_STATE_SCHEMA": "step_idx INT, t1_us LONG, tprev_us LONG, done BOOLEAN",
+    "CEP_NFB_STATE_SCHEMA": (
+        "done BOOLEAN, p_t1 ARRAY<LONG>, p_stage ARRAY<INT>, "
+        "p_tprev ARRAY<LONG>, end_us LONG"
+    ),
+    "CEP_AM_STATE_SCHEMA": "js STRING",
+    "CEP_STRICT_STATE_SCHEMA": "types ARRAY<STRING>, ts_us ARRAY<LONG>",
+    "ABANDONED_STATE_SCHEMA": (
+        "pending ARRAY<BIGINT>, recent_purchases ARRAY<BIGINT>"
+    ),
+}
+
+
+def test_keyed_cores_write_the_checkpointed_state_rows():
+    """Checkpoint compatibility without a Spark restart: the state
+    schemas, and the exact state row and timer every call leaves on a
+    fixed input, equal what the pre-adapter GroupState functions
+    wrote."""
+    from flink_realtime_edu_spark.streaming import cep, stateful
+
+    for name, schema in _STATE_SCHEMAS.items():
+        module = stateful if name.startswith("ABANDONED") else cep
+        assert getattr(module, name) == schema, name
+    fns = _keyed_state_fns(ttl_us=50_000)
+    for name, (delay, batches) in _CHECKPOINT_INPUT.items():
+        frames = [_keyed_frame(b, ms_col=name == "abandoned") for b in batches]
+        log: list = []
+        _replay(fns[name], frames, delay, log)
+        assert log == _CHECKPOINT_LOG[name], name
 
 
 @FAST
