@@ -452,28 +452,52 @@ def qc_quantized_features(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     feature fastText's linear layer carries). Shared by the batch
     fit/score, the held-out evaluation, and the frozen-model
     streaming scorer, so every consumer agrees on the feature space.
-    `n` stays the bigram-token count (the bias is not a token)."""
-    feat = dsir_features(docs, carry=carry)
-    df = feat.groupBy("doc_id", *carry, "f").agg(F.count(F.lit(1)).alias("c"))
+    `n` stays the bigram-token count (the bias is not a token).
+
+    The corpus is tokenized once: the bigram rows are hash-partitioned
+    by doc_id before the count, so the count, the per-doc window that
+    sums n, and every doc_id-keyed consumer (the fit's pin, its
+    per-step window, the scoring aggregate) share that one exchange.
+    Each doc's lowest-f count row also emits the doc's intercept row,
+    so base and bias rows come from the same count frame."""
+    feat = dsir_features(docs, carry=carry).repartition("doc_id")
     # carry columns are constant per doc, so grouping by them is safe
-    nd = df.groupBy("doc_id", *carry).agg(F.sum("c").alias("n"))
-    base = df.join(nd.select("doc_id", "n"), "doc_id").select(
+    df = feat.groupBy("doc_id", *carry, "f").agg(F.count(F.lit(1)).alias("c"))
+    doc = Window.partitionBy("doc_id")
+    df = df.select(
         "doc_id",
         *carry,
         "f",
+        "c",
+        F.sum("c").over(doc).alias("n"),
+        (F.col("f") == F.min("f").over(doc)).alias("first"),
+    )
+    base = F.struct(
+        F.col("f"),
         F.round(F.col("c") * F.lit(1000000.0) / F.col("n"), 0)
         .cast("long")
         .alias("q"),
-        F.col("n").cast("bigint").alias("n"),
     )
-    bias = nd.select(
-        "doc_id",
-        *carry,
+    bias = F.struct(
         F.lit(_QC_BIAS_F).cast("long").alias("f"),
         F.lit(1000000).cast("long").alias("q"),
-        F.col("n").cast("bigint").alias("n"),
     )
-    return base.unionByName(bias)
+    rows = F.when(F.col("first"), F.array(base, bias)).otherwise(F.array(base))
+    return df.select(
+        "doc_id", *carry, F.inline(rows), F.col("n").cast("bigint").alias("n")
+    )
+
+
+def _qc_logit_terms(w: list[int]):
+    """q·w[f] per feature row, the model ``w`` (micro-units, indexed
+    by f) read from ONE constant-folded array<bigint> literal: the
+    comma-joined string literal and its split + cast fold to a single
+    Literal at optimization, so the plan carries no model frame, join
+    or broadcast. (``F.lit(list)`` would instead build one child
+    expression per weight — 4 097 — and plan and evaluate far
+    slower.)"""
+    wl = F.split(F.lit(",".join(map(str, w))), ",").cast("array<bigint>")
+    return F.col("q") * wl[F.col("f")]
 
 
 def qc_score(qdf: DataFrame, wdf: DataFrame) -> DataFrame:
@@ -515,34 +539,27 @@ def quality_classifier_fit(docs: DataFrame, is_target):
     - logit: z = Σ_f q·w with w in micro-units — exact BIGINT;
     - residual: r = y·1e6 − round(σ(z)·1e6) — exact integer;
     - gradient: G[f] = Σ_docs r·q — exact BIGINT (one hash aggregate);
-    - update: w[f] += round(η·G/(N·1e6)) — Spark's ROUND on the
-      double, the same HALF-AWAY-FROM-ZERO contract _round_half_away
-      pins and the oracle's per-step w CTE replays (both engines
-      round the bit-identical double η·G/(N·1e6); the shared-ROUND
-      probe lives on _round_half_away's docstring).
+    - update: w[f] += round(η·G/(N·1e6)) — applied on the driver by
+      _round_half_away, the HALF-AWAY-FROM-ZERO contract of Spark's
+      and DuckDB's ROUND at scale 0, on the same double η·G/(N·1e6)
+      the oracle's per-step w CTE rounds (op order kept: η·G first,
+      then the divide).
 
     Returns (per-step weight snapshots [w0..wT] as micro-unit lists,
-    the materialized (doc_id, y, f, q, n) feature frame, n_docs).
+    the pinned (doc_id, y, f, q, n) feature frame, n_docs).
 
-    Scale: the feature frame shuffles once at build (8-byte keys,
-    text never shuffles) and is reused every step; per step the work
-    is one per-doc aggregate (model broadcast, B+1 = 4097 rows) and one
-    per-feature aggregate (4096 groups — map-side partial combine
-    makes the shuffle bytes ~4096×partitions) plus a doc_id-keyed
-    join in which both sides are hash-partitioned on doc_id. The
-    model and its gradient are corpus-size-free.
-
-    r14 (§7.2 orchestration): the six steps are CHAINED IN-PLAN — the
-    update runs as a 4097-row left join instead of a driver loop, each
-    step's weight frame pinned by a lazy materialize so the t+1 plan
-    references a 4097-row checkpoint, not a duplicated subtree — and
-    ONE collect on the final frame executes the whole chain (the r13
-    form paid a full job round-trip + model re-upload per step: 8
-    driver-synchronized jobs per fit; now 2 touch data). The earlier
-    snapshots read back the already-persisted per-step RDDs."""
+    Scale: the feature frame shuffles once, by doc_id, and is pinned
+    with that partitioning; every step then reuses it. A step is one
+    query with ONE exchange: a doc_id window (no shuffle — the pin is
+    already partitioned by doc_id) forms z = Σ q·w[f] and r per row,
+    with w read from a constant-folded literal (_qc_logit_terms), and
+    the 4097-group gradient aggregate shuffles map-side partial sums
+    (~4096 rows per partition). The driver collects the 4097-row
+    gradient, updates the list and folds it into the next step's
+    literal: no model frame, join, broadcast or per-step pin. The
+    model and its gradient are corpus-size-free."""
     from flink_realtime_edu_spark.session import materialize as _materialize
 
-    spark = docs.sparkSession
     tagged = docs.select(
         "doc_id",
         F.when(is_target, F.lit(1000000)).otherwise(F.lit(0))
@@ -551,65 +568,40 @@ def quality_classifier_fit(docs: DataFrame, is_target):
         "text",
     )
     q = qc_quantized_features(tagged, carry=("y",))
-    # keep_partitioning (r14): a localCheckpoint here reported
-    # UnknownPartitioning, so every step's per-doc aggregate AND its
-    # gradient join re-exchanged the multi-million-row feature frame —
-    # 2 corpus-sized shuffles × _QC_STEPS. The persist keeps the
-    # doc_id hash partitioning visible, so each step plans only the
-    # 4097-group gradient exchange.
+    # keep_partitioning (r14): a localCheckpoint scan reports
+    # UnknownPartitioning, so every step's doc_id window would
+    # re-exchange the multi-million-row feature frame. The persist
+    # keeps the doc_id hash partitioning visible, so each step plans
+    # only the 4097-group gradient exchange.
     qdf = _materialize(q.repartition("doc_id"), keep_partitioning=True)
-    # Exactly one INTERCEPT row per featured doc ⇒ same value as the
-    # old distinct-doc_id count, minus the distinct's exchange. This
-    # count is also the action that computes and pins the cache.
+    # Exactly one INTERCEPT row per featured doc ⇒ the distinct-doc
+    # count without a distinct's exchange. This count is also the
+    # action that computes and pins the cache.
     n_docs = qdf.filter(F.col("f") == _QC_BIAS_F).count()
 
     denom = float(n_docs * 1000000.0)
-    w_frames = [
-        spark.createDataFrame(
-            [(f, 0) for f in range(_DSIR_B + 1)], "f long, w long"
-        )
-    ]
+    snaps = [[0] * (_DSIR_B + 1)]
     for _step in range(_QC_STEPS):
-        wdf = w_frames[-1]
-        z = (
-            qdf.join(F.broadcast(wdf), "f")
-            .groupBy("doc_id")
-            .agg(
-                F.max("y").alias("y"),
-                F.sum(F.col("q") * F.col("w")).alias("z"),
-            )
-        )
-        r = z.select(
-            "doc_id", (F.col("y") - _qc_sigmoid_micro(F.col("z"))).alias("r")
-        )
-        g = (
-            qdf.join(r, "doc_id")
-            .groupBy("f")
-            .agg(F.sum(F.col("r") * F.col("q")).alias("g"))
-        )
-        # w[f] += round(η·g/(N·1e6)) — op order mirrors the old driver
-        # code (η·g first, then the divide) so the double is
-        # bit-identical; features absent from the gradient keep w.
-        upd = F.round(
-            F.lit(_QC_ETA) * F.col("g").cast("double") / F.lit(denom), 0
-        ).cast("long")
-        w_next = wdf.join(g, "f", "left").select(
-            "f",
-            (F.col("w") + F.coalesce(upd, F.lit(0).cast("long"))).alias("w"),
-        )
-        w_frames.append(_materialize(w_next))
-
-    # Final frame first: its lineage computes (and persists) every
-    # per-step checkpoint in ONE job; the remaining snapshot collects
-    # read 4097-row cached RDDs.
-    snaps_rev = []
-    for wf in reversed(w_frames[1:]):
-        wl = [0] * (_DSIR_B + 1)
-        for row in wf.collect():
-            wl[row["f"]] = row["w"]
-        snaps_rev.append(wl)
-    snaps = [[0] * (_DSIR_B + 1), *reversed(snaps_rev)]
+        w = list(snaps[-1])  # features absent from the gradient keep w
+        for row in _qc_gradient(qdf, snaps[-1]).collect():
+            w[row["f"]] += _round_half_away(_QC_ETA * float(row["g"]) / denom)
+        snaps.append(w)
     return snaps, qdf, n_docs
+
+
+def _qc_gradient(qdf: DataFrame, w: list[int]) -> DataFrame:
+    """One fit step's (f, g) gradient, G[f] = Σ r·q, of the model
+    ``w`` over the doc_id-partitioned feature frame ``qdf``: the
+    doc_id window gives every row its doc's z = Σ q·w[f] and
+    r = y − σ(z) (both micro-units); the 4097-group aggregate is the
+    step's only exchange."""
+    z = F.sum(_qc_logit_terms(w)).over(Window.partitionBy("doc_id"))
+    r = F.col("y") - _qc_sigmoid_micro(z)
+    return (
+        qdf.select("f", "q", r.alias("r"))
+        .groupBy("f")
+        .agg(F.sum(F.col("r") * F.col("q")).alias("g"))
+    )
 
 
 # σ(z)·1e6 as BIGINT — shared by every oracle that scores a logit.
@@ -736,10 +728,12 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (σ, micro-rounded) carries the same accepted last-ulp hazard as
     the perplexity family's micro-nat grams.
 
-    Scale: fit cost is _QC_STEPS × (one per-doc + one 4097-group
-    aggregate) over a once-materialized 8-byte-key feature frame —
-    the corpus is scanned once; the model, its gradients, and the
-    driver collect are all B+1 = 4097 rows regardless of corpus size."""
+    Scale: fit cost is _QC_STEPS × one query (a doc_id window plus one
+    4097-group aggregate, one exchange) over a once-pinned, doc_id-
+    partitioned 8-byte-key feature frame — the corpus is scanned
+    once; the model, its gradients, and the driver collect are all
+    B+1 = 4097 rows regardless of corpus size, and the self-score is
+    one exchange-free per-doc aggregate."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return quality_classifier_frame(docs)
 
@@ -858,7 +852,6 @@ def _qc_rate_gate_eval(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     is_target = F.col("source").isin(*_DSIR_TARGET)
     snaps, _qdf, _n = quality_classifier_fit(docs.filter(is_tr), is_target)
-    wdf = spark.createDataFrame(list(enumerate(snaps[-1])), "f long, w long")
 
     val = docs.filter(~is_tr).select(
         "doc_id",
@@ -869,9 +862,8 @@ def _qc_rate_gate_eval(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     qv = qc_quantized_features(val, carry=("y",))
     sv = (
-        qv.join(F.broadcast(wdf), "f")
-        .groupBy("doc_id")
-        .agg(F.max("y").alias("y"), F.sum(F.col("q") * F.col("w")).alias("z"))
+        qv.groupBy("doc_id")
+        .agg(F.max("y").alias("y"), F.sum(_qc_logit_terms(snaps[-1])).alias("z"))
         .select("doc_id", "y", _qc_sigmoid_micro(F.col("z")).alias("s"))
     )
     from flink_realtime_edu_spark.session import materialize as _materialize
@@ -1021,17 +1013,12 @@ def quality_classifier_frame(docs: DataFrame) -> DataFrame:
     snaps, qdf, _n = quality_classifier_fit(
         docs, F.col("source").isin(*_DSIR_TARGET)
     )
-    wdf = docs.sparkSession.createDataFrame(
-        list(enumerate(snaps[-1])), "f long, w long"
-    )
-    zf = (
-        qdf.join(F.broadcast(wdf), "f")
-        .groupBy("doc_id")
-        .agg(
-            F.max("y").alias("y"),
-            F.max("n").alias("n"),
-            F.sum(F.col("q") * F.col("w")).alias("z"),
-        )
+    # qdf is partitioned by doc_id: the per-doc aggregate needs no
+    # exchange, and the model rides in as a literal
+    zf = qdf.groupBy("doc_id").agg(
+        F.max("y").alias("y"),
+        F.max("n").alias("n"),
+        F.sum(_qc_logit_terms(snaps[-1])).alias("z"),
     )
     return zf.select(
         "doc_id",

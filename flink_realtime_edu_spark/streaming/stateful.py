@@ -41,6 +41,7 @@ state size is O(distinct users).
 
 from __future__ import annotations
 
+import types
 from collections.abc import Callable, Iterable, Iterator
 from typing import NamedTuple
 
@@ -137,6 +138,52 @@ def _keyed_fn(core: KeyedCore):
     return fn
 
 
+def _pickle_by_value(*roots) -> None:
+    """Register by value every module of this package that ``roots``
+    reach: their own modules, and those of the package functions,
+    classes and modules they reference through globals, closure cells
+    or the dicts, lists and tuples those hold, transitively. Python
+    workers import from their own path, which holds the Spark
+    process's cwd, not the driver's ``sys.path``; a function pickled
+    by reference then fails there with ``ModuleNotFoundError``
+    whenever the driver imported the package from elsewhere."""
+    import sys
+
+    from pyspark import cloudpickle
+
+    pkg = __name__.split(".")[0]
+    seen: set[int] = set()
+    todo = list(roots)
+    while todo:
+        obj = todo.pop()
+        if id(obj) in seen:
+            continue
+        seen.add(id(obj))
+        if isinstance(obj, dict):
+            todo += obj.values()
+            continue
+        if isinstance(obj, (list, tuple, set, frozenset)):
+            todo += obj
+            continue
+        if isinstance(obj, types.ModuleType):
+            name = obj.__name__
+        else:
+            name = getattr(obj, "__module__", None) or ""
+        if name.split(".")[0] != pkg:
+            continue
+        cloudpickle.register_pickle_by_value(sys.modules[name])
+        if isinstance(obj, types.FunctionType):
+            codes, names = [obj.__code__], set()
+            while codes:
+                code = codes.pop()
+                names.update(code.co_names)
+                codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
+            todo += [obj.__globals__[n] for n in names if n in obj.__globals__]
+            todo += [c.cell_contents for c in obj.__closure__ or ()]
+        elif isinstance(obj, type):
+            todo += list(vars(obj).values())
+
+
 def keyed_stream(
     events: DataFrame,
     cols: list[Column | str],
@@ -150,13 +197,17 @@ def keyed_stream(
     project the output to ``select``. A timed core gets the
     ``ts_col`` watermark with ``watermark_delay`` and event-time
     timeouts; the watermark column joins the projection so the
-    timers stay driven by it."""
+    timers stay driven by it. Every package module the core reaches
+    pickles by value, so the workers need no importable copy of the
+    package."""
     timed = core.on_watermark is not None
     if timed:
         events = events.withWatermark(ts_col, watermark_delay)
         cols = [*cols, F.col(ts_col)]
+    fn = _keyed_fn(core)
+    _pickle_by_value(fn, core)
     out = events.select(*cols).groupBy("user_id").applyInPandasWithState(
-        _keyed_fn(core),
+        fn,
         outputStructType=core.output_schema,
         stateStructType=core.state_schema,
         outputMode="append",
@@ -288,11 +339,6 @@ def detect_abandoned_stream(
     arbitrary traffic; a quiet stream holds its timeouts until the
     next click or purchase arrives (standard event-time behavior —
     use a processing-time fallback if wall-clock firing is needed)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     return keyed_stream(
         events.filter(F.col("event_type").isin("click", "purchase")),
         ["user_id", "event_type", F.unix_millis("ts").alias("ts_ms")],

@@ -50,6 +50,15 @@ def main() -> None:
         plan = re.sub(r"#\d+", "#N", plan)
         plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
         plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+        # A fitted model folded into the plan as one array literal
+        # (the quality classifier's 4097 weights) prints every value;
+        # keep its length, not the weights, so the snapshot stays
+        # readable and diffs only when the plan's shape changes.
+        plan = re.sub(
+            r"\[-?\d+(?:,-?\d+){63,}\]",
+            lambda m: f"[{m.group().count(',') + 1} ints]",
+            plan,
+        )
         header = (
             f"-- query: {name}\n"
             f"-- survey rows: {', '.join(spec.survey_rows) or 'n/a'}\n"

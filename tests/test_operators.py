@@ -1843,6 +1843,139 @@ def test_quality_classifier_heldout_eval_invariants(spark, sf_dir):
     assert again == {p: tuple(r) for p, r in rows.items()}
 
 
+def _plan_nodes(df) -> list[str]:
+    """Class names of ``df``'s executed physical plan, walked into
+    adaptive query stages but not into a cached relation's plan or
+    behind a reused exchange: the operators this query runs itself."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        names.append(name)
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_quality_classifier_steps_match_duckdb_chain(spark, sf_dir):
+    """The fit's update runs on the driver: every snapshot w1..w6
+    equals the oracle's w1..w6 CTE of _qc_cte_chain(), step by step,
+    not only through the final scores."""
+    from flink_realtime_edu_spark.queries.training import (
+        _DSIR_TARGET,
+        _QC_STEPS,
+        _qc_cte_chain,
+        quality_classifier_fit,
+    )
+    from tests.oracle import duck_connection
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    snaps, _qdf, _n = quality_classifier_fit(
+        docs, F.col("source").isin(*_DSIR_TARGET)
+    )
+    steps = " UNION ALL ".join(
+        f"SELECT {t} AS t, f, w FROM w{t}" for t in range(1, _QC_STEPS + 1)
+    )
+    con = duck_connection(sf_dir)
+    rows = con.execute(f"WITH {_qc_cte_chain()} {steps}").fetchall()
+    con.close()
+    duck = [[None] * len(snaps[0]) for _ in range(_QC_STEPS + 1)]
+    for t, f, w in rows:
+        duck[t][f] = w
+    for t in range(1, _QC_STEPS + 1):
+        assert snaps[t] == duck[t], t
+    assert any(snaps[-1])
+
+
+def test_round_half_away_matches_spark_and_duckdb_round(spark):
+    """_round_half_away(x) is the ROUND(x, 0) the fit's update used to
+    run in Spark and the oracle runs in DuckDB: ±k.5 ties, their
+    nextafter neighbours, and |x| ≥ 2^52, where every double is an
+    integer."""
+    import math
+
+    import duckdb
+
+    from flink_realtime_edu_spark.queries.training import _round_half_away
+
+    xs = []
+    for k in (0, 1, 2, 3, 7, 100, 4095, 2**20 + 3, 2**51 - 1):
+        tie = k + 0.5
+        xs += [tie, math.nextafter(tie, 0.0), math.nextafter(tie, math.inf)]
+    xs += [2.0**52, 2.0**52 + 1, 2.0**53, 2.0**53 + 2, 2.0**60 + 2**8, 2.0**62]
+    xs += [-x for x in xs] + [0.49999999999999994, 1e-300, 0.0]
+    want = [_round_half_away(x) for x in xs]
+    sdf = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    got = [
+        r.r
+        for r in sdf.select("i", F.round("x", 0).cast("long").alias("r"))
+        .orderBy("i")
+        .collect()
+    ]
+    assert got == want
+    con = duckdb.connect()
+    duck = [
+        con.execute("SELECT CAST(ROUND(?::DOUBLE, 0) AS BIGINT)", [x]).fetchone()[0]
+        for x in xs
+    ]
+    con.close()
+    assert duck == want
+
+
+def test_quality_classifier_step_plan_and_pins(spark, sf_dir):
+    """One fit step is one exchange (the 4097-group gradient) and no
+    broadcast: the model rides in as a literal, and the doc_id window
+    reads the pinned frame's own partitioning. A whole
+    quality_classifier_scores build plus collect pins at most one
+    frame, the feature frame."""
+    from flink_realtime_edu_spark.queries import load_registry
+    from flink_realtime_edu_spark.queries.training import (
+        _DSIR_TARGET,
+        _qc_gradient,
+        quality_classifier_fit,
+    )
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    snaps, qdf, _n = quality_classifier_fit(
+        docs, F.col("source").isin(*_DSIR_TARGET)
+    )
+    step = _qc_gradient(qdf, snaps[1])
+    step.collect()
+    nodes = _plan_nodes(step)
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+    assert "BroadcastExchangeExec" not in nodes, nodes
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    load_registry()["quality_classifier_scores"].build(
+        spark, sf_dir
+    ).collect()
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert len(after - before) <= 1, sorted(after - before)
+
+
+def test_qc_features_scan_the_corpus_once(spark, sf_dir):
+    """qc_quantized_features tokenizes the corpus once: its base and
+    intercept rows come from one count frame, so the executed plan
+    scans ``documents`` exactly once (no second, non-reused branch)."""
+    from flink_realtime_edu_spark.queries.training import qc_quantized_features
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    q = qc_quantized_features(docs)
+    rows = q.collect()
+    assert rows
+    assert _plan_nodes(q).count("FileSourceScanExec") == 1
+    # exactly one intercept row per featured doc
+    bias = [r.doc_id for r in rows if r.f == 4096]
+    assert sorted(bias) == sorted({r.doc_id for r in rows})
+
+
 def test_dsir_gumbel_topk_deterministic_and_maximal(spark, sf_dir):
     """The Gumbel-top-k resampling pass is rerun-stable (hash-derived
     noise, no RNG state): two evaluations select the identical m-row

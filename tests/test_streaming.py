@@ -3737,3 +3737,70 @@ def test_streaming_semantic_dedup_survives_restart_from_checkpoint(
         .filter(F.col("sblock").isNull() | (F.col("sblock") != F.col("block")))
     )
     assert dangling.count() == 0
+
+
+_CEP_SUBPROCESS = """
+import datetime, sys
+sys.path.insert(0, sys.argv[1])
+from flink_realtime_edu_spark.session import get_spark
+from flink_realtime_edu_spark.streaming.cep import cep_with_timeouts_stream
+from flink_realtime_edu_spark.streaming.sinks import run_to_completion
+
+spark = get_spark(app_name="cep-by-value", shuffle_partitions=2)
+t0 = datetime.datetime(2024, 1, 1)
+minutes = lambda m: t0 + datetime.timedelta(minutes=m)
+spark.createDataFrame(
+    [
+        (1, minutes(0), "view", 1),
+        (1, minutes(10), "click", 2),
+        (2, minutes(5), "view", 3),
+        (99, minutes(600), "noop", 4),
+    ],
+    "user_id long, ts timestamp, event_type string, event_id long",
+).coalesce(1).write.parquet("src")
+stream = cep_with_timeouts_stream(
+    spark.readStream.schema(
+        "user_id long, ts timestamp, event_type string, event_id long"
+    ).parquet("src"),
+    ["view", "click"],
+    "1 hour",
+)
+q = (
+    stream.writeStream.format("memory").queryName("out")
+    .option("checkpointLocation", "ckpt").start()
+)
+run_to_completion(q)
+print(sorted(
+    (r.user_id, r.timed_out, r.matched_steps)
+    for r in spark.sql("SELECT * FROM out").collect()
+))
+spark.stop()
+"""
+
+
+def test_cep_stream_runs_from_a_cwd_without_the_package(tmp_path):
+    """Python workers import from their own path, which holds the
+    Spark process's cwd, not the driver's ``sys.path``. A driver that
+    imports this package from a checkout while its cwd is elsewhere
+    must still run the streaming automata: keyed_stream ships the
+    core's modules by value. Runs one small CEP stream in a fresh
+    process whose cwd is ``tmp_path``."""
+    import os
+    import subprocess
+    import sys
+
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _CEP_SUBPROCESS, str(repo)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().splitlines()[-1] == (
+        "[(1, False, 2), (2, True, 1)]"
+    ), proc.stdout
