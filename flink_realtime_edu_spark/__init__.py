@@ -30,9 +30,25 @@ Layout
 
 Everything is DataFrame/SQL-first: plans are declared declaratively
 and Catalyst/Tungsten pick the physical strategy (SURVEY.md §3-§4).
+
+Python workers import from their own path, which holds the Spark
+process's cwd, not the driver's ``sys.path``. So every function and
+class of this package pickles by value: this module registers the
+package root with the cloudpickle copy Spark serializes with, and
+cloudpickle treats every submodule of a registered package as
+registered. A UDF, ``mapInPandas``, ``applyInPandas`` or
+``applyInPandasWithState`` stage then runs from any cwd, with no
+registration of its own. This is the only registration in the package
+(tests/test_by_value.py holds it to that).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from flink_realtime_edu_spark.session import configure, get_spark
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["configure", "get_spark"]
 __version__ = "0.1.0"

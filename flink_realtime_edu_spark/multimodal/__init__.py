@@ -27,7 +27,9 @@ byte-histogram stand-in with the REAL batch shape, schema and
 partitioning; the PNG, WAV, JPEG and AVI paths additionally feed
 true pixel/sample stats (``queries/media.py`` png_decode_stats /
 wav_decode_stats / jpeg_decode_stats / video_decode_stats) with
-analytic oracles.
+analytic oracles. A stage's codec functions reach the Python workers
+by value, with the rest of the package (see the package docstring), so
+a new codec module needs no registration of its own.
 """
 
 from __future__ import annotations
@@ -88,39 +90,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", ArrayType(DoubleType())),
     ]
 )
-
-
-def register_codecs_by_value(*extra_modules) -> None:
-    """Register this package and EVERY codec module it imports for
-    cloudpickle by-value serialization, plus any ``extra_modules``
-    (typically the caller's own query module).
-
-    Executors in the driver harness have no importable copy of the
-    repo (driver cwd ≠ repo), so any function a mapInPandas stage
-    closes over must ship by value. The list lives HERE, next to the
-    imports at the top of this module, because it must track them
-    exactly: when a new codec module is imported above, a query that
-    registered only the modules it knew about would pickle the new
-    symbol by reference and fail to unpickle on executors (this
-    exact drift broke png_decode_stats when the JPEG codec joined
-    the dispatch)."""
-    import sys as _sys
-
-    from pyspark import cloudpickle
-
-    from flink_realtime_edu_spark.multimodal import audiofp as _audiofp
-    from flink_realtime_edu_spark.multimodal import avi as _avi
-    from flink_realtime_edu_spark.multimodal import jpeg as _jpeg
-    from flink_realtime_edu_spark.multimodal import phash as _phash
-    from flink_realtime_edu_spark.multimodal import png as _png
-    from flink_realtime_edu_spark.multimodal import wav as _wav
-    from flink_realtime_edu_spark.multimodal import webp as _webp
-
-    for mod in (
-        _audiofp, _avi, _jpeg, _phash, _png, _wav, _webp,
-        _sys.modules[__name__], *extra_modules
-    ):
-        cloudpickle.register_pickle_by_value(mod)
 
 
 def demo_media_frame(spark: SparkSession, n: int = 64, partitions: int = 4) -> DataFrame:

@@ -615,10 +615,7 @@ def _kept_matches(
     cannot change any chain, so they are filtered out before the
     shuffle; valued patterns drop NULL-valued rows (the valued event
     identity)."""
-    import sys
-
     import pandas as pd
-    from pyspark import cloudpickle  # the vendored copy Spark serializes with
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -632,11 +629,6 @@ def _kept_matches(
 
     if max_matches_per_key < 1:
         raise ValueError("max_matches_per_key must be >= 1")
-    # the NFA's and the row sort's modules pickle by value, so executor
-    # workers need no importable copy of the repo (the driver may
-    # launch from any cwd)
-    for fn in (_make_am_nfa, _sorted_rows):
-        cloudpickle.register_pickle_by_value(sys.modules[fn.__module__])
     cols = [
         F.col(key_col),
         F.unix_micros(ts_col).alias("ts_us"),

@@ -36,11 +36,8 @@ is reproducible under repartitioning (pinned in tests).
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
-from pyspark import cloudpickle  # vendored copy Spark pickles UDFs with
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,7 +55,6 @@ def assign_clusters(
     dist2 is squared L2 to the chosen centroid, rounded half-up to
     8 dp so downstream exact-decimal sums are engine-stable.
     """
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     cmat = np.ascontiguousarray(centroids, dtype=np.float64)  # (k, dim)
     cnorm2 = np.einsum("kd,kd->k", cmat, cmat)
 

@@ -82,22 +82,10 @@ def minhash_batch(texts, n_hashes: int = 32, shingle_words: int = 3) -> list:
     return list(mins.T.copy().view(np.int64))
 
 
-def _register_module_by_value() -> None:
-    """The vectorized UDF closures reference module-level batch cores;
-    pickle this module by value so executor workers need no importable
-    copy of the repo (the driver may launch from any cwd)."""
-    import sys
-
-    from pyspark import cloudpickle  # the vendored copy Spark serializes with
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
 def minhash_sig_vectorized_udf(n_hashes: int = 32, shingle_words: int = 3):
     """Factory for the Arrow-vectorized MinHash signature pandas UDF
     (built lazily — `pandas_udf` needs an active SparkSession); the
     batch math lives in :func:`minhash_batch`."""
-    _register_module_by_value()
 
     @pandas_udf("array<long>")
     def _sig(texts: pd.Series) -> pd.Series:
@@ -175,20 +163,16 @@ def lsh_bands(
     )
 
 
-def candidate_pairs(
-    bands_df: DataFrame, id_col: str = "doc_id", materialize: bool = True
-) -> DataFrame:
+def candidate_pairs(bands_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing any LSH bucket. The join
     key is (band_id, band_hash) — the cross product only happens
     inside buckets, which is the entire point of LSH.
 
-    Materialization: without `materialize` the upstream text-scan +
-    signature stage runs once per self-join side, so the band frame —
-    24 bytes/doc/band, orders smaller than the corpus it derives
-    from — is lazily materialized (session.materialize —
-    localCheckpoint locally, persist(MEMORY_AND_DISK) on preemptible
-    clusters via the spark.flink_realtime_edu.materialize conf);
-    measured 6.6 s → 2.3 s end-to-end on near_dup_minhash at sf0.1.
+    Materialization: unpinned, the upstream text-scan + signature
+    stage runs once per self-join side, so the band frame — 24
+    bytes/doc/band, orders smaller than the corpus it derives from —
+    is lazily pinned with :func:`session.materialize`; measured
+    6.6 s → 2.3 s end-to-end on near_dup_minhash at sf0.1.
     Once materialized, AQE stage-reuses the single shuffle of the
     tiny frame for both sides (ReusedExchange in the final plan).
 
@@ -204,8 +188,7 @@ def candidate_pairs(
     both sides `AQEShuffleRead skewed` (197 splits), 1.7× faster than
     the pinned-repartition plan (tests/test_plans.py::
     test_candidate_pairs_skew_split, scripts/scale_stress.py --skew)."""
-    if materialize:
-        bands_df = _materialize(bands_df)
+    bands_df = _materialize(bands_df)
     a = bands_df.select(
         F.col(id_col).alias("id_a"), "band_id", "band_hash"
     )
@@ -411,7 +394,6 @@ def winnow_fingerprints_udf(k: int = 8, window: int = 4):
     Guarantee preserved: any shared substring of ≥ k + window - 1
     bytes yields a shared fingerprint (byte-grams, not char-grams —
     identical on ASCII corpora)."""
-    _register_module_by_value()
 
     @pandas_udf("array<long>")
     def _fp(texts: pd.Series) -> pd.Series:
@@ -536,8 +518,6 @@ def simhash64():
     big fresh temporaries are avoided for the same mmap-stall reason
     as the MinHash UDF). Built lazily — `pandas_udf` needs an active
     SparkSession, so no decorator at module import."""
-
-    _register_module_by_value()
 
     @pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
@@ -678,7 +658,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     sig_df: DataFrame | None = None,
     sig_bits: int = 64,
-    materialize_sig: bool = True,
 ) -> DataFrame:
     """Near-dups by SimHash: band the signature into
     ``max_hamming + 1`` chunks — the pigeonhole guarantee: hamming ≤
@@ -694,15 +673,13 @@ def simhash_near_duplicates(
     full-recall property holds for any signature source — banding
     never looks inside the hash.
 
-    `materialize_sig` lazily materializes the signature frame
-    (session.materialize knob)
-    before the self-join: under AQE the two identical exchange
-    subtrees are NOT stage-reused (same 4.1.2 behavior documented on
-    candidate_pairs), so without it the full text-scan+signature
-    stage runs twice. Signatures are 16 bytes/doc — at any scale,
-    materializing them is orders cheaper than re-scanning the corpus
-    (measured 5.8 s → 3.0 s at sf0.1). Disable only when the input
-    is already materialized (cached/checkpointed upstream)."""
+    The signature frame is lazily pinned with
+    :func:`session.materialize` before the self-join: under AQE the
+    two identical exchange subtrees are NOT stage-reused (same 4.1.2
+    behavior documented on candidate_pairs), so unpinned the full
+    text-scan+signature stage runs twice. Signatures are 16 bytes/doc
+    — at any scale, pinning them is orders cheaper than re-scanning
+    the corpus (measured 5.8 s → 3.0 s at sf0.1)."""
     n_chunks = max_hamming + 1
     widths = [
         sig_bits // n_chunks + (1 if i < sig_bits % n_chunks else 0)
@@ -713,8 +690,7 @@ def simhash_near_duplicates(
         sig = docs.select(F.col(id_col), simhash64()(F.col(text_col)).alias("sim"))
     else:
         sig = sig_df.select(F.col(id_col), F.col("sim"))
-    if materialize_sig:
-        sig = _materialize(sig)
+    sig = _materialize(sig)
     chunks = sig.select(
         id_col,
         "sim",

@@ -42,11 +42,8 @@ tests/test_operators.py.
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
-from pyspark import cloudpickle  # vendored copy Spark pickles UDFs with
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -211,7 +208,6 @@ def pq_encode_index(
     With ``centers_norm`` (from :func:`pq_fit_sample_residual`) the
     codes quantize per-cluster residuals; the cluster column must be
     the IVF assignment the residual was trained against."""
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     from pyspark.sql.functions import pandas_udf
 
     cb = np.ascontiguousarray(codebooks)
@@ -285,7 +281,6 @@ def pq_adc_topk(
     the LUT tensor — raise early instead (the `sample_n` discipline
     of :func:`pq_fit_sample`). For corpus-scale query sets, self-join
     via LSH banding instead."""
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     if rerank_r and rerank_r <= k:
         raise ValueError(
             f"rerank_r={rerank_r} must exceed k={k} (0 disables the rerank)"
@@ -499,7 +494,6 @@ def ivfpq_topk(
     codes were encoded with — raw-encoded codes scored with a bias
     (or vice versa) are silently wrong, which is why both come from
     the same fit call."""
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     if rerank_r and rerank_r <= k:
         raise ValueError(
             f"rerank_r={rerank_r} must exceed k={k} (0 disables the rerank)"

@@ -100,15 +100,6 @@ def cosine_topk(
             F.round(dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6).alias("cos"),
         )
     else:
-        # The mapInPandas closure references module-level helpers;
-        # register the module for by-value pickling so executors need
-        # no importable copy of the package (driver cwd ≠ repo in the
-        # driver harness).
-        import sys
-
-        from pyspark import cloudpickle  # the vendored copy Spark serializes with
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
         # Guard the driver-side collect: |Q| is the batch-scoring
         # probe set (driver-sized by contract) — raise early on a
         # corpus-scale frame instead of OOMing building the matrix.
@@ -178,13 +169,6 @@ def cosine_pair_udf(scale: int = 6):
     sequential fold in the last ulps, so this scorer is for the
     approximate (rows-only) paths; the oracle-checked brute-force
     top-k keeps sequential-order accumulation (see cosine_topk)."""
-    # _round_half_up is module-level → pickle this module by value so
-    # executors don't need the repo on sys.path (driver cwd ≠ repo).
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
     @pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -396,11 +380,6 @@ def knn_graph_lsh(
     Isolated nodes (no bucket-mate in any table) emit no rows by
     construction — count them against F.lit(k) coverage downstream
     rather than expecting exactly n·k edges."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     dim, n_planes = _dim_and_planes(
         corpus, vec_col, n_planes, target_bucket_rows=128
     )

@@ -27,11 +27,9 @@ content-hash dedup directly.
 from __future__ import annotations
 
 import re
-import sys
 import unicodedata
 
 import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql.functions import pandas_udf
 
 _CTRL = re.compile(r"[\x00-\x1f\x7f]")
@@ -51,7 +49,6 @@ def normalize_text_py(s: str | None) -> str | None:
 
 def normalize_text_udf():
     """Factory: Arrow-vectorized normalizer column."""
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
     @pandas_udf("string")
     def _norm(texts: pd.Series) -> pd.Series:

@@ -504,13 +504,9 @@ def bpe_encode_udf_vocab(
     merge applied once, left-to-right, in rank order), asserted equal
     on the learned table by tests/test_packing.py. Still vocab-frame
     work — the corpus is never touched."""
-    import sys
-
     import pandas as pd
-    from pyspark import cloudpickle
     from pyspark.sql.functions import pandas_udf
 
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     merge_list = [(f" {l} {r} ", f" {l}{r} ") for l, r in merges]
 
     # plain signature (no pd.Series hints): the hints resolve against

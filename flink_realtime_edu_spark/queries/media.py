@@ -171,23 +171,13 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-asset decode is partition-local (no shuffle
     before the stats), payload bytes cross the JVM↔Python boundary
     once, and the aggregate output is one small row per asset."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_image,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_image
     from flink_realtime_edu_spark.multimodal.png import encode_png
-
-    # Executors need no importable copy of the package (driver cwd ≠
-    # repo in the driver harness) — ship ALL codec modules by value
-    # (single-sourced next to the package imports, so a new codec in
-    # the dispatch cannot silently break this query again).
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 60).select(
@@ -287,19 +277,13 @@ def webp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to png_decode_stats — per-asset decode is
     partition-local, one small row per asset out."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_image,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_image
     from flink_realtime_edu_spark.multimodal.webp import encode_webp_lossless
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 60).select(
@@ -401,19 +385,13 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to the PNG path: per-asset decode is
     partition-local, payloads cross the JVM↔Python boundary once,
     one small output row per asset."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_image,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_image
     from flink_realtime_edu_spark.multimodal.jpeg import encode_jpeg
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 50).select(
@@ -536,19 +514,13 @@ def jpeg_color_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     order on both sides) — any defect in sampling, interleave order,
     per-component predictors, table selectors or the color transform
     breaks the value match."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_image,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_image
     from flink_realtime_edu_spark.multimodal.jpeg import encode_jpeg
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(
@@ -652,20 +624,14 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     property), so the DuckDB oracle states the sampled-frame pixel
     statistics analytically; any container-walk, frame-indexing or
     JPEG defect breaks the value match."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_video,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_video
     from flink_realtime_edu_spark.multimodal.avi import encode_avi_mjpeg
     from flink_realtime_edu_spark.multimodal.jpeg import encode_jpeg
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 20).select(
@@ -777,19 +743,13 @@ def wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to the image path: decode is
     partition-local, payloads cross the JVM↔Python boundary once,
     one small output row per asset."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_audio,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_audio
     from flink_realtime_edu_spark.multimodal.wav import encode_wav
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(
@@ -915,23 +875,17 @@ def phash_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooling, DCT, median, hash and pairing bit-for-bit from the
     analytic formula, so any codec, kernel, or banding defect breaks
     the value match."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_image,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_image
     from flink_realtime_edu_spark.multimodal.phash import phash63
     from flink_realtime_edu_spark.multimodal.png import encode_png
     from flink_realtime_edu_spark.operators.dedup import (
         simhash_near_duplicates,
     )
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(
@@ -1011,16 +965,12 @@ def audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays samples, frame energies, the delta profile and the
     pairing bit-for-bit from the analytic formula — any codec or
     kernel defect breaks the value match."""
-    import sys
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import (
-        decode_audio,
-        register_codecs_by_value,
-    )
+    from flink_realtime_edu_spark.multimodal import decode_audio
     from flink_realtime_edu_spark.multimodal.audiofp import (
         audio_fingerprint63,
     )
@@ -1028,8 +978,6 @@ def audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_realtime_edu_spark.operators.dedup import (
         simhash_near_duplicates,
     )
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(
@@ -1259,18 +1207,14 @@ def audio_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: parse is partition-local and reads HEADERS only —
     at corpus scale the walker touches ~4 bytes per audio frame and
     never the entropy payload; one small row per asset shuffles."""
-    import sys
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import register_codecs_by_value
     from flink_realtime_edu_spark.multimodal.mp3meta import (
         build_mp3,
         mp3_metadata,
     )
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(
@@ -1387,18 +1331,14 @@ def video_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is O(box count), not O(bytes) (mdat payloads are skipped by
     size), and sample decode stays out of scope
     (multimodal/__init__.py's NotImplementedError contract)."""
-    import sys
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from flink_realtime_edu_spark.multimodal import register_codecs_by_value
     from flink_realtime_edu_spark.multimodal.mp4meta import (
         build_mp4,
         mp4_metadata,
     )
-
-    register_codecs_by_value(sys.modules[__name__])
 
     d = load(spark, sf_dir, "documents")
     ids = d.filter(F.col("doc_id") < 40).select(

@@ -851,7 +851,10 @@ def _qc_rate_gate_eval(spark: SparkSession, docs: DataFrame) -> DataFrame:
         md5_hash60(F.concat(F.lit(_QC_EVAL_SALT), F.col("doc_id"))) % 10 < 8
     )
     is_target = F.col("source").isin(*_DSIR_TARGET)
-    snaps, _qdf, _n = quality_classifier_fit(docs.filter(is_tr), is_target)
+    snaps, qdf, _n = quality_classifier_fit(docs.filter(is_tr), is_target)
+    # the returned frame is built from driver values, so nothing reads
+    # the fit's pinned feature frame after the fit
+    qdf.unpersist()
 
     val = docs.filter(~is_tr).select(
         "doc_id",

@@ -41,7 +41,6 @@ state size is O(distinct users).
 
 from __future__ import annotations
 
-import types
 from collections.abc import Callable, Iterable, Iterator
 from typing import NamedTuple
 
@@ -138,52 +137,6 @@ def _keyed_fn(core: KeyedCore):
     return fn
 
 
-def _pickle_by_value(*roots) -> None:
-    """Register by value every module of this package that ``roots``
-    reach: their own modules, and those of the package functions,
-    classes and modules they reference through globals, closure cells
-    or the dicts, lists and tuples those hold, transitively. Python
-    workers import from their own path, which holds the Spark
-    process's cwd, not the driver's ``sys.path``; a function pickled
-    by reference then fails there with ``ModuleNotFoundError``
-    whenever the driver imported the package from elsewhere."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    pkg = __name__.split(".")[0]
-    seen: set[int] = set()
-    todo = list(roots)
-    while todo:
-        obj = todo.pop()
-        if id(obj) in seen:
-            continue
-        seen.add(id(obj))
-        if isinstance(obj, dict):
-            todo += obj.values()
-            continue
-        if isinstance(obj, (list, tuple, set, frozenset)):
-            todo += obj
-            continue
-        if isinstance(obj, types.ModuleType):
-            name = obj.__name__
-        else:
-            name = getattr(obj, "__module__", None) or ""
-        if name.split(".")[0] != pkg:
-            continue
-        cloudpickle.register_pickle_by_value(sys.modules[name])
-        if isinstance(obj, types.FunctionType):
-            codes, names = [obj.__code__], set()
-            while codes:
-                code = codes.pop()
-                names.update(code.co_names)
-                codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
-            todo += [obj.__globals__[n] for n in names if n in obj.__globals__]
-            todo += [c.cell_contents for c in obj.__closure__ or ()]
-        elif isinstance(obj, type):
-            todo += list(vars(obj).values())
-
-
 def keyed_stream(
     events: DataFrame,
     cols: list[Column | str],
@@ -197,17 +150,15 @@ def keyed_stream(
     project the output to ``select``. A timed core gets the
     ``ts_col`` watermark with ``watermark_delay`` and event-time
     timeouts; the watermark column joins the projection so the
-    timers stay driven by it. Every package module the core reaches
-    pickles by value, so the workers need no importable copy of the
-    package."""
+    timers stay driven by it. The core and its adapter pickle by value
+    like every function of the package (see the package docstring),
+    so the workers need no importable copy of the package."""
     timed = core.on_watermark is not None
     if timed:
         events = events.withWatermark(ts_col, watermark_delay)
         cols = [*cols, F.col(ts_col)]
-    fn = _keyed_fn(core)
-    _pickle_by_value(fn, core)
     out = events.select(*cols).groupBy("user_id").applyInPandasWithState(
-        fn,
+        _keyed_fn(core),
         outputStructType=core.output_schema,
         stateStructType=core.state_schema,
         outputMode="append",
@@ -351,14 +302,6 @@ def detect_abandoned_stream(
 def tag_new_vs_returning(events: DataFrame, output_mode: str = "append") -> DataFrame:
     """Tag each event is_new/returning via keyed state (T6). `events`
     is a streaming DataFrame with (user_id, event_id, ts)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    # Executor python workers don't necessarily have this repo on
-    # sys.path (the driver may be launched from any cwd); pickle the
-    # state function's module by value so the payload is portable.
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     prepared = events.select(
         "user_id", "event_id", F.date_format("ts", "yyyy-MM-dd").alias("day")
     )

@@ -1960,6 +1960,21 @@ def test_quality_classifier_step_plan_and_pins(spark, sf_dir):
     assert len(after - before) <= 1, sorted(after - before)
 
 
+def test_qc_evals_leave_the_cache_manager_unchanged(spark, sf_dir):
+    """The held-out and planted evaluations return a table of driver
+    values, so nothing reads the fit's pinned feature frame once the
+    fit is done: a build plus collect of either leaves no entry in the
+    CacheManager."""
+    from flink_realtime_edu_spark.queries import load_registry
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    registry = load_registry()
+    for name in ("quality_classifier_heldout_eval", "quality_classifier_planted_eval"):
+        before = cache.numCachedEntries()
+        registry[name].build(spark, sf_dir).collect()
+        assert cache.numCachedEntries() == before, name
+
+
 def test_qc_features_scan_the_corpus_once(spark, sf_dir):
     """qc_quantized_features tokenizes the corpus once: its base and
     intercept rows come from one count frame, so the executed plan

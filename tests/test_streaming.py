@@ -3779,27 +3779,15 @@ spark.stop()
 
 
 def test_cep_stream_runs_from_a_cwd_without_the_package(tmp_path):
-    """Python workers import from their own path, which holds the
-    Spark process's cwd, not the driver's ``sys.path``. A driver that
-    imports this package from a checkout while its cwd is elsewhere
-    must still run the streaming automata: keyed_stream ships the
-    core's modules by value. Runs one small CEP stream in a fresh
-    process whose cwd is ``tmp_path``."""
-    import os
-    import subprocess
-    import sys
+    """A driver that imports this package from a checkout while its
+    cwd is elsewhere must still run the streaming automata, whose
+    ``applyInPandasWithState`` functions ship by value with the rest
+    of the package (the package root's one registration). Runs one
+    small CEP stream in a fresh process whose cwd is ``tmp_path``;
+    the batch stages have their twin in tests/test_by_value.py."""
+    from tests.foreign_cwd import run_without_the_package
 
-    repo = Path(__file__).resolve().parents[1]
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
-    proc = subprocess.run(
-        [sys.executable, "-c", _CEP_SUBPROCESS, str(repo)],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
+    proc = run_without_the_package(_CEP_SUBPROCESS, tmp_path)
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert proc.stdout.strip().splitlines()[-1] == (
         "[(1, False, 2), (2, True, 1)]"
